@@ -121,58 +121,6 @@ class Engine:
         use pandas_udf for anything hot."""
         return self.spark.udf.register(name, fn, return_type)
 
-    def profile(
-        self,
-        df_or_table,
-        quantile_cols=(),
-        item_cols=(),
-        distinct_cols=(),
-        key_cols=None,
-        **kw,
-    ) -> dict:
-        """Corpus health report in ONE scan (the round-14 profiler tier
-        as an engine convenience): GK quantile summaries per numeric
-        column, Misra-Gries heavy hitters per item column, HLL distinct
-        registers per id-like column, and exact count/null/min/max
-        stats — all from a single mapInPandas pass
-        (ops/profile.corpus_profile; ``key_cols`` routes to the per-key
-        sibling: "profile per language / domain / day").  Accepts a
-        DataFrame or a registered table name.  Returns the
-        corpus_profile dict: ``quantiles`` (feed gk_quantiles /
-        gk_quantiles_by_key), ``heavy_hitters`` (feed mg_topk /
-        mg_topk_by_key), ``distinct`` (feed hll_estimate /
-        hll_estimate_df), ``stats``, and the checkpointed tall
-        ``profile`` frame — persist it with sketch_save(family=
-        'profile') and merge tomorrow's run via profile_union
-        (key_cols= for per-key) instead of rescanning history.
-        Extra keyword args (k/m/p/weight_col/...) pass through."""
-        from knovexlite_spark.ops.profile import (
-            corpus_profile,
-            corpus_profile_by_key,
-        )
-
-        df = (
-            self.table(df_or_table)
-            if isinstance(df_or_table, str)
-            else df_or_table
-        )
-        if key_cols is not None:
-            return corpus_profile_by_key(
-                df,
-                key_cols,
-                quantile_cols=quantile_cols,
-                item_cols=item_cols,
-                distinct_cols=distinct_cols,
-                **kw,
-            )
-        return corpus_profile(
-            df,
-            quantile_cols=quantile_cols,
-            item_cols=item_cols,
-            distinct_cols=distinct_cols,
-            **kw,
-        )
-
     # -- KG / EFO surface --------------------------------------------------
 
     def triples_with_inverses(self) -> DataFrame:

@@ -49,41 +49,3 @@ def test_triples_view_shape(spark):
     rels = {r["r"] for r in eng.triples.select("r").distinct().collect()}
     assert rels == {0, 1, 2, 3, 4}
 
-
-def test_engine_profile_smoke(spark):
-    """engine.profile: the corpus-health-report convenience routes to
-    corpus_profile / corpus_profile_by_key, accepts a table name or a
-    DataFrame, and returns the documented dict surface."""
-    from knovexlite_spark.engine import Engine
-    from knovexlite_spark.ops.quantile import gk_quantiles
-    from tests.conftest import SF_SMALL
-
-    eng = Engine.for_dir(spark, SF_SMALL)
-    res = eng.profile(
-        "orders",
-        quantile_cols=[],
-        item_cols=["o_orderpriority"],
-        distinct_cols=["o_custkey"],
-        m=16,
-        p=8,
-    )
-    assert set(res) == {
-        "profile", "quantiles", "heavy_hitters", "distinct", "stats",
-    }
-    assert res["heavy_hitters"]["o_orderpriority"].count() > 0
-    st = {r["col"]: r["n"] for r in res["stats"].collect()}
-    n = eng.table("orders").count()
-    assert st["o_orderpriority"] == n and st["o_custkey"] == n
-    # DataFrame input + quantiles + per-key routing
-    df = eng.table("orders").selectExpr(
-        "o_orderpriority AS pri",
-        "CAST(round(o_totalprice * 100) AS BIGINT) AS cents",
-    )
-    kres = eng.profile(
-        df, quantile_cols=["cents"], key_cols="pri", k=16
-    )
-    qs = kres["quantiles"]["cents"]
-    assert qs.columns == ["pri", "idx", "v", "rmin", "rmax"]
-    assert qs.count() > 0
-    gres = eng.profile(df, quantile_cols=["cents"], k=16)
-    assert gk_quantiles(gres["quantiles"]["cents"], [0.5])[0] > 0

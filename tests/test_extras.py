@@ -52,15 +52,6 @@ def test_multimodal_features_oracle_green(spark):
     )
 
 
-def test_lmpnn_scores_shape(spark):
-    rows = extras.q_lmpnn_scores(spark, SF_SMALL).collect()
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r["query_id"], []).append(r["rn"])
-    assert set(by_q) == {0, 1}
-    assert sorted(by_q[0]) == list(range(1, 21))
-
-
 @pytest.mark.parametrize("name", sorted(streaming_gate.ORACLES))
 def test_streaming_gate(spark, name):
     check_query(

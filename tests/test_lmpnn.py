@@ -112,3 +112,18 @@ def test_lmpnn_exactcheck_oracle_green(spark):
         reasoning.queries()["lmpnn_exactcheck"],
         reasoning.oracle_sql()["lmpnn_exactcheck"],
     )
+
+
+def test_lmpnn_scores_shape(spark):
+    from knovexlite_spark.queries import reasoning
+    from tests.conftest import SF_SMALL
+
+    rows = reasoning._lmpnn_scores(spark, SF_SMALL).collect()
+    by_q = {}
+    for r in rows:
+        by_q.setdefault(r["query_id"], []).append(r["rn"])
+    assert set(by_q) == {0, 1}
+    assert sorted(by_q[0]) == list(range(1, 21))
+    # the float kernel's cosine matches the float64 recomputation and
+    # the top-20 really beats the rest of the dense score frame
+    assert all(r["cos_ok"] == 1 and r["top_ok"] == 1 for r in rows)
