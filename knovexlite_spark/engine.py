@@ -8,6 +8,7 @@ pruning, join reordering, AQE — we deliberately add no layer on top.
 
 from __future__ import annotations
 
+import threading
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +40,9 @@ class Engine:
     _registered_dir: "weakref.WeakKeyDictionary[SparkSession, str]" = (
         weakref.WeakKeyDictionary()
     )
+    # Guards the check-and-build in for_dir: threads sharing a session
+    # must get one engine and must not re-register views mid-query.
+    _lock = threading.Lock()
 
     def __init__(
         self,
@@ -90,22 +94,20 @@ class Engine:
         """Cached engine; re-registers temp views only when the session
         last pointed at a different sf_dir.  DataFrames held by a cached
         engine stay bound to their files (views resolve at creation), so
-        only the SQL-name surface needs refreshing."""
-        per_session = cls._cache.get(spark)
-        if per_session is None:
-            per_session = {}
-            cls._cache[spark] = per_session
-        eng = per_session.get(sf_dir)
-        if eng is None:
-            eng = cls(spark, sf_dir)
-            per_session[sf_dir] = eng
-        elif cls._registered_dir.get(spark) != sf_dir:
-            for name, df in eng.tables.items():
-                df.createOrReplaceTempView(name)
-            assert eng.triples is not None
-            eng.triples.createOrReplaceTempView("triples")
-            cls._registered_dir[spark] = sf_dir
-        return eng
+        only the SQL-name surface needs refreshing.  Thread-safe."""
+        with cls._lock:
+            per_session = cls._cache.setdefault(spark, {})
+            eng = per_session.get(sf_dir)
+            if eng is None:
+                eng = cls(spark, sf_dir)
+                per_session[sf_dir] = eng
+            elif cls._registered_dir.get(spark) != sf_dir:
+                for name, df in eng.tables.items():
+                    df.createOrReplaceTempView(name)
+                assert eng.triples is not None
+                eng.triples.createOrReplaceTempView("triples")
+                cls._registered_dir[spark] = sf_dir
+            return eng
 
     # -- relational surface ------------------------------------------------
 

@@ -47,7 +47,8 @@ def evaluate_qaa(spark: SparkSession, qaa: DataFrame, reasoner) -> DataFrame:
     """Entry point 1 (SURVEY §3): score every QAA instance with the
     reasoner, rank, apply the filtered protocol, aggregate MRR/Hits per
     query type.  The reasoner must expose
-    ``eval_all_entity_scores(spark, lstr, bindings) -> (t, score)``.
+    ``eval_batch(spark, lstr, instances) -> (query_id, t, score)``,
+    dense over all entities for every instance.
 
     Query SHAPES are driver-looped (each is its own recursion depth —
     the reference batches per disjunct shape, dataloader.py:64-102);
@@ -55,8 +56,11 @@ def evaluate_qaa(spark: SparkSession, qaa: DataFrame, reasoner) -> DataFrame:
     via ``eval_batch`` (the DataFrame is the batch).  ``eval_batch`` is
     REQUIRED: a per-instance fallback would be a driver-side loop over
     collect()ed bindings — the scale-unsafe shape every other operator
-    in this repo avoids — so its absence raises instead (round-6 ask;
-    both shipped reasoners, CQDBeam and LMPNN, implement it).
+    in this repo avoids — so its absence raises instead.  ``CQDBeam``
+    implements it; ``LMPNN`` does not yet (its scores come from
+    ``forward`` + ``scores_from_readout`` and feed ``filtered_hard_ranks``
+    directly).  The union of the shapes' score frames is read once by
+    the ranking, so each instance's scores are computed once.
     """
     from knovexlite_spark.reasoner.metric import filtered_hard_ranks, mrr_hits
 

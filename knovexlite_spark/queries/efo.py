@@ -25,8 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from knovexlite_spark.engine import Engine
-from knovexlite_spark.kg.triples import pair_encode_inverse
-from knovexlite_spark.plans.exact import answer_exact
 
 PLACED, CONTAINS, SUPPLIED_BY, FROM_NATION, CUST_NATION = 0, 2, 4, 6, 8
 
@@ -222,8 +220,7 @@ def _answer(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     bindings = dict(rel_bindings)
     for sym, key in const_map.items():
         bindings[sym] = pinned[key]
-    aug = pair_encode_inverse(engine.triples)
-    return answer_exact(aug, lstr, bindings)
+    return engine.efo(lstr, bindings, augmented=True)
 
 
 def _runner(name: str) -> Callable[[SparkSession, str], DataFrame]:

@@ -66,7 +66,6 @@ class CQDBeam:
     model: KGEModel
     store: EmbeddingStore
     beam_size: int = 10
-    tnorm: str = "product"  # sum of scores == log-space product
 
     # -- batched evaluation --------------------------------------------------
 

@@ -1,9 +1,8 @@
 """Training-loss diagnostics (SURVEY §2.7 R2/R8/R9) as DataFrame
 aggregations.
 
-The analytics engine does not train (gradients are out of scope), but
-the loss VALUES are useful evaluation diagnostics and complete the
-reference's surface:
+Training itself lives in ``reasoner/train.py``; these loss VALUES are
+evaluation diagnostics that complete the reference's surface:
 
 - R2 BCE (CQD): binary cross-entropy of scores vs the multi-hot answer
   set (/root/reference/knovex/reasoner/cqd.py:68-80)
@@ -14,12 +13,13 @@ reference's surface:
 
 All three reduce over the dense per-query score frame
 ``(query_id, t, score)`` + an answers frame ``(query_id, t)`` with
-grouped aggregations — no per-query collect, no dense matrices.
+grouped or per-query window aggregations — no per-query collect, no
+dense matrices.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -44,19 +44,15 @@ def softmax_loss(scores: DataFrame, answers: DataFrame) -> float:
     """R9: per query, -log_softmax(score)[answers] averaged — computed
     as logsumexp(shifted) - shifted_score per answer, then the global
     mean of per-cell losses (the reference averages over all answer
-    cells in the batch)."""
-    mx = scores.groupBy("query_id").agg(F.max("score").alias("mx"))
-    shifted = scores.join(mx, "query_id").withColumn(
-        "sh", F.col("score") - F.col("mx")
+    cells in the batch).  The max and the log-sum-exp are query_id
+    window aggregates over one scan of the score frame."""
+    w = Window.partitionBy("query_id")
+    shifted = scores.select(
+        "query_id", "t", (F.col("score") - F.max("score").over(w)).alias("sh")
     )
-    lse = shifted.groupBy("query_id").agg(
-        F.log(F.sum(F.exp("sh"))).alias("lse")
-    )
-    ans = answers.select("query_id", "t").distinct()
-    per_answer = (
-        shifted.join(ans, ["query_id", "t"])
-        .join(lse, "query_id")
-        .withColumn("nll", F.col("lse") - F.col("sh"))
+    nll = F.log(F.sum(F.exp("sh")).over(w)) - F.col("sh")
+    per_answer = shifted.select("query_id", "t", nll.alias("nll")).join(
+        answers.select("query_id", "t").distinct(), ["query_id", "t"]
     )
     return per_answer.agg(F.avg("nll").alias("l")).collect()[0]["l"]
 

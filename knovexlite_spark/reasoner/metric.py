@@ -6,16 +6,36 @@ double-argsort entity rankings (76-78), the filtered protocol that
 subtracts better-ranked easy and better-ranked hard answers (96-109),
 and per-query-type MRR / Hits@1/3/10 (111-123).
 
-Scale design (SURVEY §7 hard parts): ranks are computed ONLY for answer
-entities via count-of-better — a join + conditional sum that is
-O(answers × entities) work with map-side partial aggregation — never an
-argsort (or window sort) over the full entity set per query.
+Cost: one sort of each query's N scores — a rank window partitioned by
+query_id over a single scan of the score frame.  The scoring kernels
+already emit a query's N scores from one task, so the per-query
+partition is no larger than what they hold.  Answers then join the
+ranked frame on (query_id, t), so only answer rows leave the window,
+and the filtered protocol is a second window over those rows alone.
+Answer lists are sets: duplicate ids count once per answer kind.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _answer_set(answers: DataFrame) -> DataFrame:
+    return answers.select("query_id", "t").distinct()
+
+
+def _ranked(scores: DataFrame, ties: str = "best") -> DataFrame:
+    """(query_id, t, rank) for every scored entity."""
+    w = Window.partitionBy("query_id").orderBy(F.col("score").desc())
+    n_better = F.rank().over(w) - 1
+    if ties == "best":
+        rank = n_better.cast("long")
+    else:
+        # an ordered window's default frame ends at the last tie, so
+        # count(*) over it is n_better + n_tied
+        rank = (n_better + F.count("*").over(w) - 1) / 2.0
+    return scores.select("query_id", "t", rank.alias("rank"))
 
 
 def answer_ranks(
@@ -44,28 +64,7 @@ def answer_ranks(
     """
     if ties not in ("best", "average"):
         raise ValueError(f"unknown tie mode {ties!r}")
-    own = answers.join(scores, ["query_id", "t"]).select(
-        "query_id", F.col("t").alias("a_t"), F.col("score").alias("a_score")
-    )
-    grouped = (
-        own.join(scores, "query_id")
-        .groupBy("query_id", "a_t", "a_score")
-        .agg(
-            F.sum(F.when(F.col("score") > F.col("a_score"), 1).otherwise(0)).alias(
-                "n_better"
-            ),
-            F.sum(F.when(F.col("score") == F.col("a_score"), 1).otherwise(0)).alias(
-                "n_tied"  # includes the answer itself
-            ),
-        )
-    )
-    if ties == "best":
-        rank = F.col("n_better").cast("long")
-    else:
-        rank = F.col("n_better") + (F.col("n_tied") - 1) / 2.0
-    return grouped.select(
-        "query_id", F.col("a_t").alias("t"), rank.alias("rank")
-    )
+    return _ranked(scores, ties).join(_answer_set(answers), ["query_id", "t"])
 
 
 def filtered_hard_ranks(
@@ -75,40 +74,22 @@ def filtered_hard_ranks(
     rank subtract (a) the number of easy answers ranked strictly better
     and (b) the number of OTHER hard answers ranked strictly better.
 
+    Both counts are one number: the query's answers (easy and hard,
+    tagged) with a strictly smaller raw rank, i.e. their rank() - 1
+    ordered by raw rank.
+
     easy/hard: (query_id, t). Returns (query_id, t, rank) adjusted.
     """
-    hard_r = answer_ranks(scores, hard)
-    easy_r = answer_ranks(scores, easy).select(
-        "query_id", F.col("rank").alias("e_rank")
+    tagged = _answer_set(easy).withColumn("hard", F.lit(False)).unionByName(
+        _answer_set(hard).withColumn("hard", F.lit(True))
     )
-
-    better_easy = (
-        hard_r.join(easy_r, "query_id", "left")
-        .groupBy("query_id", "t", "rank")
-        .agg(
-            F.sum(
-                F.when(F.col("e_rank") < F.col("rank"), 1).otherwise(0)
-            ).alias("n_better_easy")
-        )
-    )
-    other_hard = hard_r.select("query_id", F.col("rank").alias("h_rank"))
-    better_hard = (
-        better_easy.join(other_hard, "query_id")
-        .groupBy("query_id", "t", "rank", "n_better_easy")
-        .agg(
-            F.sum(
-                F.when(F.col("h_rank") < F.col("rank"), 1).otherwise(0)
-            ).alias("n_better_hard")
-        )
-    )
-    return better_hard.select(
-        "query_id",
-        "t",
-        (
-            F.col("rank")
-            - F.coalesce(F.col("n_better_easy"), F.lit(0))
-            - F.col("n_better_hard")
-        ).alias("rank"),
+    w = Window.partitionBy("query_id").orderBy("rank")
+    return (
+        _ranked(scores)
+        .join(tagged, ["query_id", "t"])
+        .withColumn("rank", F.col("rank") - (F.rank().over(w) - 1))
+        .filter("hard")
+        .select("query_id", "t", "rank")
     )
 
 

@@ -1,6 +1,10 @@
 """Engine public-surface regression tests (facade behaviors that the
 gate exercises implicitly but deserve direct pins)."""
 
+import os
+import threading
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import functions as F
 
 from knovexlite_spark.engine import Engine
@@ -49,3 +53,18 @@ def test_triples_view_shape(spark):
     rels = {r["r"] for r in eng.triples.select("r").distinct().collect()}
     assert rels == {0, 1, 2, 3, 4}
 
+
+def test_for_dir_concurrent_first_calls_share_one_engine(spark):
+    """Four threads racing on an uncached sf_dir get one Engine."""
+    key = os.path.join(SF_SMALL, "")  # same data, a key no other test caches
+    assert key not in Engine._cache.get(spark, {})
+    barrier = threading.Barrier(4)
+
+    def call(_):
+        barrier.wait()
+        return Engine.for_dir(spark, key)
+
+    with ThreadPoolExecutor(4) as pool:
+        engines = list(pool.map(call, range(4)))
+    assert all(e is engines[0] for e in engines)
+    assert Engine._cache[spark][key] is engines[0]

@@ -91,3 +91,61 @@ def test_answer_ranks_average_tie_mode(spark):
     avg = {r["t"]: r["rank"] for r in answer_ranks(scores, answers, ties="average").collect()}
     assert best == {1: 1, 4: 0}
     assert avg == {1: 1 + (3 - 1) / 2.0, 4: 0.0}
+
+
+def _np_filtered_best(scores, easy, hard):
+    """Reference protocol by count-of-better, ties="best": raw rank =
+    #strictly better scores; answer lists are sets."""
+    easy, hard = np.unique(easy), np.unique(hard)
+    raw = np.array([int(np.sum(scores > s)) for s in scores])
+    return {
+        int(h): int(raw[h] - np.sum(raw[easy] < raw[h]) - np.sum(raw[hard] < raw[h]))
+        for h in hard
+    }
+
+
+def test_duplicate_answer_ids_count_once(spark):
+    """Answer lists are sets: a repeated easy or hard id must not
+    inflate any rank."""
+    scores = 10.0 - np.arange(10)  # rank of t is t
+    easy, hard = [1, 1], [3, 3, 6]
+    sdf = spark.createDataFrame(
+        [(0, t, float(s)) for t, s in enumerate(scores)], "query_id long, t long, score double"
+    )
+    edf = spark.createDataFrame([(0, t) for t in easy], "query_id long, t long")
+    hdf = spark.createDataFrame([(0, t) for t in hard], "query_id long, t long")
+    raw = sorted((r["t"], r["rank"]) for r in answer_ranks(sdf, hdf).collect())
+    assert raw == [(3, 3), (6, 6)]
+    got = {r["t"]: r["rank"] for r in filtered_hard_ranks(sdf, edf, hdf).collect()}
+    want = _np_filtered(scores, np.unique(easy), np.unique(hard))
+    assert got == {int(t): int(r) for t, r in want.items()} == {3: 2, 6: 4}
+
+
+def test_filtered_ranks_with_ties_match_count_of_better(spark):
+    """Heavily tied scores (5 levels over 20 entities), disjoint
+    easy/hard sets: filtered ranks equal the count-of-better reference;
+    "average" raw ranks equal #better + (#tied - 1)/2."""
+    rng = np.random.default_rng(5)
+    rows, easy_rows, hard_rows, want, want_avg = [], [], [], {}, {}
+    for qid in range(4):
+        scores = rng.integers(0, 5, size=N).astype(float)
+        ents = rng.permutation(N)
+        easy, hard = ents[:4], ents[4:10]
+        rows += [(qid, t, float(scores[t])) for t in range(N)]
+        easy_rows += [(qid, int(t)) for t in easy]
+        hard_rows += [(qid, int(t)) for t in hard]
+        for t, r in _np_filtered_best(scores, easy, hard).items():
+            want[(qid, t)] = r
+        for t in np.unique(hard):
+            better, tied = np.sum(scores > scores[t]), np.sum(scores == scores[t])
+            want_avg[(qid, int(t))] = float(better + (tied - 1) / 2.0)
+    sdf = spark.createDataFrame(rows, "query_id long, t long, score double")
+    edf = spark.createDataFrame(easy_rows, "query_id long, t long")
+    hdf = spark.createDataFrame(hard_rows, "query_id long, t long")
+    got = {(r["query_id"], r["t"]): r["rank"] for r in filtered_hard_ranks(sdf, edf, hdf).collect()}
+    assert got == want
+    got_avg = {
+        (r["query_id"], r["t"]): r["rank"]
+        for r in answer_ranks(sdf, hdf, ties="average").collect()
+    }
+    assert got_avg == want_avg

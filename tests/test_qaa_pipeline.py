@@ -8,6 +8,7 @@ import json
 import random
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from knovexlite_spark.functions.kge import EmbeddingStore
@@ -164,3 +165,38 @@ def test_evaluate_qaa_requires_eval_batch(spark, tmp_path):
 
     with pytest.raises(TypeError, match="eval_batch"):
         evaluate_qaa(spark, qaa, NoBatch())
+
+
+class _CountingReasoner:
+    """Scores entity t of every instance as -t; an accumulator counts
+    the instances the eval_batch kernel has scored."""
+
+    def __init__(self, spark, n_entities):
+        self.runs = spark.sparkContext.accumulator(0)
+        self.n = n_entities
+
+    def eval_batch(self, spark, lstr, instances):
+        runs, n = self.runs, self.n
+
+        def kernel(it):
+            for pdf in it:
+                for qid in pdf["query_id"]:
+                    runs.add(1)
+                    yield pd.DataFrame(
+                        {"query_id": qid, "t": np.arange(n), "score": -np.arange(n, dtype=float)}
+                    )
+
+        return instances.select("query_id").mapInPandas(
+            kernel, "query_id long, t long, score double"
+        )
+
+
+def test_evaluate_qaa_scores_each_instance_once(spark, tmp_path):
+    """The ranking reads the score frame once, so a lazy reasoner's
+    kernel runs once per QAA instance, not once per consumer."""
+    facts = make_tiny_kg(seed=9, n_entities=N_ENT, n_rel_pairs=N_RELPAIRS, n_facts=N_FACTS)
+    qaa = load_qaa_json(spark, _make_qaa_file(tmp_path, facts)).cache()
+    n_q = qaa.count()
+    reasoner = _CountingReasoner(spark, N_ENT)
+    assert evaluate_qaa(spark, qaa, reasoner).collect()
+    assert reasoner.runs.value == n_q
