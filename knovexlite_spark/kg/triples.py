@@ -9,9 +9,13 @@ Reference parity (SURVEY.md §1.1, §2.1, §2.8):
   /root/reference/knovex/utils/dataloader.py:16-29
 
 Design notes for scale: the triples DataFrame *is* the edge list; the
-reference's nine adjacency hash-maps (graph.py:30-51) are never
-materialized — every ``hr2t``-style lookup is an equi-join that Catalyst
-plans as broadcast or shuffled hash join depending on the probe side.
+reference's nine adjacency hash-maps (graph.py:30-51) are never built
+as hash-maps.  On Spark every ``hr2t``-style lookup is an equi-join
+that Catalyst plans as broadcast or shuffled hash join depending on the
+probe side.  Below the KG-size gate in ``engine.py`` the engine also
+holds one driver-local adjacency (``plans/local.py``): the pair-encoded
+edges as arrays sorted by (r, h), where an ``hr2t`` lookup is a
+``searchsorted`` slice and ``tr2h`` is the same lookup on r XOR 1.
 """
 
 from __future__ import annotations

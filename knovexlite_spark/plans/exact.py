@@ -1,8 +1,13 @@
-"""Exact set-semantics EFO evaluation: conjuncts -> DataFrame join plans.
+"""Exact set-semantics EFO evaluation: one compiled plan, Spark joins.
 
-This is the relational realization of what the reference *approximates*
-with beam search (SURVEY.md §2.3): every query atom is a join against
-the triples DataFrame —
+An lstr compiles once (``compile_plan``) into a backend-neutral
+``ExactPlan``: per DNF clause, the positive atoms in join order and the
+negated atoms.  Unsafe negation, unbound symbols and a free variable
+that a clause does not bind are rejected there, before any backend
+runs.  Two interpreters run the plan: the Spark one here and the
+driver-local NumPy one in ``plans/local.py``, which ``Engine.efo``
+picks below a KG-size gate.  On Spark every query atom is a join
+against the triples DataFrame —
 
 - positive atom          -> inner equi-join (J1)
 - negated atom           -> left_anti join (J4, exact semantics)
@@ -10,16 +15,25 @@ the triples DataFrame —
 - disjunction (DNF)      -> UNION of per-clause plans
 - existential projection -> DISTINCT on the free variable
 
+``answer_exact`` (literal bindings) and ``answer_counts_batched`` (an
+instance frame of bindings) run the same join chain and differ only in
+how an atom becomes a frame.
+
 Join order is a greedy connected ordering seeded by the most-selective
 atom (most bound constants), mirroring the reference's backward-BFS
 evaluation order (L9, efo_lang.py:749-776).  Scale notes: each
 constant-anchored atom filters ``triples`` on (r, h) or (r, t) — those
 predicates push into the parquet scan; the frontier side of every join
 starts tiny (one anchor's neighborhood), so AQE converts these to
-broadcast joins at runtime.  Nothing here collects to the driver.
+broadcast joins at runtime.  The Spark interpreter collects nothing to
+the driver.
 """
 
 from __future__ import annotations
+
+import functools
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -27,6 +41,39 @@ from pyspark.sql import functions as F
 from knovexlite_spark.language.ast import Atomic, ConjunctiveClause
 from knovexlite_spark.language.parser import parse_lstr
 from knovexlite_spark.language.normalize import dnf_conjuncts
+
+# The one column of a fully ground atom's frame (a sentence check).
+GROUND = "__ground__"
+
+
+def _atom_columns(atom: Atomic) -> tuple[str, ...]:
+    """The columns of an atom's frame: its distinct variables, or
+    ``GROUND`` when it has none."""
+    names = tuple(dict.fromkeys(t.name for t in atom.terms if t.is_variable))
+    return names or (GROUND,)
+
+
+@dataclass(frozen=True)
+class ClausePlan:
+    """One DNF clause: positive atoms in join order, then anti-joins."""
+
+    positive: tuple[Atomic, ...]
+    negative: tuple[Atomic, ...]
+
+    def lstr(self) -> str:
+        return "&".join(
+            [a.lstr() for a in self.positive] + [f"!{a.lstr()}" for a in self.negative]
+        )
+
+
+@dataclass(frozen=True)
+class ExactPlan:
+    """A compiled lstr: the UNION of its clauses' free-variable values.
+    ``symbols`` are the relation and constant names a binding must give."""
+
+    free_var: str
+    clauses: tuple[ClausePlan, ...]
+    symbols: tuple[str, ...]
 
 
 def atom_frame(triples: DataFrame, atom: Atomic, bindings: dict[str, int]) -> DataFrame:
@@ -52,7 +99,7 @@ def atom_frame(triples: DataFrame, atom: Atomic, bindings: dict[str, int]) -> Da
         if tail.is_variable:
             cols.append(F.col("t").alias(tail.name))
     if not cols:  # fully ground atom (sentence check): boolean via count
-        cols = [F.lit(1).alias("__ground__")]
+        cols = [F.lit(1).alias(GROUND)]
     return df.select(*cols)
 
 
@@ -81,27 +128,54 @@ def _order_positive(clause: ConjunctiveClause) -> list[Atomic]:
     return ordered
 
 
-def compile_clause(
-    triples: DataFrame, clause: ConjunctiveClause, bindings: dict[str, int]
+@functools.lru_cache(maxsize=256)
+def _compile(lstr: str, free_var: str) -> ExactPlan:
+    formula = parse_lstr(lstr)
+    symbols = {a.relation for a in formula.atoms()} | {
+        t.name for a in formula.atoms() for t in a.terms if t.is_constant
+    }
+    clauses = []
+    for clause in dnf_conjuncts(formula):
+        ordered = _order_positive(clause)
+        bound = {c for a in ordered for c in _atom_columns(a)}
+        for atom in clause.negative:
+            unbound = set(_atom_columns(atom)) - bound
+            if unbound:
+                raise ValueError(
+                    f"unsafe negation: {atom.lstr()} binds {sorted(unbound)} "
+                    "not bound by any positive atom"
+                )
+        if free_var not in bound:
+            raise ValueError(f"free variable {free_var!r} not in clause {clause}")
+        clauses.append(ClausePlan(tuple(ordered), tuple(clause.negative)))
+    return ExactPlan(free_var, tuple(clauses), tuple(sorted(symbols)))
+
+
+def compile_plan(
+    lstr: str, free_var: str = "f", bindings: dict[str, int] | None = None
+) -> ExactPlan:
+    """Compile ``lstr`` (cached per (lstr, free_var)); with ``bindings``,
+    also reject any symbol they leave unbound."""
+    plan = _compile(lstr, free_var)
+    if bindings is not None:
+        missing = set(plan.symbols) - set(bindings)
+        if missing:
+            raise ValueError(f"unbound symbols in {lstr!r}: {sorted(missing)}")
+    return plan
+
+
+def _join_chain(
+    clause: ClausePlan, frame_of: Callable[[Atomic], DataFrame]
 ) -> DataFrame:
-    """One conjunctive clause -> DataFrame of all variable bindings."""
-    ordered = _order_positive(clause)
-    acc = atom_frame(triples, ordered[0], bindings)
-    for atom in ordered[1:]:
-        right = atom_frame(triples, atom, bindings)
+    """One clause -> DataFrame of all its variable bindings."""
+    acc = frame_of(clause.positive[0])
+    for atom in clause.positive[1:]:
+        right = frame_of(atom)
         shared = sorted(set(acc.columns) & set(right.columns))
         acc = acc.join(right, on=shared) if shared else acc.crossJoin(right)
-
     for atom in clause.negative:
-        neg = atom_frame(triples, atom, bindings)
-        neg_vars = set(neg.columns)
-        unbound = neg_vars - set(acc.columns)
-        if unbound:
-            raise ValueError(
-                f"unsafe negation: {atom.lstr()} binds {sorted(unbound)} "
-                "not bound by any positive atom"
-            )
-        acc = acc.join(neg, on=sorted(neg_vars), how="left_anti")
+        neg = frame_of(atom)
+        acc = acc.join(neg, on=sorted(neg.columns), how="left_anti")
     return acc
 
 
@@ -157,13 +231,12 @@ def answer_counts_batched(
     r*/s* symbol.  Returns (query_id, t, score LONG), sparse — entities
     with no derivation are implicitly 0.
     """
-    clauses = dnf_conjuncts(parse_lstr(lstr))
-    if len(clauses) != 1:
+    plan = compile_plan(lstr, free_var)
+    if len(plan.clauses) != 1:
         raise NotImplementedError(
             "answer_counts_batched: single-clause shapes only (disjuncts "
             "have no canonical count semantics)"
         )
-    clause = clauses[0]
     inst = instances.select("query_id", "bindings")
     # Every r*/s* symbol of the clause must be bound (non-NULL) in every
     # instance: element_at on a missing key yields NULL, which makes the
@@ -171,11 +244,7 @@ def answer_counts_batched(
     # instead of an error (round-2 advisor finding).  Instance frames
     # are driver-sized by contract (they are the query batch), so one
     # eager validation job is cheap.
-    required = sorted(
-        {a.relation for a in clause.all_atoms()}
-        | {t.name for a in clause.all_atoms() for t in a.terms if t.is_constant}
-    )
-    req_arr = F.array(*[F.lit(s) for s in required])
+    req_arr = F.array(*[F.lit(s) for s in plan.symbols])
     bad = inst.filter(
         F.exists(req_arr, lambda s: F.element_at(F.col("bindings"), s).isNull())
     )
@@ -183,26 +252,9 @@ def answer_counts_batched(
     if bad_rows:
         raise ValueError(
             f"answer_counts_batched: instances {[r['query_id'] for r in bad_rows]} "
-            f"are missing bindings for some of the clause symbols {required}"
+            f"are missing bindings for some of the clause symbols {list(plan.symbols)}"
         )
-    ordered = _order_positive(clause)
-    acc = _batched_atom_frame(triples, inst, ordered[0])
-    for atom in ordered[1:]:
-        right = _batched_atom_frame(triples, inst, atom)
-        shared = sorted(set(acc.columns) & set(right.columns))
-        acc = acc.join(right, on=shared)
-    for atom in clause.negative:
-        neg = _batched_atom_frame(triples, inst, atom)
-        neg_vars = set(neg.columns)
-        unbound = neg_vars - set(acc.columns)
-        if unbound:
-            raise ValueError(
-                f"unsafe negation: {atom.lstr()} binds {sorted(unbound)} "
-                "not bound by any positive atom"
-            )
-        acc = acc.join(neg, on=sorted(neg_vars), how="left_anti")
-    if free_var not in acc.columns:
-        raise ValueError(f"free variable {free_var!r} not bound in {lstr!r}")
+    acc = _join_chain(plan.clauses[0], lambda a: _batched_atom_frame(triples, inst, a))
     return acc.groupBy("query_id", F.col(free_var).alias("t")).agg(
         F.count("*").cast("long").alias("score")
     )
@@ -216,22 +268,10 @@ def answer_exact(
 ) -> DataFrame:
     """Answer an EFO query exactly: the distinct set of free-variable
     entity ids, one clause plan per DNF disjunct combined by UNION."""
-    formula = parse_lstr(lstr)
-    needed = {a.relation for a in formula.atoms()} | {
-        t.name for a in formula.atoms() for t in a.terms if t.is_constant
-    }
-    missing = needed - set(bindings)
-    if missing:
-        raise ValueError(f"unbound symbols in {lstr!r}: {sorted(missing)}")
-    clauses = dnf_conjuncts(formula)
-    parts = []
-    for clause in clauses:
-        df = compile_clause(triples, clause, bindings)
-        if free_var not in df.columns:
-            raise ValueError(f"free variable {free_var!r} not in clause {clause}")
-        parts.append(df.select(free_var))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    plan = compile_plan(lstr, free_var, bindings)
+    parts = [
+        _join_chain(c, lambda a: atom_frame(triples, a, bindings)).select(free_var)
+        for c in plan.clauses
+    ]
     # ∃-projection of everything but the free variable + DNF set-union.
-    return out.distinct()
+    return functools.reduce(DataFrame.unionByName, parts).distinct()

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from knovexlite_spark.engine import Engine
 from knovexlite_spark.functions.oracle import FactOracle, densify_entities, id_store
-from knovexlite_spark.kg.triples import pair_encode_inverse
 from knovexlite_spark.language.normalize import dnf_conjuncts
 from knovexlite_spark.language.parser import parse_lstr
 from knovexlite_spark.ops.graph import bfs_layers
@@ -82,7 +81,7 @@ def _cqd_shared_context(spark: SparkSession, sf_dir: str, names: list[str]):
     # across those jobs and is released before returning — only the
     # (materialized) mapping cache outlives this function, since the
     # answer frames join against it at execution time
-    aug = pair_encode_inverse(engine.triples).cache()
+    aug = engine.triples_with_inverses().cache()
     mapping, dense = densify_entities(aug)
     mapping = mapping.cache()
     num_entities = mapping.count()
@@ -374,7 +373,7 @@ def _lmpnn_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     engine = Engine.for_dir(spark, sf_dir)
     pinned = _pinned_constants(engine)
-    mapping, _ = densify_entities(pair_encode_inverse(engine.triples))
+    mapping, _ = densify_entities(engine.triples_with_inverses())
     mapping = mapping.cache()
     n = mapping.count()
     s1 = mapping.filter(F.col("orig") == pinned["s1"]).collect()[0]["dense"]
@@ -564,7 +563,7 @@ def _qaa_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     engine = Engine.for_dir(spark, sf_dir)
     pinned = _pinned_constants(engine)
-    aug = pair_encode_inverse(engine.triples)
+    aug = engine.triples_with_inverses()
 
     shapes: list[tuple[str, list[dict[str, int]]]] = [
         (

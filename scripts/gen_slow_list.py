@@ -44,6 +44,12 @@ ALWAYS_RUN_FILES = {
 }
 ALWAYS_RUN_TESTS = {
     "test_engine_api.py::test_efo_augmented_inverse_query",
+    "test_engine_api.py::test_efo_below_gate_runs_no_spark_job",
+    "test_engine_api.py::test_efo_concurrent_first_calls_build_adjacency_once",
+    "test_engine_api.py::test_efo_empty_answer_keeps_schema",
+    "test_engine_api.py::test_efo_errors_match_on_both_paths",
+    "test_engine_api.py::test_efo_gate_and_row_cap_fallbacks_match_local",
+    "test_engine_api.py::test_triples_with_inverses_pairs_each_edge_with_its_twin",
     "test_graph_ops.py::test_propagate_one_step",
     "test_graph_ops.py::test_bfs_layers",
     "test_graph_ops.py::test_bfs_on_bridge_graph",

@@ -1,14 +1,52 @@
 """Engine public-surface regression tests (facade behaviors that the
 gate exercises implicitly but deserve direct pins)."""
 
+import logging
 import os
+import sys
 import threading
 from concurrent.futures import ThreadPoolExecutor
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
+from knovexlite_spark import engine as engine_mod
 from knovexlite_spark.engine import Engine
+from knovexlite_spark.plans import local as local_mod
+from knovexlite_spark.queries.efo import CQ_DEFS, _pinned_constants
 from tests.conftest import SF_SMALL
+
+
+def _fresh_engine(spark) -> Engine:
+    """An engine over SF_SMALL's KG with no EFO state yet (no held
+    view, no gate decision), without re-registering the views."""
+    eng = Engine(spark, SF_SMALL, register=False)
+    eng.triples = Engine.for_dir(spark, SF_SMALL).triples
+    return eng
+
+
+def _cq_bindings(spark) -> dict[str, dict[str, int]]:
+    pinned = _pinned_constants(Engine.for_dir(spark, SF_SMALL))
+    return {
+        name: {**rels, **{s: pinned[k] for s, k in consts.items()}}
+        for name, (_, rels, consts) in CQ_DEFS.items()
+    }
+
+
+def _answers(eng: Engine, spark) -> dict[str, tuple[set[int], int]]:
+    """Every CQ's answer set and the Spark jobs its collect ran."""
+    tracker = spark.sparkContext.statusTracker()
+    out = {}
+    for name, b in _cq_bindings(spark).items():
+        group = f"test-efo-{id(eng)}-{name}"
+        spark.sparkContext.setJobGroup(group, group)
+        try:
+            rows = eng.efo(CQ_DEFS[name][0], b, augmented=True).collect()
+        finally:
+            spark.sparkContext.setJobGroup(None, None)
+        out[name] = ({r[0] for r in rows}, len(tracker.getJobIdsForGroup(group)))
+    return out
 
 
 def test_efo_augmented_inverse_query(spark):
@@ -68,3 +106,109 @@ def test_for_dir_concurrent_first_calls_share_one_engine(spark):
         engines = list(pool.map(call, range(4)))
     assert all(e is engines[0] for e in engines)
     assert Engine._cache[spark][key] is engines[0]
+
+
+def test_triples_with_inverses_pairs_each_edge_with_its_twin(spark):
+    """The held view is the pair encoding of the bridge KG: relation k's
+    edges appear as 2k, and every (h, 2k+1, t) has its (t, 2k, h) twin."""
+    eng = Engine.for_dir(spark, SF_SMALL)
+    edges = {tuple(r) for r in eng.triples_with_inverses().select("h", "r", "t").collect()}
+    base = {tuple(r) for r in eng.triples.select("h", "r", "t").collect()}
+    assert {(h, r // 2, t) for h, r, t in edges if r % 2 == 0} == base
+    assert all((t, r - 1, h) in edges for h, r, t in edges if r % 2 == 1)
+    assert eng.triples_with_inverses() is eng.triples_with_inverses()
+
+
+def test_efo_below_gate_runs_no_spark_job(spark):
+    eng = Engine.for_dir(spark, SF_SMALL)
+    assert eng._local_adjacency() is not None  # SF_SMALL is below the gate
+    answers = _answers(eng, spark)
+    assert all(jobs == 0 for _, jobs in answers.values()), answers
+    b = _cq_bindings(spark)["cq2_2p"]
+    df = eng.efo("r1(s1,e1)&r2(e1,f1)", b, free_var="f1", augmented=True)
+    assert df.schema == StructType([StructField("f1", LongType())])
+    assert {r[0] for r in df.collect()} == answers["cq2_2p"][0]
+
+
+def test_efo_empty_answer_keeps_schema(spark):
+    eng = Engine.for_dir(spark, SF_SMALL)
+    df = eng.efo("r1(s1,f)", {"r1": 0, "s1": -1})
+    assert df.schema == StructType([StructField("f", LongType())])
+    assert df.collect() == []
+
+
+def test_efo_concurrent_first_calls_build_adjacency_once(spark, monkeypatch, caplog):
+    """Eight threads (more than the test session's 4 cores) race on a
+    fresh engine's first ``efo`` call, with a short switch interval: one
+    adjacency build, one logged gate decision, and every thread gets the
+    full answer."""
+    caplog.set_level(logging.INFO, logger="knovexlite_spark")
+    eng = _fresh_engine(spark)
+    builds = []
+
+    class Counting(local_mod.Adjacency):
+        def __init__(self, *a):
+            builds.append(1)
+            super().__init__(*a)
+
+    monkeypatch.setattr(engine_mod, "Adjacency", Counting)
+    lstr, b = CQ_DEFS["cq2_2p"][0], _cq_bindings(spark)["cq2_2p"]
+    n_threads = 8
+    barrier = threading.Barrier(n_threads, timeout=60)
+
+    def call(_):
+        barrier.wait()
+        return {r[0] for r in eng.efo(lstr, b, augmented=True).collect()}
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(n_threads) as pool:
+            futures = [pool.submit(call, i) for i in range(n_threads)]
+            results = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(prev)
+    assert len(builds) == 1
+    assert results[0] and all(r == results[0] for r in results)
+    decisions = [r.getMessage() for r in caplog.records if "efo backend" in r.getMessage()]
+    assert len(decisions) == 1 and ": local (" in decisions[0]
+
+
+def test_efo_gate_and_row_cap_fallbacks_match_local(spark, monkeypatch, caplog):
+    """Every CQ (cq9 included) answers the same on the local path, with
+    the size gate at 0 (all Spark) and with the row cap at 0 (every
+    query with a non-empty join falls back to Spark, and says so)."""
+    caplog.set_level(logging.INFO, logger="knovexlite_spark")
+    local = _answers(Engine.for_dir(spark, SF_SMALL), spark)
+    monkeypatch.setattr(engine_mod, "LOCAL_MAX_EDGES", 0)
+    gated = _fresh_engine(spark)
+    assert gated._local_adjacency() is None
+    above_gate = _answers(gated, spark)
+    monkeypatch.setattr(local_mod, "LOCAL_MAX_JOIN_ROWS", 0)
+    capped = _answers(Engine.for_dir(spark, SF_SMALL), spark)
+    for name, (want, _) in local.items():
+        assert above_gate[name][0] == want, name
+        assert capped[name][0] == want, name
+        assert above_gate[name][1] > 0, name
+    assert capped["cq1_1p"][1] == 0  # no join: stays local
+    assert capped["cq9_samenation"][1] > 0
+    assert any(
+        "efo row cap: r1(f,e1)&" in r.getMessage() for r in caplog.records
+    ), "the cq9 fallback is logged with its clause"
+
+
+@pytest.mark.parametrize(
+    "lstr, bindings, free_var, match",
+    [
+        ("r1(s1,f)&r2(e1,f)", {"r1": 0}, "f", "unbound symbols"),
+        ("r1(s1,f)&!r2(e2,f)", {"r1": 0, "r2": 0, "s1": 1}, "f", "unsafe negation"),
+        ("r1(s1,e1)", {"r1": 0, "s1": 1}, "f", "free variable"),
+    ],
+)
+def test_efo_errors_match_on_both_paths(spark, monkeypatch, lstr, bindings, free_var, match):
+    with pytest.raises(ValueError, match=match) as local_err:
+        Engine.for_dir(spark, SF_SMALL).efo(lstr, bindings, free_var=free_var)
+    monkeypatch.setattr(engine_mod, "LOCAL_MAX_EDGES", 0)
+    with pytest.raises(ValueError, match=match) as spark_err:
+        _fresh_engine(spark).efo(lstr, bindings, free_var=free_var)
+    assert str(local_err.value) == str(spark_err.value)

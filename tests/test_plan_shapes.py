@@ -48,12 +48,18 @@ def test_q3_dims_broadcast(spark):
 
 
 def test_anchored_efo_pushes_constant_filter(spark):
-    """cq1 (1p anchored at s1): the triples-side scans carry the pushed
-    anchor equality — the frontier starts at one entity's neighborhood,
-    not a full-edge shuffle."""
-    from knovexlite_spark.queries.efo import _runner
+    """cq1 (1p anchored at s1) on the Spark interpreter: the
+    triples-side scans carry the pushed anchor equality — the frontier
+    starts at one entity's neighborhood, not a full-edge shuffle.
+    (``Engine.efo`` answers this KG on the driver, below the size gate,
+    so the plan is taken from ``answer_exact`` directly.)"""
+    from knovexlite_spark.plans.exact import answer_exact
+    from knovexlite_spark.queries.efo import CQ_DEFS, _pinned_constants
 
-    df = _runner("cq1_1p")(spark, SF_SMALL)
+    engine = Engine.for_dir(spark, SF_SMALL)
+    lstr, rels, _ = CQ_DEFS["cq1_1p"]
+    bindings = {**rels, "s1": _pinned_constants(engine)["s1"]}
+    df = answer_exact(engine.triples_with_inverses(), lstr, bindings)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
     assert "EqualTo(o_custkey," in plan
