@@ -21,7 +21,10 @@ defects listed in SURVEY §2.9 are NOT reproduced):
 Spark surface: embeddings live in DataFrames ``(id, vec ARRAY<FLOAT>)``
 for storage, but scoring gathers from a *broadcast NumPy matrix* inside
 ``mapInPandas`` — the candidates × num_entities block never materializes
-as rows (SURVEY §4.2); only per-row scores or top-k leave the kernel.
+as rows (SURVEY §4.2).  Two operators: ``score_triples`` (one score per
+row) and ``score_all_tails_grouped_max`` (every entity as a tail, max
+per group), which shards the entity axis by itself above the broadcast
+ceiling ``ENT_BROADCAST_MAX_BYTES``.
 """
 
 from __future__ import annotations
@@ -314,47 +317,25 @@ class EmbeddingStore:
         )
         return ent, rel
 
-    def ent_quantized(self) -> tuple[np.ndarray, np.ndarray]:
-        """Per-row symmetric int8 quantization of the entity matrix
-        (the same scheme as ops/similarity.quantize_embeddings):
-        returns (qmat int8 [N, d], scales float32 [N]) with
-        qmat[i] = round(ent[i] / scales[i]), scales = max|ent[i]|/127.
-        4x smaller than float32 — the broadcast-ceiling knob for the
-        quantized scoring paths (score_all_tails(quantized=True)).
-        Cached after the first call."""
-        if getattr(self, "_quant_cache", None) is None:
-            amax = np.abs(self.ent).max(axis=1)
-            scales = (amax / 127.0).astype(np.float32)
-            safe = np.where(scales == 0, 1.0, scales).astype(np.float32)
-            q = np.round(self.ent / safe[:, None]).astype(np.int8)
-            object.__setattr__(self, "_quant_cache", (q, scales))
-        return self._quant_cache
-
-
-# Per-worker dequantization cache: a quantized broadcast is shipped and
-# stored int8 (the 4x win is transfer + block-manager residency), but
-# the GEMM kernels need float32 — dequantize ONCE per worker per
-# broadcast and reuse across tasks.  Keyed by the int8 array's identity
-# (the broadcast value object is stable within a worker); holding the
-# key object in the value pins its id.  Bounded to the last few
-# broadcasts so a long-lived worker never accumulates stale matrices.
-_DEQ_CACHE: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-
-def _dequantize_cached(q: np.ndarray, scales: np.ndarray) -> np.ndarray:
-    hit = _DEQ_CACHE.get(id(q))
-    if hit is not None and hit[0] is q:
-        return hit[1]
-    mat = (q.astype(np.float32) * scales[:, None]).astype(np.float32)
-    if len(_DEQ_CACHE) >= 4:
-        _DEQ_CACHE.pop(next(iter(_DEQ_CACHE)))
-    _DEQ_CACHE[id(q)] = (q, mat)
-    return mat
-
 
 # --------------------------------------------------------------------------
 # Spark scoring operators
 # --------------------------------------------------------------------------
+
+# The whole-matrix broadcast ceiling.  A broadcast is held whole on the
+# driver and on every executor, so the entity matrix must fit beside a
+# working heap: 100 M entities x 64 dims x 4 B = 25.6 GB is the
+# practical limit (SCALE.md "Neural scoring").  Above it the all-entity
+# kernel shards the entity axis into ceil(nbytes / ceiling) slices.
+ENT_BROADCAST_MAX_BYTES = 100_000_000 * 64 * 4
+
+# Scores in flight per kernel step: a group's source rows are scored
+# in chunks of MAX_FLUX // N rows, the reference's adaptive chunking
+# (complex.py:18, 59-96).
+MAX_FLUX = 100_000
+
+# Column holding the joined head vector on the sharded path.
+_HVEC = "__hvec"
 
 
 def score_triples(
@@ -395,254 +376,86 @@ def score_triples(
     return df.mapInPandas(score_batches, schema=out_schema)
 
 
-def score_all_tails(
-    df: DataFrame,
-    model: KGEModel,
-    store: EmbeddingStore,
-    h_col: str = "h",
-    r_col: str = "r",
-    acc_col: str | None = None,
-    neg_col: str | None = None,
-    max_flux: int = 100_000,
-    keep_cols: tuple[str, ...] = (),
-    quantized: bool = False,
-) -> DataFrame:
-    """J2: theta-join of each (h, r) row against ALL entities, realized as
-    a broadcast mat-mul inside the kernel (never a crossJoin of rows —
-    SURVEY §4.2).  Emits the [rows × N] score block as (t, score) rows;
-    callers aggregate (max/sum/top-k) immediately after.
+def _check_ids(ids: np.ndarray, size: int, name: str) -> np.ndarray:
+    """``ids`` if every one indexes a matrix row, else ValueError — a
+    negative id would otherwise gather ``mat[-1]`` silently."""
+    bad = (ids < 0) | (ids >= size)
+    if bad.any():
+        raise ValueError(f"{name} ids outside [0, {size}): {np.unique(ids[bad])[:5]}")
+    return ids
 
-    ``acc_col`` carries an accumulated source score that is ADDED to the
-    edge score (log-space product combine, cqd.py:319-320).  ``max_flux``
-    bounds scores-in-flight per kernel step, mirroring the reference's
-    adaptive chunking (complex.py:18, 59-96).  ``keep_cols`` are long
-    passthrough columns replicated onto each output row (e.g. query_id
-    for batched evaluation).
 
-    ``quantized=True`` ships the entity matrix as per-row symmetric
-    int8 + scales (EmbeddingStore.ent_quantized) — a 4x smaller
-    broadcast (transfer + block-manager residency; the ~25 GB
-    whole-matrix ceiling carries 4x the entities).  Workers dequantize
-    ONCE per broadcast (cached) back to float32 for the GEMM, so
-    compute is unchanged; scores differ from the exact path by the
-    quantization error only (component error <= scale/2 = max|x|/254
-    — rank-stability pinned by tests)."""
-    spark = df.sparkSession
-    if quantized:
-        b_ent = spark.sparkContext.broadcast(store.ent_quantized())
-    else:
-        b_ent = spark.sparkContext.broadcast(store.ent)
-    b_rel = spark.sparkContext.broadcast(store.rel)
-
-    def expand(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ent, rel = b_ent.value, b_rel.value
-        if quantized:
-            ent = _dequantize_cached(*ent)
-        n = ent.shape[0]
-        rows_per = max(1, max_flux // max(n, 1))
-        for pdf in it:
-            for lo in range(0, len(pdf), rows_per):
-                part = pdf.iloc[lo : lo + rows_per]
-                h = ent[part[h_col].to_numpy()]
-                r = rel[part[r_col].to_numpy()]
-                s = model.score_all(h, r, ent).astype(np.float64)  # [b, N]
-                if neg_col is not None:
-                    neg = part[neg_col].to_numpy().astype(bool)
-                    s = np.where(neg[:, None], -s, s)
-                if acc_col is not None:
-                    s = s + part[acc_col].to_numpy()[:, None]
-                b = s.shape[0]
-                out = {
-                    "t": np.tile(np.arange(n, dtype=np.int64), b),
-                    "score": s.reshape(-1),
-                }
-                for kc in keep_cols:
-                    out[kc] = np.repeat(part[kc].to_numpy(), n)
-                yield pd.DataFrame(out)
-
-    schema = "t long, score double" + "".join(f", {c} long" for c in keep_cols)
-    return df.mapInPandas(expand, schema=schema)
+def _shard_offsets(store: EmbeddingStore) -> range:
+    """First tail id of each entity-axis shard: ``[0]`` (the whole
+    matrix) at or below ``ENT_BROADCAST_MAX_BYTES``, otherwise
+    ``ceil(nbytes / ENT_BROADCAST_MAX_BYTES)`` equal slices."""
+    n = store.ent.shape[0]
+    n_shards = max(1, -(-store.ent.nbytes // ENT_BROADCAST_MAX_BYTES))
+    return range(0, max(n, 1), max(1, -(-n // n_shards)))
 
 
 def score_all_tails_grouped_max(
     df: DataFrame,
     model: KGEModel,
     store: EmbeddingStore,
-    h_col: str = "h",
-    r_col: str = "r",
     acc_col: str | None = None,
     neg_col: str | None = None,
-    max_flux: int = 100_000,
     group_cols: tuple[str, ...] = ("query_id",),
-    quantized: bool = False,
 ) -> DataFrame:
-    """J2 + A1 fused: like :func:`score_all_tails`, but the per-group max
-    over the batch's source rows is taken INSIDE the kernel, so the
-    kernel emits N rows per (partition, group) instead of N rows per
-    source row — a beam_size× reduction in Arrow transfer and shuffle
-    input for the CQD expansion (round-1 judge note on the dense block).
+    """J2 + A1: score every entity as a candidate tail of each ``(h, r)``
+    source row, then take the max per (group, tail) inside the kernel.
 
-    Output is a PARTIAL aggregate: the same group can appear once per
-    partition, so callers must still merge with
-    ``groupBy(*group_cols, "t").max("score")`` — that groupBy now
-    shuffles N rows per group instead of beam×N.
+    The theta-join against all entities is a mat-mul on a broadcast
+    entity matrix inside ``mapInPandas`` (never a crossJoin of rows —
+    SURVEY §4.2).  ``neg_col`` (boolean) flips an edge score's sign
+    (fuzzy negation); ``acc_col`` is a source score ADDED to the edge
+    score (log-space product combine, cqd.py:319-320).  The kernel
+    emits N rows per (partition, group), not N per source row.
 
-    ``quantized=True``: int8 + scales entity broadcast (4x smaller),
-    dequantized once per worker — see score_all_tails.
+    Output ``(t, score, *group_cols)`` is a PARTIAL aggregate: a group
+    split across partitions appears once per partition, so callers
+    merge with ``groupBy(*group_cols, "t").max("score")``.  Ids in
+    ``h`` or ``r`` outside the matrices raise ``ValueError``.
+
+    Above ``ENT_BROADCAST_MAX_BYTES`` the entity axis is sharded (see
+    ``_shard_offsets``): head vectors are joined from the ``(id, vec)``
+    entity table, the frame is snapshotted once, and the shards run one
+    job at a time, each broadcasting only its slice and releasing it
+    once its partials are checkpointed.  The merge contract is the
+    same.
     """
-    spark = df.sparkSession
-    if quantized:
-        b_ent = spark.sparkContext.broadcast(store.ent_quantized())
-    else:
-        b_ent = spark.sparkContext.broadcast(store.ent)
-    b_rel = spark.sparkContext.broadcast(store.rel)
+    sc = df.sparkSession.sparkContext
+    n_ent, n_rel = store.ent.shape[0], store.rel.shape[0]
+    offsets = _shard_offsets(store)
+    whole = len(offsets) == 1
     gcols = list(group_cols)
-
-    def expand(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ent, rel = b_ent.value, b_rel.value
-        if quantized:
-            ent = _dequantize_cached(*ent)
-        n = ent.shape[0]
-        rows_per = max(1, max_flux // max(n, 1))
-        for pdf in it:
-            for gvals, part in pdf.groupby(gcols, sort=False):
-                if not isinstance(gvals, tuple):
-                    gvals = (gvals,)
-                best: np.ndarray | None = None
-                for lo in range(0, len(part), rows_per):
-                    chunk = part.iloc[lo : lo + rows_per]
-                    h = ent[chunk[h_col].to_numpy()]
-                    r = rel[chunk[r_col].to_numpy()]
-                    s = model.score_all(h, r, ent).astype(np.float64)  # [b, N]
-                    if neg_col is not None:
-                        neg = chunk[neg_col].to_numpy().astype(bool)
-                        s = np.where(neg[:, None], -s, s)
-                    if acc_col is not None:
-                        s = s + chunk[acc_col].to_numpy()[:, None]
-                    m = s.max(axis=0)
-                    best = m if best is None else np.maximum(best, m)
-                out = {"t": np.arange(n, dtype=np.int64), "score": best}
-                for c, v in zip(gcols, gvals):
-                    out[c] = np.full(n, v, dtype=np.int64)
-                yield pd.DataFrame(out)
-
-    schema = "t long, score double" + "".join(f", {c} long" for c in gcols)
-    return df.mapInPandas(expand, schema=schema)
-
-
-def score_all_tails_sharded(
-    df: DataFrame,
-    model: KGEModel,
-    store: EmbeddingStore,
-    ent_df: DataFrame | None = None,
-    n_shards: int = 4,
-    h_col: str = "h",
-    r_col: str = "r",
-    acc_col: str | None = None,
-    neg_col: str | None = None,
-    max_flux: int = 100_000,
-    group_cols: tuple[str, ...] = ("query_id",),
-    eager_shards: bool = True,
-    overlap: int = 2,
-    quantized: bool = False,
-) -> DataFrame:
-    """Entity-axis sharded J2+A1: the answer when the entity matrix
-    exceeds the whole-matrix broadcast ceiling (SCALE.md: ~25 GB at
-    100M x 64 float32).
-
-    - head vectors arrive as a joined column from the (id, vec) entity
-      table (``ent_df``; at scale this MUST be the S7 checkpoint table
-      — the ``None`` default materializes the matrix on the driver and
-      exists for tests only).  Rows whose h id is missing from
-      ``ent_df`` raise in the kernel rather than silently dropping.
-    - the relation matrix (model-count sized) broadcasts whole;
-    - each of ``n_shards`` kernels broadcasts only its [N/n_shards, d]
-      slice and scores candidates against it, emitting per-group
-      partial maxes for its tail-id range.
-
-    ``eager_shards=True`` (the scale mode) runs the shards as eager
-    jobs: the candidate frame is snapshotted once (localCheckpoint —
-    also making a nondeterministic upstream safe to fan out), each
-    shard's partials are materialized, and its broadcast is destroyed
-    as soon as its job completes — so at most ``overlap`` slices are
-    resident per executor at a time.  ``overlap`` (round-6 ask #3)
-    runs that many shard jobs CONCURRENTLY from driver threads (the
-    standard Spark multi-job trick): strictly serial shards leave the
-    cluster idle during each job's tail (stragglers, broadcast
-    teardown), while full overlap re-creates the accumulate-all-slices
-    memory profile eager mode exists to avoid — ``overlap`` is the
-    explicit residency/throughput knob (peak slice memory ~= overlap x
-    slice bytes).  Measured (SCALE.md): overlap=4 recovered 22% of the
-    serial wall in the local rehearsal, while overlap=2 was within
-    noise of serial THERE (single-box shuffles hide most of the idle
-    tail the overlap exists to fill); 2 stays the default for bounded
-    residency — raise it when slices are small relative to executor
-    memory.  With ``eager_shards=False`` the
-    shards stay lazy in one union/one job, which bounds per-TASK
-    working memory but lets every shard's broadcast accumulate on each
-    executor — fine below the ceiling, not above it.
-
-    Same partial-aggregate contract as score_all_tails_grouped_max:
-    merge with ``groupBy(*group_cols, "t").max("score")``.
-
-    ``quantized=True``: each shard broadcasts its int8 slice + scales
-    (4x smaller transfer AND 4x smaller overlap-bounded residency),
-    dequantized once per worker — see score_all_tails.  Head vectors
-    still come from ``ent_df`` at full float precision (only the tail
-    matrix rides the quantized broadcast), so scores differ from the
-    whole-matrix quantized path within the head reconstruction bound.
-    """
-    spark = df.sparkSession
-    if ent_df is None:
-        ent_df, _ = store.to_dataframes(spark)
-    b_rel = spark.sparkContext.broadcast(store.rel)
-    gcols = list(group_cols)
-    withv = df.join(
-        ent_df.select(F.col("id").alias(h_col), F.col("vec").alias("__hvec")),
-        h_col,
-        "left",
-    )
-    if eager_shards:
-        withv = withv.localCheckpoint(eager=True)
-
-    n = store.ent.shape[0]
-    step = max(1, (n + n_shards - 1) // n_shards)
     schema = "t long, score double" + "".join(f", {c} long" for c in gcols)
 
-    def run_shard(lo: int) -> DataFrame:
-        hi = min(lo + step, n)
-        if quantized:
-            # each shard ships its int8 slice + scales: the per-slice
-            # residency (overlap x slice bytes) shrinks 4x too
-            qm, sc = store.ent_quantized()
-            b_shard = spark.sparkContext.broadcast((qm[lo:hi], sc[lo:hi]))
-        else:
-            b_shard = spark.sparkContext.broadcast(store.ent[lo:hi])
+    def kernel(b_ent, b_rel, lo: int):
+        """gather -> score_all -> negate -> add acc -> per-group max
+        against the entity slice ``b_ent`` whose first tail id is
+        ``lo``.  With one shard the slice is the whole matrix and heads
+        are gathered from it; otherwise they arrive joined as _HVEC."""
 
-        def expand(
-            it: Iterator[pd.DataFrame], lo: int = lo, b_shard=b_shard
-        ) -> Iterator[pd.DataFrame]:
-            rel = b_rel.value
-            shard = b_shard.value
-            if quantized:
-                shard = _dequantize_cached(*shard)
-            sn = shard.shape[0]
-            rows_per = max(1, max_flux // max(sn, 1))
+        def expand(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            ent, rel = b_ent.value, b_rel.value
+            sn = ent.shape[0]
+            rows_per = max(1, MAX_FLUX // max(sn, 1))
+            tails = np.arange(lo, lo + sn, dtype=np.int64)
             for pdf in it:
-                if pdf["__hvec"].isna().any():
-                    missing = pdf.loc[pdf["__hvec"].isna(), h_col].unique()
-                    raise ValueError(
-                        f"candidate h ids missing from ent_df: {missing[:5]}"
-                    )
                 for gvals, part in pdf.groupby(gcols, sort=False):
                     if not isinstance(gvals, tuple):
                         gvals = (gvals,)
                     best: np.ndarray | None = None
                     for plo in range(0, len(part), rows_per):
                         chunk = part.iloc[plo : plo + rows_per]
-                        h = np.stack(chunk["__hvec"].to_numpy()).astype(np.float32)
-                        r = rel[chunk[r_col].to_numpy()]
-                        s = model.score_all(h, r, shard).astype(np.float64)
+                        h_ids = _check_ids(chunk["h"].to_numpy(), n_ent, "h")
+                        if whole:
+                            h = ent[h_ids]
+                        else:
+                            h = np.stack(chunk[_HVEC].to_numpy()).astype(np.float32)
+                        r = rel[_check_ids(chunk["r"].to_numpy(), n_rel, "r")]
+                        s = model.score_all(h, r, ent).astype(np.float64)  # [b, sn]
                         if neg_col is not None:
                             neg = chunk[neg_col].to_numpy().astype(bool)
                             s = np.where(neg[:, None], -s, s)
@@ -650,69 +463,30 @@ def score_all_tails_sharded(
                             s = s + chunk[acc_col].to_numpy()[:, None]
                         m = s.max(axis=0)
                         best = m if best is None else np.maximum(best, m)
-                    out = {
-                        "t": np.arange(lo, lo + sn, dtype=np.int64),
-                        "score": best,
-                    }
+                    out = {"t": tails, "score": best}
                     for c, v in zip(gcols, gvals):
                         out[c] = np.full(sn, v, dtype=np.int64)
                     yield pd.DataFrame(out)
 
-        partial = withv.mapInPandas(expand, schema=schema)
-        if eager_shards:
-            # materialize this shard's partials, then drop its slice
-            # from the executors as soon as its job finishes
-            partial = partial.localCheckpoint(eager=True)
-            b_shard.unpersist(blocking=False)
-        return partial
+        return expand
 
-    offsets = list(range(0, n, step))
-    if eager_shards and overlap > 1 and len(offsets) > 1:
-        from concurrent.futures import ThreadPoolExecutor
+    if whole:
+        b_ent = sc.broadcast(store.ent)
+        b_rel = sc.broadcast(store.rel)
+        return df.mapInPandas(kernel(b_ent, b_rel, 0), schema=schema)
 
-        # concurrent Spark jobs from driver threads; map() preserves
-        # shard order so the output frame is deterministic
-        with ThreadPoolExecutor(max_workers=int(overlap)) as ex:
-            frames = list(ex.map(run_shard, offsets))
-    else:
-        frames = [run_shard(lo) for lo in offsets]
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
+    b_rel = sc.broadcast(store.rel)
+    ent_df, _ = store.to_dataframes(df.sparkSession)
+    heads = F.col("vec").alias(_HVEC)
+    withv = df.join(ent_df.select(F.col("id").alias("h"), heads), "h", "left")
+    # one snapshot feeds every shard, so the join (and any
+    # nondeterministic upstream) runs once
+    withv = withv.localCheckpoint(eager=True)
+    out: DataFrame | None = None
+    for lo in offsets:
+        b_shard = sc.broadcast(store.ent[lo : lo + offsets.step])
+        part = withv.mapInPandas(kernel(b_shard, b_rel, lo), schema=schema)
+        part = part.localCheckpoint(eager=True)
+        b_shard.unpersist(blocking=False)
+        out = part if out is None else out.unionByName(part)
     return out
-
-
-def rank_of_tails(
-    df: DataFrame,
-    model: KGEModel,
-    store: EmbeddingStore,
-    h_col: str = "h",
-    r_col: str = "r",
-    t_col: str = "t",
-) -> DataFrame:
-    """E9/R10 building block: for each (h, r, t) row, the rank of t among
-    all entities by score (0 = best), computed inside the kernel as a
-    count-of-better — O(N) per row, no argsort-of-argsort, no N-row
-    explosion (SURVEY §7 'hard parts')."""
-    spark = df.sparkSession
-    b_ent = spark.sparkContext.broadcast(store.ent)
-    b_rel = spark.sparkContext.broadcast(store.rel)
-    fields = df.schema.fieldNames()
-    out_schema = ", ".join(
-        [df.schema[f].simpleString().replace(":", " ", 1) for f in fields]
-        + ["rank long"]
-    )
-
-    def ranker(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ent, rel = b_ent.value, b_rel.value
-        for pdf in it:
-            h = ent[pdf[h_col].to_numpy()]
-            r = rel[pdf[r_col].to_numpy()]
-            scores = model.score_all(h, r, ent)  # [b, N]
-            own = scores[np.arange(len(pdf)), pdf[t_col].to_numpy()]
-            rank = np.sum(scores > own[:, None], axis=1)
-            pdf = pdf.copy()
-            pdf["rank"] = rank.astype(np.int64)
-            yield pdf
-
-    return df.mapInPandas(ranker, schema=out_schema)

@@ -53,11 +53,9 @@ def quantize_embeddings(
 ) -> DataFrame:
     """Per-vector symmetric int8 quantization: scale = max|x| / 127,
     qvec[i] = round(x[i] / scale) in [-127, 127] — the standard 4x
-    storage/bandwidth reduction for embedding tables.  At 100 TB this
-    is a broadcast-ceiling knob, not just disk savings: the 25 GB
-    whole-matrix ceiling (SCALE.md neural-scoring section) carries 4x
-    the entities at int8, and every shard slice of
-    score_all_tails_sharded shrinks the same way.
+    storage/bandwidth reduction for embedding tables (corpora here;
+    the KGE scoring kernel broadcasts float32 and shards the entity
+    axis above its ceiling instead, SCALE.md neural-scoring section).
 
     Pure JVM higher-order expressions (no UDF): one aggregate for the
     per-row max-abs, one transform for the rounding.  Output: (id,

@@ -25,7 +25,7 @@ from knovexlite_spark.engine import Engine
 from knovexlite_spark.functions.oracle import FactOracle, densify_entities, id_store
 from knovexlite_spark.language.normalize import dnf_conjuncts
 from knovexlite_spark.language.parser import parse_lstr
-from knovexlite_spark.ops.graph import bfs_layers
+from knovexlite_spark.kg.traverse import bfs_layers
 from knovexlite_spark.queries.efo import CQ_ORACLE, CUST_NATION, PLACED, CONTAINS, _pinned_constants
 from knovexlite_spark.reasoner.cqd import CQDBeam
 

@@ -12,11 +12,17 @@ the free variable to constants with a visited-mask cycle guard
   combine            sum  source score + edge score = log-space product
                          t-norm (cqd.py:319-320) -> `acc` addition
   ∃-elimination      A1  max over source beam per (edge, tail)
-                         (cqd.py:327-338) -> groupBy(query_id, t).max
+                         (cqd.py:327-338) -> per-partition max inside
+                         the kernel, merged by groupBy(query_id, t).max
   conjunction        A2  sum across incoming edges per tail
                          (cqd.py:344-355) -> union + groupBy.sum
   beam prune         A7  top-k per variable (cqd.py:374-409)
                          -> per-query row_number window <= k
+
+The first three steps are one call per level to
+``functions.kge.score_all_tails_grouped_max``, the library's single
+all-entity operator; it shards the entity axis by itself when the
+matrix is above the broadcast ceiling.
 
 Spark-first batching: evaluation is **batched across instances of one
 query shape** — every frame carries a ``query_id`` column, constants and
@@ -42,7 +48,6 @@ from pyspark.sql import functions as F
 from knovexlite_spark.functions.kge import (
     EmbeddingStore,
     KGEModel,
-    score_all_tails,  # noqa: F401 - public re-export; unfused variant
     score_all_tails_grouped_max,
 )
 from knovexlite_spark.language.ast import ConjunctiveClause
@@ -80,7 +85,9 @@ class CQDBeam:
         shape.  ``instances``: (query_id LONG, bindings MAP<STRING,LONG>)
         binding every s*/r* symbol.  DNF disjuncts combine by max
         (fuzzy OR — SURVEY §3 step 7)."""
-        inst = instances.select("query_id", "bindings").cache()
+        # not cached: the result is lazy, so nothing could unpersist a
+        # cache taken here, and the frame is query-batch-sized
+        inst = instances.select("query_id", "bindings")
         frames = [
             self._clause_scores(spark, clause, inst, free_var)
             for clause in dnf_conjuncts(parse_lstr(lstr))

@@ -1,7 +1,8 @@
 """Graph functionals G1-G3 vs hand-computed results + bridge-graph BFS."""
 
 from knovexlite_spark.engine import Engine
-from knovexlite_spark.ops.graph import bfs_layers, propagate, topological_order
+from knovexlite_spark.kg.traverse import bfs_layers, propagate
+from knovexlite_spark.ops.graph import topological_order
 from tests.conftest import SF_SMALL
 
 # diamond with a tail: 0->1, 0->2, 1->3, 2->3, 3->4

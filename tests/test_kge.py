@@ -13,8 +13,7 @@ from knovexlite_spark.functions.kge import (
     SWTransE,
     TransE,
     inverse_relation_ids,
-    rank_of_tails,
-    score_all_tails,
+    score_all_tails_grouped_max,
     score_triples,
 )
 from knovexlite_spark.functions.tnorm import TNorm
@@ -128,9 +127,12 @@ def test_spark_score_all_tails_negation(spark):
     store = EmbeddingStore.xavier(num_entities=10, num_relations=4, ent_dim=6, seed=2)
     model = DistMult()
     df = spark.createDataFrame(
-        [(3, 1, True, 0.5)], schema="h long, r long, neg boolean, acc double"
+        [(0, 3, 1, True, 0.5)], schema="query_id long, h long, r long, neg boolean, acc double"
     )
-    out = {r["t"]: r["score"] for r in score_all_tails(df, model, store, neg_col="neg", acc_col="acc").collect()}
+    out = {
+        r["t"]: r["score"]
+        for r in score_all_tails_grouped_max(df, model, store, neg_col="neg", acc_col="acc").collect()
+    }
     assert len(out) == 10
     for t in range(10):
         want = -model.score(store.ent[3], store.rel[1], store.ent[t]) + 0.5
@@ -138,13 +140,24 @@ def test_spark_score_all_tails_negation(spark):
 
 
 def test_spark_rank_of_tails(spark):
+    """All-entity scores -> merge -> ``answer_ranks`` gives each answer
+    the count of entities scored strictly better."""
+    from knovexlite_spark.reasoner.metric import answer_ranks
+
     store = EmbeddingStore.xavier(num_entities=12, num_relations=2, ent_dim=4, seed=3)
     model = DistMult()
-    df = spark.createDataFrame([(0, 1, 5), (2, 0, 7)], schema="h long, r long, t long")
-    got = {(r["h"], r["r"], r["t"]): r["rank"] for r in rank_of_tails(df, model, store).collect()}
-    for (h, r, t), rank in got.items():
-        scores = model.score_all(store.ent[[h]], store.rel[[r]], store.ent)[0]
-        assert rank == int(np.sum(scores > scores[t]))
+    rows = [(0, 0, 1, 5), (1, 2, 0, 7)]
+    df = spark.createDataFrame(rows, schema="query_id long, h long, r long, t long")
+    scores = (
+        score_all_tails_grouped_max(df.drop("t"), model, store)
+        .groupBy("query_id", "t").agg(F.max("score").alias("score"))
+    )
+    ranks = answer_ranks(scores, df.select("query_id", "t"))
+    got = {(r["query_id"], r["t"]): r["rank"] for r in ranks.collect()}
+    assert len(got) == len(rows)
+    for q, h, r, t in rows:
+        s = model.score_all(store.ent[[h]], store.rel[[r]], store.ent)[0]
+        assert got[(q, t)] == int(np.sum(s > s[t]))
 
 
 def test_tnorm_grouped_product(spark):
@@ -203,54 +216,39 @@ def test_conve_spark_scoring(spark):
 
 
 def test_grouped_max_expansion_equals_unfused(spark):
-    """score_all_tails_grouped_max + merge == score_all_tails + groupBy
-    max (the J2+A1 fusion must be a pure plan optimization)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from knovexlite_spark.functions.kge import (
-        EmbeddingStore,
-        TransE,
-        score_all_tails,
-        score_all_tails_grouped_max,
-    )
-
+    """Merged kernel partials == a NumPy max of ``model.score_all`` over
+    each group's rows (negation and ``acc`` applied per row), however
+    the rows split across partitions."""
     store = EmbeddingStore.xavier(12, 4, ent_dim=6, seed=9)
-    rows = [(q, h, r, False, float(a)) for q, h, r, a in
-            [(0, 1, 0, 0.0), (0, 2, 1, -0.5), (0, 3, 0, 1.5),
-             (1, 4, 2, 0.0), (1, 5, 3, 2.0)]]
+    model = TransE()
+    rows = [(0, 1, 0, False, 0.0), (0, 2, 1, True, -0.5), (0, 3, 0, False, 1.5),
+            (1, 4, 2, False, 0.0), (1, 5, 3, True, 2.0)]
     df = spark.createDataFrame(
         rows, schema="query_id long, h long, r long, neg boolean, acc double"
     ).repartition(3)
-    unfused = (
-        score_all_tails(df, TransE(), store, acc_col="acc", neg_col="neg",
-                        keep_cols=("query_id",))
-        .groupBy("query_id", "t").agg(F.max("score").alias("score"))
-    )
     fused = (
-        score_all_tails_grouped_max(df, TransE(), store, acc_col="acc",
+        score_all_tails_grouped_max(df, model, store, acc_col="acc",
                                     neg_col="neg", group_cols=("query_id",))
         .groupBy("query_id", "t").agg(F.max("score").alias("score"))
     )
-    a = {(r["query_id"], r["t"]): r["score"] for r in unfused.collect()}
-    b = {(r["query_id"], r["t"]): r["score"] for r in fused.collect()}
-    assert a.keys() == b.keys()
-    assert all(np.isclose(a[k], b[k], atol=1e-9) for k in a)
+    got = {(r["query_id"], r["t"]): r["score"] for r in fused.collect()}
+    want = {}
+    for q in {row[0] for row in rows}:
+        mine = [row for row in rows if row[0] == q]
+        s = model.score_all(store.ent[[x[1] for x in mine]],
+                            store.rel[[x[2] for x in mine]], store.ent).astype(np.float64)
+        s = np.where(np.array([x[3] for x in mine])[:, None], -s, s)
+        s = s + np.array([x[4] for x in mine])[:, None]
+        want.update({(q, t): v for t, v in enumerate(s.max(axis=0))})
+    assert got.keys() == want.keys()
+    assert all(np.isclose(got[k], want[k], atol=1e-9) for k in want)
 
 
-def test_sharded_expansion_equals_grouped_max(spark):
-    """Entity-axis sharding (no whole-matrix broadcast) must be a pure
-    distribution change: merged shard partials == the single-broadcast
-    grouped-max path, across uneven shard boundaries."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from knovexlite_spark.functions.kge import (
-        EmbeddingStore,
-        RotatE,
-        score_all_tails_grouped_max,
-        score_all_tails_sharded,
-    )
+def test_sharded_expansion_equals_grouped_max(spark, monkeypatch):
+    """Entity-axis sharding is a pure distribution change: with the
+    broadcast ceiling lowered so 13 entities split into 3 uneven shards,
+    the merged shard partials equal the one-shard result."""
+    from knovexlite_spark.functions import kge
 
     store = EmbeddingStore.xavier(13, 4, ent_dim=8, rel_dim=4, seed=21)
     rows = [(0, 1, 0, False, 0.0), (0, 2, 1, True, -1.0),
@@ -258,121 +256,37 @@ def test_sharded_expansion_equals_grouped_max(spark):
     df = spark.createDataFrame(
         rows, schema="query_id long, h long, r long, neg boolean, acc double"
     ).repartition(2)
-    base = (
-        score_all_tails_grouped_max(df, RotatE(), store, acc_col="acc",
-                                    neg_col="neg")
-        .groupBy("query_id", "t").agg(F.max("score").alias("score"))
-    )
-    a = {(r["query_id"], r["t"]): r["score"] for r in base.collect()}
-    # overlap sweep: serial, the default 2-way, and full fan-out must
-    # all be pure distribution changes (round-6 concurrent shard jobs)
-    for overlap in (1, 2, 4):
-        shard = (
-            score_all_tails_sharded(df, RotatE(), store, n_shards=3,
-                                    acc_col="acc", neg_col="neg",
-                                    overlap=overlap)
-            .groupBy("query_id", "t").agg(F.max("score").alias("score"))
-        )
-        b = {(r["query_id"], r["t"]): r["score"] for r in shard.collect()}
-        assert a.keys() == b.keys(), overlap
-        assert all(np.isclose(a[k], b[k], atol=1e-6) for k in a), overlap
+
+    def merged():
+        out = score_all_tails_grouped_max(df, RotatE(), store, acc_col="acc", neg_col="neg")
+        return {
+            (r["query_id"], r["t"]): r["score"]
+            for r in out.groupBy("query_id", "t").agg(F.max("score").alias("score")).collect()
+        }
+
+    assert list(kge._shard_offsets(store)) == [0]
+    a = merged()
+    # 13 x 8 float32 = 416 B; a 160 B ceiling gives ceil(416 / 160) = 3
+    monkeypatch.setattr(kge, "ENT_BROADCAST_MAX_BYTES", 160)
+    assert list(kge._shard_offsets(store)) == [0, 5, 10]
+    b = merged()
+    assert a.keys() == b.keys() and len(a) == 2 * 13
+    assert all(np.isclose(a[k], b[k], atol=1e-6) for k in a)
 
 
-# --------------------------------------- quantized scoring (round 7)
+@pytest.mark.parametrize("sharded", [False, True], ids=["whole", "sharded"])
+@pytest.mark.parametrize("h,r", [(-1, 0), (6, 0), (0, -1), (0, 3)])
+def test_all_tails_out_of_range_ids_raise(spark, monkeypatch, sharded, h, r):
+    """An h or r id outside [0, N) raises in both modes instead of
+    wrapping around to the last row (``ent[-1]``)."""
+    from knovexlite_spark.functions import kge
 
-
-def test_score_all_tails_quantized_close_and_rank_stable(spark):
-    """quantized=True: scores within the int8 reconstruction bound of
-    the exact path, and the per-row argmax (the decision every
-    consumer aggregates toward) matches on a comfortable margin."""
-    import numpy as np
-
-    from knovexlite_spark.functions.kge import (
-        EmbeddingStore,
-        TransE,
-        score_all_tails,
-    )
-
-    store = EmbeddingStore.xavier(60, 4, 16, seed=3)
-    model = TransE()
+    store = EmbeddingStore.xavier(6, 3, ent_dim=4, seed=4)
+    if sharded:
+        monkeypatch.setattr(kge, "ENT_BROADCAST_MAX_BYTES", 40)  # 96 B -> 3 shards
+        assert len(kge._shard_offsets(store)) == 3
     df = spark.createDataFrame(
-        [(i % 60, i % 4, i) for i in range(20)], "h long, r long, query_id long"
+        [(0, 1, 1), (0, h, r)], schema="query_id long, h long, r long"
     )
-    exact = score_all_tails(
-        df, model, store, keep_cols=("query_id",)
-    ).toPandas()
-    quant = score_all_tails(
-        df, model, store, keep_cols=("query_id",), quantized=True
-    ).toPandas()
-    e = exact.sort_values(["query_id", "t"]).reset_index(drop=True)
-    q = quant.sort_values(["query_id", "t"]).reset_index(drop=True)
-    assert (e[["query_id", "t"]].values == q[["query_id", "t"]].values).all()
-    # TransE distance scores move by at most the L1 mass of the
-    # per-component error (<= d * max_scale/2, far below 1 here)
-    assert np.abs(e["score"].values - q["score"].values).max() < 0.5
-    # argmax per query matches between paths
-    am_e = e.loc[e.groupby("query_id")["score"].idxmax()]["t"].tolist()
-    am_q = q.loc[q.groupby("query_id")["score"].idxmax()]["t"].tolist()
-    agree = sum(a == b for a, b in zip(am_e, am_q))
-    assert agree >= len(am_e) - 1  # near-ties may flip at most one
-
-
-def test_score_all_tails_sharded_quantized_matches_unsharded_quantized(spark):
-    """The sharded quantized path slices the SAME int8 matrix as the
-    whole-matrix quantized path, but its HEAD vectors stay float (they
-    come from ent_df, the scale contract) while the whole-matrix path
-    gathers dequantized heads — so scores agree within the head
-    reconstruction bound, not bit-exactly."""
-    from pyspark.sql import functions as F
-
-    from knovexlite_spark.functions.kge import (
-        EmbeddingStore,
-        TransE,
-        score_all_tails,
-        score_all_tails_sharded,
-    )
-
-    store = EmbeddingStore.xavier(40, 3, 8, seed=5)
-    model = TransE()
-    df = spark.createDataFrame(
-        [(i % 40, i % 3, i) for i in range(8)], "h long, r long, query_id long"
-    )
-    whole = (
-        score_all_tails(df, model, store, keep_cols=("query_id",), quantized=True)
-        .groupBy("query_id", "t")
-        .agg(F.max("score").alias("score"))
-        .toPandas()
-        .sort_values(["query_id", "t"])
-        .reset_index(drop=True)
-    )
-    sharded = (
-        score_all_tails_sharded(
-            df, model, store, n_shards=3, quantized=True, overlap=2
-        )
-        .groupBy("query_id", "t")
-        .agg(F.max("score").alias("score"))
-        .toPandas()
-        .sort_values(["query_id", "t"])
-        .reset_index(drop=True)
-    )
-    assert (whole[["query_id", "t"]].values == sharded[["query_id", "t"]].values).all()
-    import numpy as np
-
-    assert np.abs(whole["score"].values - sharded["score"].values).max() < 0.01
-
-
-def test_ent_quantized_shape_and_bound():
-    import numpy as np
-
-    from knovexlite_spark.functions.kge import EmbeddingStore
-
-    store = EmbeddingStore.xavier(30, 2, 12, seed=7)
-    q, s = store.ent_quantized()
-    assert q.dtype == np.int8 and s.dtype == np.float32
-    assert q.shape == store.ent.shape and s.shape == (30,)
-    deq = q.astype(np.float32) * s[:, None]
-    assert np.abs(deq - store.ent).max() <= (s.max() / 2) + 1e-7
-    # 4x memory: int8 matrix + one float scale per row
-    assert q.nbytes == store.ent.nbytes // 4
-    # cached: same object back
-    assert store.ent_quantized()[0] is q
+    with pytest.raises(Exception, match="ValueError: [hr] ids outside"):
+        score_all_tails_grouped_max(df, TransE(), store).collect()

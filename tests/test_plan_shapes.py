@@ -133,12 +133,8 @@ def test_graph_loop_frontier_joins_broadcast(spark):
     (round-4 fix 40a4498; this test is the round-5 pin so a stats-less
     refactor cannot silently revert it)."""
     from knovexlite_spark.kg.triples import pair_encode_inverse
-    from knovexlite_spark.ops.graph import (
-        _bfs_next,
-        _kahn_strip_edges,
-        _kahn_strip_nodes,
-        propagate,
-    )
+    from knovexlite_spark.kg.traverse import _bfs_next, propagate
+    from knovexlite_spark.ops.graph import _kahn_strip_edges, _kahn_strip_nodes
 
     engine = Engine.for_dir(spark, SF_SMALL)
     edges = pair_encode_inverse(engine.triples).select("h", "t")

@@ -200,3 +200,20 @@ def test_evaluate_qaa_scores_each_instance_once(spark, tmp_path):
     reasoner = _CountingReasoner(spark, N_ENT)
     assert evaluate_qaa(spark, qaa, reasoner).collect()
     assert reasoner.runs.value == n_q
+
+
+def test_eval_batch_leaves_no_persisted_frame(spark):
+    """Repeated ``CQDBeam.eval_batch`` calls persist nothing: the
+    session's persistent RDD set does not grow across calls."""
+    from knovexlite_spark.functions.kge import TransE
+
+    beam = CQDBeam(TransE(), EmbeddingStore.xavier(8, 2, ent_dim=4, seed=5))
+    inst = spark.createDataFrame(
+        [(0, {"s1": 1, "r1": 0}), (1, {"s1": 3, "r1": 1})],
+        "query_id long, bindings map<string,long>",
+    )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    for _ in range(3):
+        assert beam.eval_batch(spark, QUERY_TYPES["1p"], inst).count() == 2 * 8
+    assert set(jsc.getPersistentRDDs().keys()) <= before
