@@ -34,6 +34,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -296,26 +297,33 @@ class EmbeddingStore:
         """Collect ``(id, vec)`` frames into dense matrices (S7 checkpoint
         load path). Embedding tables are model parameters — orders of
         magnitude smaller than data — so a driver collect + broadcast is
-        the correct distribution strategy."""
+        the correct distribution strategy.  The frames cross as one
+        Arrow table each; no Python object is built per row."""
 
         def to_mat(df: DataFrame) -> np.ndarray:
-            rows = df.select("id", "vec").collect()
-            n = max(r["id"] for r in rows) + 1
-            mat = np.zeros((n, len(rows[0]["vec"])), dtype=np.float32)
-            for r in rows:
-                mat[r["id"]] = r["vec"]
+            tbl = df.select("id", "vec").toArrow()
+            ids = tbl.column("id").to_numpy()
+            vecs = tbl.column("vec").combine_chunks()
+            vals = vecs.flatten().to_numpy(zero_copy_only=False).reshape(len(vecs), -1)
+            mat = np.zeros((ids.max() + 1, vals.shape[1]), dtype=np.float32)
+            mat[ids] = vals
             return mat
 
         return cls(to_mat(ent_df), to_mat(rel_df))
 
     def to_dataframes(self, spark: SparkSession) -> tuple[DataFrame, DataFrame]:
-        ent = spark.createDataFrame(
-            [(i, v.tolist()) for i, v in enumerate(self.ent)], schema="id LONG, vec ARRAY<FLOAT>"
-        )
-        rel = spark.createDataFrame(
-            [(i, v.tolist()) for i, v in enumerate(self.rel)], schema="id LONG, vec ARRAY<FLOAT>"
-        )
-        return ent, rel
+        """``(id LONG, vec ARRAY<FLOAT>)`` frames built through Arrow
+        straight from the matrices."""
+
+        def to_df(mat: np.ndarray) -> DataFrame:
+            n, w = mat.shape
+            vec = pa.FixedSizeListArray.from_arrays(
+                pa.array(np.ascontiguousarray(mat, dtype=np.float32).ravel()), w
+            )
+            tbl = pa.table({"id": pa.array(np.arange(n, dtype=np.int64)), "vec": vec})
+            return spark.createDataFrame(tbl, schema="id LONG, vec ARRAY<FLOAT>")
+
+        return to_df(self.ent), to_df(self.rel)
 
 
 # --------------------------------------------------------------------------
@@ -394,6 +402,15 @@ def _shard_offsets(store: EmbeddingStore) -> range:
     return range(0, max(n, 1), max(1, -(-n // n_shards)))
 
 
+def broadcast_store(sc, store: EmbeddingStore) -> tuple:
+    """The ``(entity, relation)`` broadcast pair that
+    ``score_all_tails_grouped_max`` reads through its ``_bcast``
+    argument.  The entity slot is ``None`` when the matrix is sharded:
+    each shard job broadcasts only its own slice."""
+    b_ent = sc.broadcast(store.ent) if len(_shard_offsets(store)) == 1 else None
+    return b_ent, sc.broadcast(store.rel)
+
+
 def score_all_tails_grouped_max(
     df: DataFrame,
     model: KGEModel,
@@ -401,6 +418,7 @@ def score_all_tails_grouped_max(
     acc_col: str | None = None,
     neg_col: str | None = None,
     group_cols: tuple[str, ...] = ("query_id",),
+    _bcast: tuple | None = None,
 ) -> DataFrame:
     """J2 + A1: score every entity as a candidate tail of each ``(h, r)``
     source row, then take the max per (group, tail) inside the kernel.
@@ -423,6 +441,10 @@ def score_all_tails_grouped_max(
     job at a time, each broadcasting only its slice and releasing it
     once its partials are checkpointed.  The merge contract is the
     same.
+
+    ``_bcast`` is a ``broadcast_store`` pair owned by the caller, so a
+    caller scoring several levels broadcasts the store once; without
+    it each call creates its own pair.
     """
     sc = df.sparkSession.sparkContext
     n_ent, n_rel = store.ent.shape[0], store.rel.shape[0]
@@ -470,12 +492,10 @@ def score_all_tails_grouped_max(
 
         return expand
 
+    b_ent, b_rel = _bcast if _bcast is not None else broadcast_store(sc, store)
     if whole:
-        b_ent = sc.broadcast(store.ent)
-        b_rel = sc.broadcast(store.rel)
         return df.mapInPandas(kernel(b_ent, b_rel, 0), schema=schema)
 
-    b_rel = sc.broadcast(store.rel)
     ent_df, _ = store.to_dataframes(df.sparkSession)
     heads = F.col("vec").alias(_HVEC)
     withv = df.join(ent_df.select(F.col("id").alias("h"), heads), "h", "left")

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from knovexlite_spark.functions.kge import (
     EmbeddingStore,
     KGEModel,
+    broadcast_store,
     score_all_tails_grouped_max,
 )
 from knovexlite_spark.language.ast import ConjunctiveClause
@@ -88,8 +89,11 @@ class CQDBeam:
         # not cached: the result is lazy, so nothing could unpersist a
         # cache taken here, and the frame is query-batch-sized
         inst = instances.select("query_id", "bindings")
+        # one broadcast pair serves every level of every disjunct; the
+        # result is lazy, so the pair must outlive this call
+        bcast = broadcast_store(spark.sparkContext, self.store)
         frames = [
-            self._clause_scores(spark, clause, inst, free_var)
+            self._clause_scores(spark, clause, inst, free_var, bcast)
             for clause in dnf_conjuncts(parse_lstr(lstr))
         ]
         out = frames[0]
@@ -123,6 +127,7 @@ class CQDBeam:
         clause: ConjunctiveClause,
         inst: DataFrame,
         free_var: str,
+        bcast: tuple,
     ) -> DataFrame:
         edges = self._oriented_edges(clause)
         visited: set[str] = set()
@@ -192,6 +197,7 @@ class CQDBeam:
                 acc_col="acc",
                 neg_col="neg",
                 group_cols=("query_id", "edge_id"),
+                _bcast=bcast,
             )
             # ONE exchange per level: hash-partition the partials by
             # (query_id, t); HashPartitioning on a SUBSET of the

@@ -10,20 +10,22 @@ analytics engine previously shipped the loss VALUES only
 parameter update, structured the way data-parallel KGE training has to
 look on a cluster:
 
-1. per-triple gradient contributions are computed in an Arrow-batched
-   kernel against the BROADCAST parameter matrices (the model is
+1. per-triple gradients are computed in an Arrow-batched kernel
+   against the BROADCAST parameter matrices (the model is
    catalog-sized; the triple set is the big thing),
-2. contributions are reduced with ONE combinable aggregation —
-   posexplode to (param, dim, val) then partial-sum-per-dimension.
-   Deliberately NOT collect_list + array fold: a high-degree entity at
-   100 TB would materialize millions of vectors in one group, while a
-   per-dimension SUM combines map-side and never holds more than a
-   scalar per (param, dim) per partition,
-3. the aggregated gradient (at most |params| x dim scalars — the same
-   size as the model) is collected and applied on the driver.
+2. each partition reduces its own gradients (the treeAggregate
+   pattern): every batch is summed per distinct entity / relation id,
+   and the partition's blocks are merged into one row per touched id
+   plus one loss row.  Nothing is shuffled.  Memory is bounded by
+   touched ids x dim per partition, never by degree, so a high-degree
+   entity at 100 TB costs one row per partition, not one per edge,
+3. the driver fetches the partials in one Arrow ``toPandas()``,
+   scatter-adds them in partition order (deterministic on a fixed
+   partitioning) and applies the update.
 
-That is precisely the parameter-server pattern: Spark shuffles
-gradients, the driver holds the (small) dense parameters.
+That is the parameter-server pattern: partitions exchange
+parameter-sized partials, the driver holds the (small) dense
+parameters.
 
 Loss: the standard margin logsigmoid objective with uniform negative
 tail corruption,
@@ -32,9 +34,10 @@ tail corruption,
         - (1/K) * sum_k log sigmoid(-gamma - s(h,r,t'_k))
 
 with s the model score (TransE: -||h+r-t||_p; DistMult: <h*r, t>).
-Negative sampling is deterministic per (seed, h, r, t) so results are
-independent of partitioning — required for tests and for Spark task
-retries to be idempotent at scale.
+Negative tails are a counter-based hash (splitmix64) of
+(seed, h, r, t, k), so results are independent of partitioning —
+required for tests and for Spark task retries to be idempotent at
+scale.
 """
 
 from __future__ import annotations
@@ -45,7 +48,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from knovexlite_spark.functions.kge import (
     ComplEx,
@@ -87,7 +89,7 @@ def _score_and_grads(
     matching what the parameter-server step updates).  Partials come back broadcast to
     the full batch shape of their parameter (note RotatE's relation
     width is entity_width/2 — phases — so ds/dr's last dim differs from
-    ds/dh's; the contribution emitter derives each width from the
+    ds/dh's; the partial-sum kernel derives each width from the
     gradient itself)."""
     if isinstance(model, TransE):
         diff = h + r - t  # [B, d]
@@ -268,6 +270,72 @@ class StepResult:
     n_triples: int
 
 
+# ``kind`` of a partial row: an entity or relation gradient row, or the
+# partition's loss row ``g = [loss_sum, triple_count]`` (id 0)
+_ENT, _REL, _LOSS = 0, 1, 2
+_PARTIAL_SCHEMA = "kind byte, id long, g array<double>"
+
+_GOLDEN = np.uint64(0x9E3779B97F4A7C15)
+
+
+def _splitmix64(x: np.ndarray) -> np.ndarray:
+    """splitmix64's output mix of a uint64 array (wrapping arithmetic)."""
+    with np.errstate(over="ignore"):
+        z = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+        z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+    return z ^ (z >> np.uint64(31))
+
+
+def _negatives(
+    hids: np.ndarray, rids: np.ndarray, tids: np.ndarray, n_ent: int, k: int, seed: int
+) -> np.ndarray:
+    """``[B, k]`` corrupted tail ids: negative j of a triple is the j-th
+    splitmix64 output seeded by the triple's key, modulo ``n_ent``.  A
+    pure function of (seed, h, r, t, j), so partitioning and task
+    retries cannot change the sample."""
+    row_key = (
+        hids * np.int64(1000003)
+        ^ rids * np.int64(998244353)
+        ^ tids * np.int64(786433)
+    ) + np.int64(seed) * np.int64(2654435761)
+    with np.errstate(over="ignore"):
+        steps = np.arange(1, k + 1, dtype=np.uint64) * _GOLDEN
+        state = row_key.view(np.uint64)[:, None] + steps[None, :]
+    return (_splitmix64(state) % np.uint64(n_ent)).astype(np.int64)
+
+
+def _sum_rows(ids: np.ndarray, rows: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Sum the rows that share an id: ``(distinct ids, [U, w] sums)``.
+    Rows are added in input order, so the result is deterministic."""
+    uniq, inv = np.unique(ids, return_inverse=True)
+    out = np.zeros((len(uniq), rows.shape[-1]), dtype=np.float64)
+    np.add.at(out, inv, rows)
+    return uniq, out
+
+
+class _PartialSums:
+    """Per-id gradient sums of one partition.  Each batch arrives
+    already reduced; blocks are merged whenever the pending ones
+    outgrow the merged one, so memory stays within a small multiple of
+    touched ids x width whatever the partition's size or degrees."""
+
+    def __init__(self) -> None:
+        self.blocks: list[tuple[np.ndarray, np.ndarray]] = []
+
+    def add(self, ids: np.ndarray, rows: np.ndarray) -> None:
+        self.blocks.append(_sum_rows(ids, rows))
+        if sum(len(i) for i, _ in self.blocks[1:]) >= len(self.blocks[0][0]):
+            self.blocks = [self.merged()]
+
+    def merged(self) -> tuple[np.ndarray, np.ndarray]:
+        if len(self.blocks) == 1:
+            return self.blocks[0]
+        return _sum_rows(
+            np.concatenate([i for i, _ in self.blocks]),
+            np.concatenate([g for _, g in self.blocks]),
+        )
+
+
 def grad_contributions(
     triples: DataFrame,
     model: KGEModel,
@@ -277,14 +345,11 @@ def grad_contributions(
     seed: int = 0,
     _bcast: tuple | None = None,
 ) -> DataFrame:
-    """Per-dimension gradient contributions as a DataFrame
-    ``(kind, id, dim, val)`` with kind 'e' (entity), 'r' (relation) or
-    'l' (loss accumulator: id=0, dim=0 sum / dim=1 count).
-
-    The output is agg-ready: every row is one scalar contribution, so
-    the reduction downstream is a plain combinable SUM.  All arithmetic
-    runs in float64 so the reported loss/gradients are insensitive (to
-    ~1e-12) to how triples are batched across partitions.
+    """Per-partition gradient partials ``(kind, id, g)``: one row per
+    entity (kind ``_ENT``) and relation (``_REL``) the partition
+    touched, ``g`` its summed gradient, plus one ``_LOSS`` row with
+    ``g = [loss_sum, triple_count]``.  Nothing is shuffled; the caller
+    sums the partials.  All arithmetic runs in float64.
 
     ``_bcast`` lets ``train_step`` own the broadcast lifetime (create,
     run the job, destroy) so multi-epoch training does not leak one
@@ -301,27 +366,15 @@ def grad_contributions(
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ent = b_ent.value
         rel = b_rel.value
+        ent_sums, rel_sums = _PartialSums(), _PartialSums()
+        loss_sum, count = 0.0, 0
         for pdf in it:
             if len(pdf) == 0:
                 continue
             hids = pdf["h"].to_numpy(np.int64)
             rids = pdf["r"].to_numpy(np.int64)
             tids = pdf["t"].to_numpy(np.int64)
-            B = len(hids)
-
-            # deterministic per-triple negative tails: the stream is a
-            # function of (seed, h, r, t), so partitioning and task
-            # retries cannot change the sample
-            row_key = (
-                hids * np.int64(1000003)
-                ^ rids * np.int64(998244353)
-                ^ tids * np.int64(786433)
-            ) + np.int64(seed) * np.int64(2654435761)
-            negs = np.empty((B, num_negatives), dtype=np.int64)
-            for i in range(B):
-                negs[i] = np.random.default_rng(
-                    np.uint64(row_key[i])
-                ).integers(0, n_ent, size=num_negatives)
+            negs = _negatives(hids, rids, tids, n_ent, num_negatives, seed)
 
             h = ent[hids].astype(np.float64)
             r = rel[rids].astype(np.float64)
@@ -343,57 +396,60 @@ def grad_contributions(
                 _log_sigmoid(-gamma - s_neg), axis=-1
             )
 
-            # accumulate (kind, id, dim, val) scalar contributions
-            kinds: list[np.ndarray] = []
-            ids: list[np.ndarray] = []
-            dims: list[np.ndarray] = []
-            vals: list[np.ndarray] = []
-
-            def emit(kind: str, id_arr: np.ndarray, grad: np.ndarray) -> None:
-                # grad: [B, w] -> B*w scalar rows; width comes from the
-                # gradient itself (RotatE relation width != entity width)
-                grad = np.asarray(grad, dtype=np.float64)
-                w = grad.shape[-1]
-                kinds.append(np.full(B * w, kind, dtype=object))
-                ids.append(np.repeat(id_arr, w))
-                dims.append(np.tile(np.arange(w, dtype=np.int64), B))
-                vals.append(grad.ravel())
-
-            emit("e", hids, c_pos * dh_p + (c_neg * dh_n).sum(axis=1))
-            emit("r", rids, c_pos * dr_p + (c_neg * dr_n).sum(axis=1))
-            emit("e", tids, c_pos * dt_p)
-            # corrupted tails get only their own negative-term gradient
-            for k in range(num_negatives):
-                emit("e", negs[:, k], c_neg[:, k] * dt_n[:, k])
-
-            out = pd.DataFrame(
-                {
-                    "kind": np.concatenate(kinds),
-                    "id": np.concatenate(ids),
-                    "dim": np.concatenate(dims),
-                    "val": np.concatenate(vals).astype(np.float64),
-                }
+            # heads, tails and corrupted tails (each only its own
+            # negative term) in one entity block; each width comes from
+            # the gradient itself (RotatE/RESCAL relation width differs)
+            g_neg = c_neg * dt_n
+            ent_sums.add(
+                np.concatenate([hids, tids, negs.ravel()]),
+                np.concatenate(
+                    [
+                        c_pos * dh_p + (c_neg * dh_n).sum(axis=1),
+                        c_pos * dt_p,
+                        g_neg.reshape(-1, g_neg.shape[-1]),
+                    ]
+                ),
             )
-            # loss accumulator rows (sum + count) for exact mean loss
-            out = pd.concat(
-                [
-                    out,
-                    pd.DataFrame(
-                        {
-                            "kind": ["l", "l"],
-                            "id": [0, 0],
-                            "dim": [0, 1],
-                            "val": [float(loss.sum()), float(B)],
-                        }
-                    ),
-                ],
-                ignore_index=True,
-            )
-            yield out
+            rel_sums.add(rids, c_pos * dr_p + (c_neg * dr_n).sum(axis=1))
+            loss_sum += float(loss.sum())
+            count += len(hids)
+        if count == 0:
+            return
+        e_ids, e_g = ent_sums.merged()
+        r_ids, r_g = rel_sums.merged()
+        yield pd.DataFrame(
+            {
+                "kind": np.repeat(
+                    np.array([_ENT, _REL, _LOSS], dtype=np.int8),
+                    [len(e_ids), len(r_ids), 1],
+                ),
+                "id": np.concatenate([e_ids, r_ids, [0]]),
+                "g": [*e_g, *r_g, np.array([loss_sum, float(count)])],
+            }
+        )
 
-    return triples.select("h", "r", "t").mapInPandas(
-        kernel, schema="kind string, id long, dim long, val double"
-    )
+    return triples.select("h", "r", "t").mapInPandas(kernel, schema=_PARTIAL_SCHEMA)
+
+
+def sum_partials(
+    parts: pd.DataFrame, store: EmbeddingStore
+) -> tuple[np.ndarray, np.ndarray, float, float]:
+    """Scatter-add ``grad_contributions`` partials, in row order, into
+    dense ``(g_ent, g_rel, loss_sum, triple_count)``.  On a fixed
+    partitioning the order is fixed, so the sums repeat bit for bit."""
+    kind = parts["kind"].to_numpy()
+    ids = parts["id"].to_numpy(np.int64)
+    g = parts["g"].to_numpy()
+
+    def scatter(k: int, shape: tuple[int, int]) -> np.ndarray:
+        acc = np.zeros(shape, dtype=np.float64)
+        m = kind == k
+        if m.any():
+            np.add.at(acc, ids[m], np.stack(g[m]))
+        return acc
+
+    loss_sum, n = scatter(_LOSS, (1, 2))[0]
+    return scatter(_ENT, store.ent.shape), scatter(_REL, store.rel.shape), float(loss_sum), float(n)
 
 
 def train_step(
@@ -412,7 +468,9 @@ def train_step(
     b_ent = sc.broadcast(store.ent)
     b_rel = sc.broadcast(store.rel)
     try:
-        contribs = grad_contributions(
+        # one job, no exchange: each partition's partials come back
+        # through Arrow (at most touched ids + relations + 1 rows each)
+        parts = grad_contributions(
             triples,
             model,
             store,
@@ -420,38 +478,13 @@ def train_step(
             num_negatives=num_negatives,
             seed=seed,
             _bcast=(b_ent, b_rel),
-        )
-        # ONE combinable aggregation: partial sums per (kind, id, dim) on
-        # the map side, one shuffle of at-most-|params|*dim keys.  The
-        # result is parameter-sized (|touched entities|*dim rows), which
-        # at KG scale is millions of rows — fetch it through Arrow and
-        # scatter with vectorized fancy indexing; a Row loop over a
-        # .collect() list was the driver bottleneck at the 6x rehearsal.
-        agg = (
-            contribs.groupBy("kind", "id", "dim")
-            .agg(F.sum("val").alias("g"))
-            .toPandas()
-        )
+        ).toPandas()
     finally:
         # the job is done once toPandas() returns; a multi-epoch train()
         # would otherwise leak one model-sized broadcast pair per epoch
         b_ent.destroy()
         b_rel.destroy()
-    g_ent = np.zeros_like(store.ent, dtype=np.float64)
-    g_rel = np.zeros_like(store.rel, dtype=np.float64)
-    kind = agg["kind"].to_numpy()
-    ids = agg["id"].to_numpy()
-    dims = agg["dim"].to_numpy()
-    gs = agg["g"].to_numpy()
-    e_m = kind == "e"
-    r_m = kind == "r"
-    # post-groupBy keys are unique, so plain fancy-index assignment is a
-    # well-defined scatter (no duplicate-index last-writer ambiguity)
-    g_ent[ids[e_m], dims[e_m]] = gs[e_m]
-    g_rel[ids[r_m], dims[r_m]] = gs[r_m]
-    l_m = ~(e_m | r_m)
-    loss_sum = float(gs[l_m & (dims == 0)].sum())
-    n = float(gs[l_m & (dims == 1)].sum())
+    g_ent, g_rel, loss_sum, n = sum_partials(parts, store)
     n = max(n, 1.0)
     new = EmbeddingStore(
         (store.ent - lr * (g_ent / n)).astype(np.float32),

@@ -124,3 +124,29 @@ def test_level_fusion_single_exchange_per_level(spark):
             .toString()
         )
         assert plan.count("Exchange hashpartitioning") == 1, lstr
+
+
+def test_store_broadcast_once_per_eval_batch(spark, monkeypatch):
+    """A 3p batch scores three beam levels against one broadcast pair:
+    2 broadcasts per eval_batch call, not 2 per level."""
+    from knovexlite_spark.functions.kge import EmbeddingStore, TransE
+
+    store = EmbeddingStore.xavier(20, 4, ent_dim=8, seed=3)
+    inst = spark.createDataFrame(
+        [(0, {"r1": 0, "r2": 2, "r3": 1, "s1": 1})],
+        "query_id long, bindings map<string,long>",
+    )
+    sc = spark.sparkContext
+    made = []
+    real = sc.broadcast
+
+    def counting(value):
+        made.append(value)
+        return real(value)
+
+    monkeypatch.setattr(sc, "broadcast", counting)
+    out = CQDBeam(model=TransE(), store=store, beam_size=5).eval_batch(
+        spark, QUERY_TYPES["3p"], inst
+    )
+    assert out.count() == 20
+    assert len(made) == 2

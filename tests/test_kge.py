@@ -290,3 +290,17 @@ def test_all_tails_out_of_range_ids_raise(spark, monkeypatch, sharded, h, r):
     )
     with pytest.raises(Exception, match="ValueError: [hr] ids outside"):
         score_all_tails_grouped_max(df, TransE(), store).collect()
+
+
+def test_store_dataframe_round_trip_is_exact(spark):
+    """to_dataframes -> from_dataframes returns the same matrices bit
+    for bit, including a relation width that differs from the entity
+    width."""
+    store = EmbeddingStore.xavier(37, 5, ent_dim=8, rel_dim=3, seed=11)
+    ent_df, rel_df = store.to_dataframes(spark)
+    assert ent_df.schema.simpleString() == "struct<id:bigint,vec:array<float>>"
+    assert ent_df.count() == 37 and rel_df.count() == 5
+    back = EmbeddingStore.from_dataframes(ent_df.repartition(3), rel_df)
+    for a, b in ((store.ent, back.ent), (store.rel, back.rel)):
+        assert b.dtype == np.float32
+        np.testing.assert_array_equal(a, b)

@@ -27,6 +27,7 @@ from knovexlite_spark.reasoner.train import (
     _log_sigmoid,
     _score_and_grads,
     grad_contributions,
+    sum_partials,
     train,
     train_step,
 )
@@ -59,14 +60,22 @@ def _chain_triples(spark):
     return spark.createDataFrame(rows, "h LONG, r LONG, t LONG")
 
 
+_M64 = (1 << 64) - 1
+
+
 def _numpy_negatives(h, r, t, n_ent, k, seed):
-    # replica of the kernel's deterministic per-triple sampling
+    # replica of the kernel's counter-based sampling in Python ints:
+    # negative j is splitmix64's j-th output seeded by the triple key
     key = (
-        np.int64(h) * np.int64(1000003)
-        ^ np.int64(r) * np.int64(998244353)
-        ^ np.int64(t) * np.int64(786433)
-    ) + np.int64(seed) * np.int64(2654435761)
-    return np.random.default_rng(np.uint64(key)).integers(0, n_ent, size=k)
+        (h * 1000003) ^ (r * 998244353) ^ (t * 786433)
+    ) + seed * 2654435761
+    out = []
+    for j in range(1, k + 1):
+        z = (key + j * 0x9E3779B97F4A7C15) & _M64
+        z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & _M64
+        z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & _M64
+        out.append((z ^ (z >> 31)) % n_ent)
+    return np.array(out, dtype=np.int64)
 
 
 def _numpy_loss(model, store, triples, gamma, k, seed):
@@ -99,19 +108,13 @@ def test_gradient_matches_finite_differences(spark, model):
     triples = [(r["h"], r["r"], r["t"]) for r in tri_df.collect()]
     gamma, k, seed = 2.0, 4, 3
 
-    agg = (
-        grad_contributions(tri_df, model, store, gamma=gamma, num_negatives=k, seed=seed)
-        .groupBy("kind", "id", "dim")
-        .agg(F.sum("val").alias("g"))
-        .collect()
-    )
-    g_ent = np.zeros_like(store.ent, dtype=np.float64)
-    g_rel = np.zeros_like(store.rel, dtype=np.float64)
-    for row in agg:
-        if row["kind"] == "e":
-            g_ent[row["id"], row["dim"]] = row["g"]
-        elif row["kind"] == "r":
-            g_rel[row["id"], row["dim"]] = row["g"]
+    parts = grad_contributions(
+        tri_df, model, store, gamma=gamma, num_negatives=k, seed=seed
+    ).toPandas()
+    g_ent, g_rel, _, n = sum_partials(parts, store)
+    assert n == len(triples)
+    # every row width follows its parameter (RotatE/RESCAL relations)
+    assert g_rel.shape == store.rel.shape
     g_ent /= len(triples)
     g_rel /= len(triples)
 
@@ -182,7 +185,13 @@ def test_training_improves_true_tail_ranking(spark):
         tri_df, model, store, epochs=15, lr=0.2, gamma=1.0, num_negatives=6, seed=2
     )
     assert mean_rank(trained) < before
-    assert losses[-1] < losses[0]
+    # each epoch draws new negatives, so the trace compares different
+    # objectives (epoch-to-epoch noise ~1e-2 on this toy KG exceeds the
+    # 15-epoch descent); compare on epoch 0's sample instead
+    after = train_step(
+        tri_df, model, trained, lr=0.0, gamma=1.0, num_negatives=6, seed=2
+    ).loss
+    assert after < losses[0]
 
 
 def test_complex_training_improves_true_tail_ranking(spark):
@@ -242,23 +251,61 @@ def test_gradients_invariant_to_partitioning(spark):
     base = _chain_triples(spark)
 
     def agg_of(df):
-        rows = (
-            grad_contributions(df, model, store, seed=9)
-            .groupBy("kind", "id", "dim")
-            .agg(F.sum("val").alias("g"))
-            .collect()
-        )
-        return {(r["kind"], r["id"], r["dim"]): r["g"] for r in rows}
+        parts = grad_contributions(df, model, store, seed=9).toPandas()
+        g_ent, g_rel, loss_sum, n = sum_partials(parts, store)
+        keys = set(zip(parts["kind"].tolist(), parts["id"].tolist()))
+        return keys, g_ent, g_rel, (loss_sum, n)
 
     # the SAMPLE is partition-invariant (negatives are a function of the
-    # triple, not the split), so every key must exist in both runs; the
-    # float SUM is only reassociated, so values agree to ~1e-12 relative
-    # (never bit-exactly — float addition is not associative)
+    # triple, not the split), so every touched id exists in both runs;
+    # the float sums are only reassociated, so values agree to ~1e-12
+    # relative (never bit-exactly — float addition is not associative)
     a = agg_of(base.repartition(1))
     b = agg_of(base.repartition(8))
-    assert a.keys() == b.keys()
-    for key in a:
-        assert a[key] == pytest.approx(b[key], rel=1e-9, abs=1e-12), key
+    assert a[0] == b[0]
+    for x, y in zip(a[1:], b[1:]):
+        np.testing.assert_allclose(x, y, rtol=1e-9, atol=1e-12)
+
+
+def test_partial_rows_bounded_by_touched_ids(spark):
+    """Each partition emits one row per touched entity and relation plus
+    one loss row — never one row per gradient scalar."""
+    store = _toy_store()
+    k, seed = 4, 3
+    tri_df = _chain_triples(spark).repartition(3)
+    triples = [(r["h"], r["r"], r["t"]) for r in tri_df.collect()]
+    touched = {h for h, _, _ in triples} | {t for _, _, t in triples}
+    for h, r, t in triples:
+        touched |= set(_numpy_negatives(h, r, t, N_ENT, k, seed).tolist())
+    n_rel = len({r for _, r, _ in triples})
+    n_parts = tri_df.rdd.getNumPartitions()
+    parts = (
+        grad_contributions(tri_df, TransE(p=2), store, num_negatives=k, seed=seed)
+        .withColumn("pid", F.spark_partition_id())
+        .toPandas()
+    )
+    assert len(parts) <= n_parts * (len(touched) + n_rel + 1)
+    # an id appears at most once per (partition, kind); one loss row each
+    assert not parts.duplicated(["pid", "kind", "id"]).any()
+    assert (parts["kind"] == 2).sum() == n_parts
+
+
+def test_grad_contributions_plan_has_no_exchange(spark):
+    df = grad_contributions(_chain_triples(spark), TransE(p=2), _toy_store())
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+
+
+def test_train_step_invariant_to_partitioning(spark):
+    store = _toy_store()
+    model = TransE(p=2)
+    base = _chain_triples(spark)
+    a = train_step(base.repartition(1), model, store, lr=0.1, num_negatives=4, seed=2)
+    b = train_step(base.repartition(8), model, store, lr=0.1, num_negatives=4, seed=2)
+    assert a.n_triples == b.n_triples
+    assert a.loss == pytest.approx(b.loss, rel=1e-9)
+    np.testing.assert_allclose(a.store.ent, b.store.ent, rtol=1e-9, atol=0)
+    np.testing.assert_allclose(a.store.rel, b.store.rel, rtol=1e-9, atol=0)
 
 
 def test_conve_training_improves_true_tail_ranking(spark):
