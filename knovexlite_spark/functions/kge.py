@@ -402,12 +402,17 @@ def _shard_offsets(store: EmbeddingStore) -> range:
     return range(0, max(n, 1), max(1, -(-n // n_shards)))
 
 
+def _is_whole(store: EmbeddingStore) -> bool:
+    """True when the entity matrix is broadcast whole (one shard)."""
+    return len(_shard_offsets(store)) == 1
+
+
 def broadcast_store(sc, store: EmbeddingStore) -> tuple:
     """The ``(entity, relation)`` broadcast pair that
     ``score_all_tails_grouped_max`` reads through its ``_bcast``
     argument.  The entity slot is ``None`` when the matrix is sharded:
     each shard job broadcasts only its own slice."""
-    b_ent = sc.broadcast(store.ent) if len(_shard_offsets(store)) == 1 else None
+    b_ent = sc.broadcast(store.ent) if _is_whole(store) else None
     return b_ent, sc.broadcast(store.rel)
 
 
@@ -448,8 +453,7 @@ def score_all_tails_grouped_max(
     """
     sc = df.sparkSession.sparkContext
     n_ent, n_rel = store.ent.shape[0], store.rel.shape[0]
-    offsets = _shard_offsets(store)
-    whole = len(offsets) == 1
+    whole = _is_whole(store)
     gcols = list(group_cols)
     schema = "t long, score double" + "".join(f", {c} long" for c in gcols)
 
@@ -503,6 +507,7 @@ def score_all_tails_grouped_max(
     # nondeterministic upstream) runs once
     withv = withv.localCheckpoint(eager=True)
     out: DataFrame | None = None
+    offsets = _shard_offsets(store)
     for lo in offsets:
         b_shard = sc.broadcast(store.ent[lo : lo + offsets.step])
         part = withv.mapInPandas(kernel(b_shard, b_rel, lo), schema=schema)

@@ -16,19 +16,25 @@ look on a cluster:
 2. each partition reduces its own gradients (the treeAggregate
    pattern): every batch is summed per distinct entity / relation id,
    and the partition's blocks are merged into one row per touched id
-   plus one loss row.  Nothing is shuffled.  Memory is bounded by
-   touched ids x dim per partition, never by degree, so a high-degree
-   entity at 100 TB costs one row per partition, not one per edge,
-3. the driver fetches the partials in one Arrow ``toPandas()``,
-   scatter-adds them in partition order (deterministic on a fixed
-   partitioning) and applies the update.
+   plus one loss row.  Nothing is shuffled.  Executor memory is bounded
+   by touched ids x dim per partition, never by degree, so a
+   high-degree entity at 100 TB costs one row per partition, not one
+   per edge,
+3. the driver fetches the partials in one ``toArrow()``, scatter-adds
+   them in partition order (deterministic on a fixed partitioning) and
+   applies the update.
 
 That is the parameter-server pattern: partitions exchange
 parameter-sized partials, the driver holds the (small) dense
-parameters.
+parameters.  The driver's fetch is one row of dim doubles per
+(partition, touched id): at most min(P x n_ent, triples x (2 + K))
+rows, not one per parameter.  With uniform negatives a partition of
+more than n_ent / K triples touches most entities, so the fetch tends
+to P x the entity matrix (in float64).  That bound is not measured
+beyond 4 partitions (SCALE.md "train_step at 6x").
 
 Loss: the standard margin logsigmoid objective with uniform negative
-tail corruption,
+tail corruption (t' drawn from the entities other than t),
 
     L = -log sigmoid(gamma + s(h,r,t))
         - (1/K) * sum_k log sigmoid(-gamma - s(h,r,t'_k))
@@ -47,6 +53,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from knovexlite_spark.functions.kge import (
@@ -289,10 +296,12 @@ def _splitmix64(x: np.ndarray) -> np.ndarray:
 def _negatives(
     hids: np.ndarray, rids: np.ndarray, tids: np.ndarray, n_ent: int, k: int, seed: int
 ) -> np.ndarray:
-    """``[B, k]`` corrupted tail ids: negative j of a triple is the j-th
-    splitmix64 output seeded by the triple's key, modulo ``n_ent``.  A
-    pure function of (seed, h, r, t, j), so partitioning and task
-    retries cannot change the sample."""
+    """``[B, k]`` corrupted tail ids, uniform over the entities other than
+    the triple's own tail (a "negative" equal to ``t`` would push the
+    positive's score down): negative j is the j-th splitmix64 output
+    seeded by the triple's key, modulo ``n_ent - 1``, with ids at or
+    above ``t`` moved up by one.  A pure function of (seed, h, r, t, j),
+    so partitioning and task retries cannot change the sample."""
     row_key = (
         hids * np.int64(1000003)
         ^ rids * np.int64(998244353)
@@ -301,7 +310,9 @@ def _negatives(
     with np.errstate(over="ignore"):
         steps = np.arange(1, k + 1, dtype=np.uint64) * _GOLDEN
         state = row_key.view(np.uint64)[:, None] + steps[None, :]
-    return (_splitmix64(state) % np.uint64(n_ent)).astype(np.int64)
+    neg = (_splitmix64(state) % np.uint64(max(n_ent - 1, 1))).astype(np.int64)
+    # a one-entity KG has nothing to corrupt to: its negative is t itself
+    return neg + ((neg >= tids[:, None]) & (n_ent > 1))
 
 
 def _sum_rows(ids: np.ndarray, rows: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -432,20 +443,24 @@ def grad_contributions(
 
 
 def sum_partials(
-    parts: pd.DataFrame, store: EmbeddingStore
+    parts: pa.Table, store: EmbeddingStore
 ) -> tuple[np.ndarray, np.ndarray, float, float]:
-    """Scatter-add ``grad_contributions`` partials, in row order, into
-    dense ``(g_ent, g_rel, loss_sum, triple_count)``.  On a fixed
-    partitioning the order is fixed, so the sums repeat bit for bit."""
-    kind = parts["kind"].to_numpy()
-    ids = parts["id"].to_numpy(np.int64)
-    g = parts["g"].to_numpy()
+    """Scatter-add ``grad_contributions`` partials (as fetched by
+    ``toArrow()``), in row order, into dense ``(g_ent, g_rel, loss_sum,
+    triple_count)``.  Each kind's ``g`` lists are flattened into one
+    ``[rows, width]`` array; no Python object is built per row.  On a
+    fixed partitioning the order is fixed, so the sums repeat bit for
+    bit."""
+    kind = parts.column("kind").to_numpy()
+    ids = parts.column("id").to_numpy()
+    g = parts.column("g").combine_chunks()
 
     def scatter(k: int, shape: tuple[int, int]) -> np.ndarray:
         acc = np.zeros(shape, dtype=np.float64)
-        m = kind == k
-        if m.any():
-            np.add.at(acc, ids[m], np.stack(g[m]))
+        rows = np.flatnonzero(kind == k)
+        if len(rows):
+            vals = g.take(rows).flatten().to_numpy(zero_copy_only=False)
+            np.add.at(acc, ids[rows], vals.reshape(len(rows), shape[1]))
         return acc
 
     loss_sum, n = scatter(_LOSS, (1, 2))[0]
@@ -478,9 +493,9 @@ def train_step(
             num_negatives=num_negatives,
             seed=seed,
             _bcast=(b_ent, b_rel),
-        ).toPandas()
+        ).toArrow()
     finally:
-        # the job is done once toPandas() returns; a multi-epoch train()
+        # the job is done once toArrow() returns; a multi-epoch train()
         # would otherwise leak one model-sized broadcast pair per epoch
         b_ent.destroy()
         b_rel.destroy()
