@@ -29,8 +29,9 @@ ceiling ``ENT_BROADCAST_MAX_BYTES``.
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -414,6 +415,26 @@ def broadcast_store(sc, store: EmbeddingStore) -> tuple:
     each shard job broadcasts only its own slice."""
     b_ent = sc.broadcast(store.ent) if _is_whole(store) else None
     return b_ent, sc.broadcast(store.rel)
+
+
+class BroadcastPair:
+    """A reasoner's ``(entity, relation)`` broadcast pair, made by
+    ``make(sc)`` on first use and held for that SparkContext.  Every
+    lazy frame the reasoner returns reads the same pair, so it must
+    outlive any one call; a new context (the old one stopped, taking its
+    broadcasts with it) gets a new pair.  Safe to share across threads."""
+
+    def __init__(self, make: Callable[[object], tuple]):
+        self._make = make
+        self._lock = threading.Lock()
+        self._sc = None
+        self._pair: tuple | None = None
+
+    def get(self, sc) -> tuple:
+        with self._lock:
+            if self._sc is not sc:
+                self._pair, self._sc = self._make(sc), sc
+            return self._pair
 
 
 def score_all_tails_grouped_max(

@@ -365,7 +365,6 @@ def _lmpnn_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     The integer-exact twin ``lmpnn_exactcheck`` (above) still covers
     R3-R7 message arithmetic exactly; this gate closes the float
     cosine/readout path that was rows-only through round 4."""
-    import pandas as pd
     from pyspark.sql import Window
 
     from knovexlite_spark.functions.kge import EmbeddingStore, TransE
@@ -409,10 +408,11 @@ def _lmpnn_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # entity embeddings as a frame (t, evec) — the same matrix the
     # kernel broadcasts, here joined relationally for the recompute
-    ent_pdf = pd.DataFrame(
-        {"t": range(store.ent.shape[0]), "evec": list(store.ent.astype("float64"))}
+    ent_vecs, _ = store.to_dataframes(spark)
+    ent_df = ent_vecs.select(
+        F.col("id").alias("t"),
+        F.transform("vec", lambda x: x.cast("double")).alias("evec"),
     )
-    ent_df = spark.createDataFrame(ent_pdf)
 
     def _dot(a, b):
         return F.aggregate(

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from knovexlite_spark.functions.kge import (
+    BroadcastPair,
     EmbeddingStore,
     KGEModel,
     broadcast_store,
@@ -73,6 +74,11 @@ class CQDBeam:
     store: EmbeddingStore
     beam_size: int = 10
 
+    def __post_init__(self):
+        # one broadcast pair per reasoner and SparkContext serves every
+        # level of every disjunct of every eval_batch call
+        self._bcast = BroadcastPair(lambda sc: broadcast_store(sc, self.store))
+
     # -- batched evaluation --------------------------------------------------
 
     def eval_batch(
@@ -89,9 +95,7 @@ class CQDBeam:
         # not cached: the result is lazy, so nothing could unpersist a
         # cache taken here, and the frame is query-batch-sized
         inst = instances.select("query_id", "bindings")
-        # one broadcast pair serves every level of every disjunct; the
-        # result is lazy, so the pair must outlive this call
-        bcast = broadcast_store(spark.sparkContext, self.store)
+        bcast = self._bcast.get(spark.sparkContext)
         frames = [
             self._clause_scores(spark, clause, inst, free_var, bcast)
             for clause in dnf_conjuncts(parse_lstr(lstr))

@@ -10,16 +10,21 @@ Reference parity: /root/reference/knovex/reasoner/lmpnn.py —
   relu(scale*(x@E^T)+bias) @ E  (lmpnn.py:31-39; the reference's
   LMPLayer/set_nbp attribute bug means only bias_only works — we
   implement both, defaulting to bias_only)
-- T = max(num_vars) rounds; readout = free variable's state at round
-  num_vars-1 (lmpnn.py:144-189)
+- a clause graph with num_vars variables runs num_vars rounds; readout
+  = its free variable's final state (lmpnn.py:144-189)
 - scores: cosine similarity vs all entities (lmpnn.py:191-216)
 
-Spark-first: the unit of batching is the DataFrame — node states are
-``(query_id, node, vec ARRAY<FLOAT>)`` rows for ALL queries at once;
-each round is one join + one Arrow-batched kernel + one grouped vector
-sum.  The entity matrix rides a broadcast into the update/score kernels;
-per-round ``localCheckpoint`` truncates the iterative lineage
-(SURVEY §4.2/§7 hard parts).
+Spark-first: a query graph has a handful of nodes and every graph is
+independent, so ``forward`` is ONE grouped kernel.  One groupBy of the
+unioned node and edge frames makes a row per ``(query_id, clause_id)``
+graph holding its node and edge lists; one Arrow kernel takes a batch
+of graph rows, runs each graph's own rounds in NumPy over the batch's
+disjoint union (float32 states and messages, float64 sums over edges
+in a fixed order) and emits only the free nodes' readouts.  One
+shuffle of the tiny node/edge rows, no per-round join, shuffle or
+checkpoint, and no per-graph Python call.  The entity and relation
+matrices ride one broadcast pair per reasoner and SparkContext, shared
+by ``forward`` and the all-entity cosine kernel.
 """
 
 from __future__ import annotations
@@ -29,10 +34,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from knovexlite_spark.functions.kge import EmbeddingStore, KGEModel
+from knovexlite_spark.functions.kge import MAX_FLUX, BroadcastPair, EmbeddingStore, KGEModel
 from knovexlite_spark.language.ast import TermType
 from knovexlite_spark.language.normalize import dnf_conjuncts
 from knovexlite_spark.language.parser import parse_lstr
@@ -84,6 +90,15 @@ def build_query_graph_frames(
     return nodes, edges
 
 
+def _exploded(batch: pa.RecordBatch, col: str) -> pd.DataFrame:
+    """One row per element of the list-of-struct column ``col``, with
+    ``g`` = the batch row it came from."""
+    lists = batch.column(col)
+    out = pa.RecordBatch.from_struct_array(lists.flatten()).to_pandas()
+    out["g"] = lists.value_parent_indices().to_numpy()
+    return out
+
+
 @dataclass
 class UpdateMLP:
     """The LMPLayer update network (reference layers/mlp.py:3-18 —
@@ -123,36 +138,58 @@ class UpdateMLP:
         return out
 
     def to_dataframes(self, spark: SparkSession) -> DataFrame:
-        """(layer, idx, vec) rows; idx row -1 is the bias vector."""
-        rows = []
-        for li, (w, b) in enumerate(zip(self.weights, self.biases)):
-            rows.append((li, -1, b.tolist()))
-            rows.extend((li, ri, w[ri].tolist()) for ri in range(w.shape[0]))
-        return spark.createDataFrame(rows, schema="layer LONG, idx LONG, vec ARRAY<FLOAT>")
+        """(layer, idx, vec) rows; idx row -1 is the bias vector.  Built
+        as one Arrow table from the matrices, no Python object per row."""
+        blocks = [np.vstack([b[None, :], w]) for w, b in zip(self.weights, self.biases)]
+        widths = np.concatenate([np.full(len(m), m.shape[1]) for m in blocks])
+        vec = pa.ListArray.from_arrays(
+            pa.array(np.concatenate([[0], np.cumsum(widths)]).astype(np.int32)),
+            pa.array(np.concatenate([m.ravel() for m in blocks]).astype(np.float32)),
+        )
+        tbl = pa.table(
+            {
+                "layer": np.concatenate([np.full(len(m), li) for li, m in enumerate(blocks)]),
+                "idx": np.concatenate([np.arange(-1, len(m) - 1) for m in blocks]),
+                "vec": vec,
+            }
+        )
+        return spark.createDataFrame(tbl, schema="layer LONG, idx LONG, vec ARRAY<FLOAT>")
 
     @classmethod
     def from_dataframes(cls, df: DataFrame) -> "UpdateMLP":
-        rows = df.select("layer", "idx", "vec").collect()
-        if not rows:
+        """Collect the (layer, idx, vec) frame as one Arrow table and
+        slice each layer's matrix out of the flat values."""
+        tbl = df.select("layer", "idx", "vec").toArrow()
+        if tbl.num_rows == 0:
             raise ValueError("UpdateMLP checkpoint is empty")
-        n_layers = max(r["layer"] for r in rows) + 1
+        layer = tbl.column("layer").to_numpy()
+        idx = tbl.column("idx").to_numpy()
+        vec = tbl.column("vec").combine_chunks()
+        offsets = vec.offsets.to_numpy()
+        starts, lens = offsets[:-1], np.diff(offsets)
+        vals = vec.values.to_numpy(zero_copy_only=False)
         ws, bs = [], []
-        for li in range(n_layers):
-            lrows = [r for r in rows if r["layer"] == li]
-            bias = [r for r in lrows if r["idx"] == -1]
-            wrows = sorted((r for r in lrows if r["idx"] >= 0), key=lambda r: r["idx"])
-            if len(bias) != 1 or not wrows:
+        for li in range(int(layer.max()) + 1):
+            lrows = np.flatnonzero(layer == li)
+            bias = lrows[idx[lrows] == -1]
+            wrows = lrows[idx[lrows] >= 0]
+            wrows = wrows[np.argsort(idx[wrows], kind="stable")]
+            if len(bias) != 1 or not len(wrows):
                 raise ValueError(
                     f"UpdateMLP checkpoint layer {li} is malformed: "
                     f"{len(bias)} bias rows (expected 1), {len(wrows)} weight rows"
                 )
-            if [r["idx"] for r in wrows] != list(range(len(wrows))):
+            if not np.array_equal(idx[wrows], np.arange(len(wrows))):
                 raise ValueError(
                     f"UpdateMLP checkpoint layer {li} has missing/duplicate "
                     f"weight row indices"
                 )
-            bs.append(np.asarray(bias[0]["vec"], dtype=np.float32))
-            ws.append(np.stack([np.asarray(r["vec"], dtype=np.float32) for r in wrows]))
+            rows = np.concatenate([bias, wrows])
+            if len(set(lens[rows])) != 1:
+                raise ValueError(f"UpdateMLP checkpoint layer {li} has ragged rows")
+            mat = vals[starts[rows][:, None] + np.arange(lens[bias[0]])].astype(np.float32)
+            bs.append(mat[0])
+            ws.append(mat[1:])
         return cls(ws, bs)
 
 
@@ -199,136 +236,90 @@ class LMPNN:
                 "MLP); pass UpdateMLP.xavier(...) or load weights via "
                 "UpdateMLP.from_dataframes"
             )
-
-    # -- rounds ------------------------------------------------------------
-
-    def _init_states(self, nodes: DataFrame) -> DataFrame:
-        b_ent = nodes.sparkSession.sparkContext.broadcast(self.store.ent)
-        var_vec = self.var_vec
-
-        def init(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ent = b_ent.value
-            for pdf in it:
-                vecs = []
-                for ent_id, ttype in zip(pdf["ent_id"], pdf["term_type"]):
-                    if ttype == int(TermType.CONSTANT):
-                        vecs.append(ent[int(ent_id)].tolist())
-                    else:
-                        vecs.append(var_vec.tolist())
-                yield pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"],
-                        "clause_id": pdf["clause_id"],
-                        "node": pdf["node"],
-                        "vec": vecs,
-                    }
-                )
-
-        return nodes.mapInPandas(
-            init, schema="query_id long, clause_id long, node string, vec array<float>"
-        )
-
-    def _message_and_update(self, states: DataFrame, edges: DataFrame) -> DataFrame:
-        """One propagation round for every query at once."""
-        spark = states.sparkSession
-        b_rel = spark.sparkContext.broadcast(self.store.rel)
-        b_ent = spark.sparkContext.broadcast(self.store.ent)
-        model, bias, scale, bias_only = self.model, self.bias, self.scale, self.bias_only
-        update_mlp, self_coef = self.update_mlp, self.self_coef
-
-        msgs_in = edges.join(
-            states.withColumnRenamed("node", "src").withColumnRenamed("vec", "x_src"),
-            ["query_id", "clause_id", "src"],
-        )
-
-        def message(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            rel = b_rel.value
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                x = np.stack(pdf["x_src"].to_numpy())
-                r = rel[pdf["rel"].to_numpy()]
-                est = model.estimate_tail(x, r)
-                coef = (1.0 - 2.0 * pdf["neg"].to_numpy()).astype(np.float32)
-                est = est * coef[:, None]
-                yield pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"],
-                        "clause_id": pdf["clause_id"],
-                        "node": pdf["dst"],
-                        "msg": list(est.astype(np.float32)),
-                    }
-                )
-
-        msgs = msgs_in.mapInPandas(
-            message, schema="query_id long, clause_id long, node string, msg array<float>"
-        )
-        # sum-aggregate incoming messages: elementwise vector sum (R4)
-        agg = msgs.groupBy("query_id", "clause_id", "node").agg(
-            F.aggregate(
-                F.collect_list("msg"),
-                F.array_repeat(F.lit(0.0), self.store.ent.shape[1]),
-                lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b),
-            ).alias("aggr")
-        )
-
-        joined = states.join(agg, ["query_id", "clause_id", "node"], "left")
-
-        def update(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ent = b_ent.value
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                x = np.stack(pdf["vec"].to_numpy())
-                aggr = np.stack(
-                    [
-                        np.zeros(x.shape[1], dtype=np.float32) if m is None else np.asarray(m)
-                        for m in pdf["aggr"].to_numpy()
-                    ]
-                )
-                h = self_coef * x + aggr  # lmpnn.py:55-57 (coef 0.1)
-                if bias_only:
-                    es = h @ ent.T * scale + bias  # update_net (lmpnn.py:31-39)
-                    np.maximum(es, 0.0, out=es)
-                    out = es @ ent
-                else:
-                    out = update_mlp.apply(h)  # LMPLayer MLP (mlp.py:3-18)
-                yield pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"],
-                        "clause_id": pdf["clause_id"],
-                        "node": pdf["node"],
-                        "vec": list(out.astype(np.float32)),
-                    }
-                )
-
-        return joined.mapInPandas(
-            update, schema="query_id long, clause_id long, node string, vec array<float>"
+        # the update net multiplies by the whole entity matrix, so the
+        # pair is never sharded
+        self._bcast = BroadcastPair(
+            lambda sc: (sc.broadcast(self.store.ent), sc.broadcast(self.store.rel))
         )
 
     # -- full evaluation ---------------------------------------------------
 
     def forward(self, nodes: DataFrame, edges: DataFrame) -> DataFrame:
-        """Run T = max(num_vars) rounds; return the free variable's state
-        at round num_vars-1 per (query, clause): (query_id, clause_id,
-        vec)."""
-        t_max = nodes.agg(F.max("num_vars")).collect()[0][0] or 1
-        states = self._init_states(nodes).localCheckpoint()
-        per_round: list[DataFrame] = []
-        for _ in range(int(t_max)):
-            states = self._message_and_update(states, edges).localCheckpoint()
-            per_round.append(states)
+        """Run each (query, clause) graph's own ``num_vars`` rounds and
+        return its free variable's final state: (query_id, clause_id,
+        vec).  Lazy: no Spark job runs until the result is consumed."""
+        b_ent, b_rel = self._bcast.get(nodes.sparkSession.sparkContext)
+        model, var_vec, self_coef = self.model, self.var_vec, self.self_coef
+        bias, scale, bias_only, update_mlp = self.bias, self.scale, self.bias_only, self.update_mlp
 
-        free = nodes.filter(F.col("term_type") == int(TermType.FREE)).select(
-            "query_id", "clause_id", "node", (F.col("num_vars") - 1).alias("round")
+        def update(h: np.ndarray, ent: np.ndarray) -> np.ndarray:
+            if not bias_only:
+                return update_mlp.apply(h)  # LMPLayer MLP (mlp.py:3-18)
+            # update_net (lmpnn.py:31-39), MAX_FLUX node-entity scores at
+            # a time
+            out = np.empty(h.shape)
+            step = max(1, MAX_FLUX // ent.shape[0])
+            for lo in range(0, len(h), step):
+                es = h[lo : lo + step] @ ent.T * scale + bias
+                np.maximum(es, 0.0, out=es)
+                out[lo : lo + step] = es @ ent
+            return out
+
+        def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            ent, rel = b_ent.value, b_rel.value
+            for batch in batches:
+                # fixed node and edge order within each graph: a result
+                # never depends on how the rows arrived
+                nd = _exploded(batch, "nodes").sort_values(["g", "node"])
+                ed = _exploded(batch, "edges").sort_values(["g", "src", "dst", "rel", "neg"])
+                const = nd["term_type"].to_numpy() == int(TermType.CONSTANT)
+                ent_ids = nd["ent_id"].fillna(0).to_numpy(np.int64)
+                x = np.where(const[:, None], ent[ent_ids], var_vec)
+                names = pd.MultiIndex.from_frame(nd[["g", "node"]])
+                src = names.get_indexer(pd.MultiIndex.from_frame(ed[["g", "src"]]))
+                dst = names.get_indexer(pd.MultiIndex.from_frame(ed[["g", "dst"]]))
+                r = rel[ed["rel"].to_numpy()]
+                sign = (1.0 - 2.0 * ed["neg"].to_numpy()).astype(np.float32)[:, None]
+                g = nd["g"].to_numpy()
+                rounds = batch.column("num_vars").to_numpy()[g]
+                free = nd["term_type"].to_numpy() == int(TermType.FREE)
+                for t in range(1, rounds.max(initial=0) + 1):
+                    # a graph's states stop changing after its own rounds
+                    live = rounds >= t
+                    msg = (model.estimate_tail(x[src], r) * sign).astype(np.float32)
+                    aggr = np.zeros(x.shape)
+                    np.add.at(aggr, dst, msg)  # sum of incoming messages (R4)
+                    h = self_coef * x[live] + aggr[live]  # lmpnn.py:55-57 (coef 0.1)
+                    x[live] = update(h, ent).astype(np.float32)
+                g, vec = g[free], x[free]
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        batch.column("query_id").take(g),
+                        batch.column("clause_id").take(g),
+                        pa.ListArray.from_arrays(
+                            pa.array(np.arange(len(vec) + 1, dtype=np.int32) * vec.shape[1]),
+                            pa.array(vec.ravel()),
+                        ),
+                    ],
+                    names=["query_id", "clause_id", "vec"],
+                )
+
+        # one row per graph: its node and edge lists side by side
+        keys = ["query_id", "clause_id"]
+        graphs = (
+            nodes.select(*keys, "num_vars", F.struct("node", "ent_id", "term_type").alias("n"))
+            .unionByName(
+                edges.select(*keys, F.struct("src", "dst", "rel", "neg").alias("e")),
+                allowMissingColumns=True,
+            )
+            .groupBy(*keys)
+            .agg(
+                F.collect_list("n").alias("nodes"),
+                F.collect_list("e").alias("edges"),
+                F.max("num_vars").alias("num_vars"),
+            )
         )
-        stacked = None
-        for i, st in enumerate(per_round):
-            part = st.withColumn("round", F.lit(i))
-            stacked = part if stacked is None else stacked.unionByName(part)
-        return free.join(stacked, ["query_id", "clause_id", "node", "round"]).select(
-            "query_id", "clause_id", "vec"
-        )
+        return graphs.mapInArrow(run, schema="query_id long, clause_id long, vec array<float>")
 
     def eval_all_entity_scores(self, nodes: DataFrame, edges: DataFrame) -> DataFrame:
         """R7: cosine of the readout vs every entity; disjunctive clauses
@@ -341,7 +332,7 @@ class LMPNN:
         readout frame (query_id, clause_id, vec) can derive BOTH the
         kernel scores and an independent recomputation from one forward
         pass (the lmpnn_scores verdict gate does exactly this)."""
-        b_ent = femb.sparkSession.sparkContext.broadcast(self.store.ent)
+        b_ent, _ = self._bcast.get(femb.sparkSession.sparkContext)
 
         def cos(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             ent = b_ent.value

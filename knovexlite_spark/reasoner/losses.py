@@ -66,7 +66,8 @@ def nce_loss(
     seed: int = 42,
 ) -> float:
     """R8: one positive per query (deterministic min-id choice instead of
-    the reference's random.choice) + uniform negatives;
+    the reference's random.choice) + uniform negatives, drawn by hashing
+    (query_id, k, seed) into [0, num_entities);
     loss = mean(-pos/T + logsumexp([pos, negs]/T)).
 
     Operates on any dense score frame (the reference computes cosine
@@ -84,8 +85,11 @@ def nce_loss(
                 F.col("id").alias("k")
             )
         )
+        # negative k of a query is a hash of (query_id, k, seed), so the
+        # sample never depends on how the frame is partitioned
         .withColumn(
-            "t", (F.floor(F.rand(seed) * num_entities)).cast("long")
+            "t",
+            F.pmod(F.xxhash64("query_id", "k", F.lit(seed)), F.lit(num_entities)),
         )
         .join(scores, ["query_id", "t"])
         .select("query_id", F.col("score").alias("neg"))

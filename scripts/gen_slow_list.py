@@ -38,6 +38,7 @@ ALWAYS_RUN_FILES = {
     "test_efo_exact.py",
     "test_kge.py",
     "test_lmpnn.py",
+    "test_losses.py",
     "test_metric.py",
     "test_qaa_pipeline.py",
     "test_train.py",

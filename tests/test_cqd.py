@@ -150,3 +150,27 @@ def test_store_broadcast_once_per_eval_batch(spark, monkeypatch):
     )
     assert out.count() == 20
     assert len(made) == 2
+
+
+def test_store_broadcast_once_per_reasoner(spark, monkeypatch):
+    """Repeated eval_batch calls on one CQDBeam reuse its broadcast
+    pair: 2 broadcasts in total, not 2 per call."""
+    from knovexlite_spark.functions.kge import EmbeddingStore, TransE
+
+    store = EmbeddingStore.xavier(20, 4, ent_dim=8, seed=3)
+    inst = spark.createDataFrame(
+        [(0, {"r1": 0, "r2": 2, "s1": 1})], "query_id long, bindings map<string,long>"
+    )
+    sc = spark.sparkContext
+    made = []
+    real = sc.broadcast
+
+    def counting(value):
+        made.append(value)
+        return real(value)
+
+    monkeypatch.setattr(sc, "broadcast", counting)
+    cqd = CQDBeam(model=TransE(), store=store, beam_size=5)
+    for lstr in (QUERY_TYPES["2p"], QUERY_TYPES["1p"]):
+        assert cqd.eval_batch(spark, lstr, inst).count() == 20
+    assert len(made) == 2

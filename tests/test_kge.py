@@ -304,3 +304,41 @@ def test_store_dataframe_round_trip_is_exact(spark):
     for a, b in ((store.ent, back.ent), (store.rel, back.rel)):
         assert b.dtype == np.float32
         np.testing.assert_array_equal(a, b)
+
+
+def test_broadcast_pair_made_once_per_context():
+    """Concurrent first calls share one pair; a new context gets a new
+    one."""
+    import sys
+    import threading
+    import time
+
+    from knovexlite_spark.functions.kge import BroadcastPair
+
+    made = []
+
+    def make(sc):
+        time.sleep(0.01)  # widen the check-then-act window
+        made.append(sc)
+        return (object(), object())
+
+    pair = BroadcastPair(make)
+    ctx_a, ctx_b = object(), object()
+    got = []
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=lambda: got.append(pair.get(ctx_a))) for _ in range(16)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert made == [ctx_a] and len(got) == 16
+    assert all(p is got[0] for p in got)
+    assert pair.get(ctx_b) is not got[0] and made == [ctx_a, ctx_b]
+    assert pair.get(ctx_b) is pair.get(ctx_b) and len(made) == 2

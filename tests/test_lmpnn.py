@@ -99,6 +99,23 @@ def test_mlp_weights_roundtrip_through_checkpoint(spark):
     np.testing.assert_allclose(mlp.apply(x), back.apply(x), rtol=1e-6)
 
 
+def test_mlp_checkpoint_rejects_malformed_layers(spark):
+    import pytest
+
+    from knovexlite_spark.reasoner.lmpnn import UpdateMLP
+
+    schema = "layer LONG, idx LONG, vec ARRAY<FLOAT>"
+    cases = {
+        "0 bias rows": [(0, 0, [1.0, 2.0])],
+        "missing/duplicate": [(0, -1, [1.0, 2.0]), (0, 0, [1.0, 2.0]), (0, 2, [1.0, 2.0])],
+        "ragged": [(0, -1, [1.0, 2.0]), (0, 0, [1.0])],
+        "empty": [],
+    }
+    for msg, rows in cases.items():
+        with pytest.raises(ValueError, match=msg):
+            UpdateMLP.from_dataframes(spark.createDataFrame(rows, schema))
+
+
 def test_lmpnn_exactcheck_oracle_green(spark):
     """The integer-exact LMPNN gate (R3-R7 machinery on a small-integer
     store, self_coef=1, dot readout) must hash-match the DuckDB 2-round
@@ -127,3 +144,115 @@ def test_lmpnn_scores_shape(spark):
     # the float kernel's cosine matches the float64 recomputation and
     # the top-20 really beats the rest of the dense score frame
     assert all(r["cos_ok"] == 1 and r["top_ok"] == 1 for r in rows)
+
+
+# --- the per-graph forward kernel -------------------------------------------
+
+# (src, dst, relation symbol, negated) per atom, one list per DNF clause
+GRAPHS = {
+    "r1(s1,f)": [[("s1", "f", "r1", 0)]],
+    "r1(s1,e1)&r2(e1,f)": [[("s1", "e1", "r1", 0), ("e1", "f", "r2", 0)]],
+    "r1(s1,f)&!r2(s2,f)": [[("s1", "f", "r1", 0), ("s2", "f", "r2", 1)]],
+    "(r1(s1,e1)|r2(s2,e1))&r3(e1,f)": [
+        [("s1", "e1", "r1", 0), ("e1", "f", "r3", 0)],
+        [("s2", "e1", "r2", 0), ("e1", "f", "r3", 0)],
+    ],
+}
+BINDINGS = {"r1": 0, "r2": 2, "r3": 1, "s1": 3, "s2": 7}
+
+
+def _numpy_readout(atoms, b, lm):
+    """The free node after num_vars rounds, one node at a time: each
+    node sums (x_src + r) * (1 - 2*neg) over both directions of every
+    atom, then h = 0.1*x + sum and x' = relu(h @ E^T) @ E (or the MLP)."""
+    ent, rel = lm.store.ent, lm.store.rel
+    names = {n for a in atoms for n in a[:2]}
+    x = {n: ent[b[n]] if n.startswith("s") else lm.var_vec for n in names}
+    edges = [(s, d, b[r], neg) for s, d, r, neg in atoms]
+    edges += [(d, s, b[r] ^ 1, neg) for s, d, r, neg in atoms]
+    for _ in range(sum(1 for n in names if not n.startswith("s"))):
+        aggr = {n: np.zeros(ent.shape[1]) for n in names}
+        for s, d, r, neg in edges:
+            aggr[d] += ((x[s] + rel[r]) * (1 - 2 * neg)).astype(np.float32)
+        new = {}
+        for n in names:
+            h = 0.1 * x[n] + aggr[n]
+            if lm.bias_only:
+                out = np.maximum(h @ ent.T, 0.0) @ ent
+            else:
+                out = lm.update_mlp.apply(h)
+            new[n] = out.astype(np.float32)
+        x = new
+    return x["f"]
+
+
+def _readouts(lm, nodes, edges):
+    rows = lm.forward(nodes, edges).collect()
+    return {(r["query_id"], r["clause_id"]): np.asarray(r["vec"], np.float32) for r in rows}
+
+
+def test_forward_matches_numpy_replica(spark):
+    from knovexlite_spark.reasoner.lmpnn import UpdateMLP
+
+    store = EmbeddingStore.xavier(N, 4, D, seed=5)
+    lstrs = list(GRAPHS)
+    nodes, edges = build_query_graph_frames(
+        spark, [(q, lstr, BINDINGS) for q, lstr in enumerate(lstrs)]
+    )
+    mlp = UpdateMLP.xavier(D, hidden=8, num_hidden_layers=1, seed=11)
+    for lm in (
+        LMPNN(model=TransE(), store=store),
+        LMPNN(model=TransE(), store=store, bias_only=False, update_mlp=mlp),
+    ):
+        got = _readouts(lm, nodes, edges)
+        assert set(got) == {
+            (q, c) for q, lstr in enumerate(lstrs) for c in range(len(GRAPHS[lstr]))
+        }
+        for q, lstr in enumerate(lstrs):
+            for c, atoms in enumerate(GRAPHS[lstr]):
+                want = _numpy_readout(atoms, BINDINGS, lm)
+                np.testing.assert_allclose(got[(q, c)], want, rtol=0, atol=1e-6)
+
+
+def test_forward_invariant_to_partitioning(spark):
+    store = EmbeddingStore.xavier(N, 4, D, seed=5)
+    inst = [(q, lstr, BINDINGS) for q, lstr in enumerate(list(GRAPHS) * 3)]
+    nodes, edges = build_query_graph_frames(spark, inst)
+    lm = LMPNN(model=TransE(), store=store)
+    one = _readouts(lm, nodes.repartition(1), edges.repartition(1))
+    eight = _readouts(lm, nodes.repartition(8), edges.repartition(8))
+    assert one.keys() == eight.keys()
+    for k in one:
+        np.testing.assert_array_equal(one[k], eight[k])
+
+
+def test_forward_is_lazy(spark):
+    """forward() only builds a plan: no Spark job runs until the readout
+    is consumed."""
+    sc = spark.sparkContext
+    lm, nodes, edges = _setup(spark, [(0, "r1(s1,e1)&r2(e1,f)", BINDINGS)])
+    sc.setJobGroup("lmpnn-forward-lazy", "forward laziness probe")
+    try:
+        out = lm.forward(nodes, edges)
+        assert sc.statusTracker().getJobIdsForGroup("lmpnn-forward-lazy") == []
+        assert out.count() == 1
+        assert sc.statusTracker().getJobIdsForGroup("lmpnn-forward-lazy")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_store_broadcast_once_per_reasoner(spark, monkeypatch):
+    """forward and scores_from_readout share the reasoner's one pair."""
+    lm, nodes, edges = _setup(spark, [(0, "r1(s1,e1)&r2(e1,f)", BINDINGS)])
+    sc = spark.sparkContext
+    made = []
+    real = sc.broadcast
+
+    def counting(value):
+        made.append(value)
+        return real(value)
+
+    monkeypatch.setattr(sc, "broadcast", counting)
+    assert lm.scores_from_readout(lm.forward(nodes, edges)).count() == N
+    assert len(made) == 2

@@ -1,6 +1,7 @@
 """Loss diagnostics (R2/R8/R9) vs NumPy reference computations."""
 
 import numpy as np
+import pytest
 
 from knovexlite_spark.reasoner.losses import bce_loss, nce_loss, softmax_loss
 
@@ -46,3 +47,31 @@ def test_nce_finite_and_bounded(spark):
     loss = nce_loss(sdf, adf, num_entities=N, negative_sample_size=8)
     # -pos/T + logsumexp >= 0 always (pos is inside the logsumexp)
     assert np.isfinite(loss) and loss >= 0.0
+
+
+def test_nce_invariant_to_partitioning(spark):
+    """The negatives are a function of (query_id, k, seed), so the loss
+    is the same however the score frame is partitioned or shuffled."""
+    rng = np.random.default_rng(5)
+    q, n = 40, 50
+    raw = rng.normal(size=(q, n))
+    sdf = spark.createDataFrame(
+        [(i, t, float(raw[i, t])) for i in range(q) for t in range(n)],
+        "query_id long, t long, score double",
+    )
+    adf = spark.createDataFrame(
+        [(i, int(t)) for i in range(q) for t in rng.choice(n, size=3, replace=False)],
+        "query_id long, t long",
+    )
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    losses = []
+    try:
+        for parts in (1, 3, 8):
+            spark.conf.set(key, str(parts))
+            losses.append(nce_loss(sdf, adf, num_entities=n))
+    finally:
+        spark.conf.set(key, old)
+    losses.append(nce_loss(sdf.repartition(5), adf, num_entities=n))
+    for loss in losses[1:]:
+        assert loss == pytest.approx(losses[0], rel=1e-12, abs=0), losses

@@ -184,11 +184,14 @@ def test_training_improves_true_tail_ranking(spark):
         return float(np.mean(ranks))
 
     before = mean_rank(store)
+    # one fixed negative sample (epoch 0's) for both stores
+    initial_loss = _numpy_loss(model, store, triples, 1.0, 6, 2)
     trained, losses = train(
         tri_df, model, store, epochs=15, lr=0.2, gamma=1.0, num_negatives=6, seed=2
     )
     assert mean_rank(trained) < before
     assert losses[-1] < losses[0]
+    assert _numpy_loss(model, trained, triples, 1.0, 6, 2) < initial_loss
 
 
 def test_complex_training_improves_true_tail_ranking(spark):
@@ -207,11 +210,14 @@ def test_complex_training_improves_true_tail_ranking(spark):
         return float(np.mean(ranks))
 
     before = mean_rank(store)
+    # one fixed negative sample (epoch 0's) for both stores
+    initial_loss = _numpy_loss(model, store, triples, 1.0, 6, 4)
     trained, losses = train(
         tri_df, model, store, epochs=15, lr=0.2, gamma=1.0, num_negatives=6, seed=4
     )
     assert mean_rank(trained) < before
     assert losses[-1] < losses[0]
+    assert _numpy_loss(model, trained, triples, 1.0, 6, 4) < initial_loss
 
 
 def test_training_converges_on_bridge_kg(spark):
@@ -337,8 +343,11 @@ def test_conve_training_improves_true_tail_ranking(spark):
         return float(np.mean(ranks))
 
     before = mean_rank(store)
+    # one fixed negative sample (epoch 0's) for both stores
+    initial_loss = _numpy_loss(model, store, triples, 1.0, 6, 6)
     trained, losses = train(
         tri_df, model, store, epochs=15, lr=0.1, gamma=1.0, num_negatives=6, seed=6
     )
     assert mean_rank(trained) < before
     assert losses[-1] < losses[0]
+    assert _numpy_loss(model, trained, triples, 1.0, 6, 6) < initial_loss
