@@ -387,7 +387,11 @@ def score_triples(
 
 def _check_ids(ids: np.ndarray, size: int, name: str) -> np.ndarray:
     """``ids`` if every one indexes a matrix row, else ValueError — a
-    negative id would otherwise gather ``mat[-1]`` silently."""
+    negative id would otherwise gather ``mat[-1]`` silently, and a NULL
+    one (an instance whose bindings lack a symbol; NaN once pandas
+    holds it) would fail as an IndexError."""
+    if pd.isna(ids).any():
+        raise ValueError(f"{name} ids are NULL: an instance lacks a binding")
     bad = (ids < 0) | (ids >= size)
     if bad.any():
         raise ValueError(f"{name} ids outside [0, {size}): {np.unique(ids[bad])[:5]}")

@@ -9,7 +9,7 @@ from knovexlite_spark.language.ast import (
 )
 from knovexlite_spark.language.parser import parse_lstr
 from knovexlite_spark.language.normalize import to_dnf, push_negations, dnf_conjuncts
-from knovexlite_spark.language.query import EFOQuery, QUERY_TYPES, name2lstr
+from knovexlite_spark.language.query import QUERY_TYPES
 
 __all__ = [
     "Atomic",
@@ -23,7 +23,5 @@ __all__ = [
     "to_dnf",
     "push_negations",
     "dnf_conjuncts",
-    "EFOQuery",
     "QUERY_TYPES",
-    "name2lstr",
 ]

@@ -1,23 +1,9 @@
-"""EFOQuery descriptor + the standard 26-type query corpus.
+"""The standard 26-type query corpus: the 15 BetaE + 11 EFO-1 lstr
+templates (reference knovex/utils/metric.py:6-66).
 
-Reference parity: ``EFOQuery`` (term/atom registries, free/existential
-partitions, instance binding,
-/root/reference/knovex/language/efo_lang.py:509-657), QAA binding
-(efo_lang.py:568-588), BFS variable ordering from the free variable
-(efo_lang.py:749-776 — implemented here with the *intended* semantics;
-the reference's version has latent bugs, SURVEY.md §2.9), and the
-15 BetaE + 11 EFO-1 lstr templates
-(/root/reference/knovex/utils/metric.py:6-66).
+An lstr becomes clauses in one place, ``plans/exact.compile_plan``,
+which every evaluator (exact, CQD, LMPNN) reads.
 """
-
-from __future__ import annotations
-
-from collections import deque
-from dataclasses import dataclass, field
-
-from knovexlite_spark.language.ast import ConjunctiveClause, Formula, TermType
-from knovexlite_spark.language.normalize import dnf_conjuncts
-from knovexlite_spark.language.parser import parse_lstr
 
 # lstr templates for the standard corpus (metric.py:6-66).
 BETAE_TYPES = {
@@ -53,90 +39,3 @@ EFO1_TYPES = {
 }
 
 QUERY_TYPES = {**BETAE_TYPES, **EFO1_TYPES}
-name2lstr = QUERY_TYPES
-
-
-@dataclass
-class EFOQuery:
-    """Parsed query + symbol partitions + per-instance bindings."""
-
-    lstr: str
-    formula: Formula
-    instances: list[dict[str, int]] = field(default_factory=list)
-
-    @classmethod
-    def from_lstr(cls, lstr: str) -> "EFOQuery":
-        return cls(lstr=lstr, formula=parse_lstr(lstr))
-
-    # -- symbol partitions (efo_lang.py:604-657) ---------------------------
-
-    def term_names(self) -> set[str]:
-        return {t.name for a in self.formula.atoms() for t in a.terms}
-
-    def free_variables(self) -> set[str]:
-        return {
-            t.name
-            for a in self.formula.atoms()
-            for t in a.terms
-            if t.type == TermType.FREE
-        }
-
-    def existential_variables(self) -> set[str]:
-        return {
-            t.name
-            for a in self.formula.atoms()
-            for t in a.terms
-            if t.type == TermType.EXISTENTIAL
-        }
-
-    def constant_symbols(self) -> set[str]:
-        return {
-            t.name for a in self.formula.atoms() for t in a.terms if t.is_constant
-        }
-
-    def relation_symbols(self) -> set[str]:
-        return {a.relation for a in self.formula.atoms()}
-
-    @property
-    def is_sentence(self) -> bool:
-        return not self.free_variables()
-
-    # -- binding (efo_lang.py:568-588) -------------------------------------
-
-    def append_instance(self, bindings: dict[str, int]) -> None:
-        """Bind every s*/r* symbol to an id. Validates coverage."""
-        missing = (self.constant_symbols() | self.relation_symbols()) - set(bindings)
-        if missing:
-            raise ValueError(f"unbound symbols: {sorted(missing)}")
-        self.instances.append(dict(bindings))
-
-    # -- planning ----------------------------------------------------------
-
-    def conjuncts(self) -> list[ConjunctiveClause]:
-        return dnf_conjuncts(self.formula)
-
-
-def bfs_variable_ordering(clause: ConjunctiveClause, source: str = "f") -> list[list[str]]:
-    """L9: BFS levels over the clause's term-adjacency graph starting at
-    the free variable — the evaluation order for backward search
-    (intended semantics of efo_lang.py:749-776)."""
-    adj: dict[str, set[str]] = {}
-    for a in clause.all_atoms():
-        h, t = a.head.name, a.tail.name
-        adj.setdefault(h, set()).add(t)
-        adj.setdefault(t, set()).add(h)
-    seen = {source}
-    levels = [[source]]
-    frontier = deque([source])
-    while frontier:
-        nxt: list[str] = []
-        for _ in range(len(frontier)):
-            u = frontier.popleft()
-            for v in sorted(adj.get(u, ())):
-                if v not in seen:
-                    seen.add(v)
-                    nxt.append(v)
-                    frontier.append(v)
-        if nxt:
-            levels.append(nxt)
-    return levels

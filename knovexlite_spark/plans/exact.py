@@ -1,13 +1,14 @@
 """Exact set-semantics EFO evaluation: one compiled plan, Spark joins.
 
 An lstr compiles once (``compile_plan``) into a backend-neutral
-``ExactPlan``: per DNF clause, the positive atoms in join order and the
-negated atoms.  Unsafe negation, unbound symbols and a free variable
-that a clause does not bind are rejected there, before any backend
-runs.  Two interpreters run the plan: the Spark one here and the
-driver-local NumPy one in ``plans/local.py``, which ``Engine.efo``
-picks below a KG-size gate.  On Spark every query atom is a join
-against the triples DataFrame —
+``ExactPlan``: per DNF clause, the positive atoms in join order, the
+negated atoms, and every atom in both orientations for the neural
+reasoners (CQD, LMPNN).  Unsafe negation, unbound symbols and a free
+variable that a clause does not bind are rejected there, before any
+backend runs.  Two exact interpreters run the plan: the Spark one
+here and the driver-local NumPy one in ``plans/local.py``, which
+``Engine.efo`` picks below a KG-size gate.  On Spark every query atom
+is a join against the triples DataFrame —
 
 - positive atom          -> inner equi-join (J1)
 - negated atom           -> left_anti join (J4, exact semantics)
@@ -38,7 +39,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from knovexlite_spark.language.ast import Atomic, ConjunctiveClause
+from knovexlite_spark.language.ast import Atomic, ConjunctiveClause, Term
 from knovexlite_spark.language.parser import parse_lstr
 from knovexlite_spark.language.normalize import dnf_conjuncts
 
@@ -54,11 +55,27 @@ def _atom_columns(atom: Atomic) -> tuple[str, ...]:
 
 
 @dataclass(frozen=True)
+class Edge:
+    """One orientation of an atom, ``src -> dst``.  The inverted one
+    reads the relation's inverse id (rel XOR 1), as the reference
+    augments each query graph (utils/dataloader.py:32-61)."""
+
+    src: Term
+    dst: Term
+    relation: str
+    inverted: bool
+    negated: bool
+
+
+@dataclass(frozen=True)
 class ClausePlan:
-    """One DNF clause: positive atoms in join order, then anti-joins."""
+    """One DNF clause: positive atoms in join order, then anti-joins.
+    ``edges`` holds each atom forward then inverted, in the clause's
+    written order (positive atoms, then negative ones)."""
 
     positive: tuple[Atomic, ...]
     negative: tuple[Atomic, ...]
+    edges: tuple[Edge, ...]
 
     def lstr(self) -> str:
         return "&".join(
@@ -128,6 +145,18 @@ def _order_positive(clause: ConjunctiveClause) -> list[Atomic]:
     return ordered
 
 
+def _edges(clause: ConjunctiveClause) -> tuple[Edge, ...]:
+    signed = [(a, False) for a in clause.positive] + [(a, True) for a in clause.negative]
+    return tuple(
+        edge
+        for a, negated in signed
+        for edge in (
+            Edge(a.head, a.tail, a.relation, False, negated),
+            Edge(a.tail, a.head, a.relation, True, negated),
+        )
+    )
+
+
 @functools.lru_cache(maxsize=256)
 def _compile(lstr: str, free_var: str) -> ExactPlan:
     formula = parse_lstr(lstr)
@@ -147,7 +176,7 @@ def _compile(lstr: str, free_var: str) -> ExactPlan:
                 )
         if free_var not in bound:
             raise ValueError(f"free variable {free_var!r} not in clause {clause}")
-        clauses.append(ClausePlan(tuple(ordered), tuple(clause.negative)))
+        clauses.append(ClausePlan(tuple(ordered), tuple(clause.negative), _edges(clause)))
     return ExactPlan(free_var, tuple(clauses), tuple(sorted(symbols)))
 
 

@@ -23,9 +23,8 @@ from pyspark.sql import functions as F
 
 from knovexlite_spark.engine import Engine
 from knovexlite_spark.functions.oracle import FactOracle, densify_entities, id_store
-from knovexlite_spark.language.normalize import dnf_conjuncts
-from knovexlite_spark.language.parser import parse_lstr
 from knovexlite_spark.kg.traverse import bfs_layers
+from knovexlite_spark.plans.exact import compile_plan
 from knovexlite_spark.queries.efo import CQ_ORACLE, CUST_NATION, PLACED, CONTAINS, _pinned_constants
 from knovexlite_spark.reasoner.cqd import CQDBeam
 
@@ -92,9 +91,9 @@ def _cqd_shared_context(spark: SparkSession, sf_dir: str, names: list[str]):
     anchor_orig: set[int] = set()
     for name in names:
         lstr, _, const_map, _ = CQD_DEFS[name]
-        conjuncts = dnf_conjuncts(parse_lstr(lstr))
+        clauses = compile_plan(lstr).clauses
         max_atoms = max(
-            max_atoms, max(len(c.positive) + len(c.negative) for c in conjuncts)
+            max_atoms, max(len(c.positive) + len(c.negative) for c in clauses)
         )
         anchor_orig.update(pinned[k] for k in const_map.values())
     dense_of = {
@@ -132,8 +131,7 @@ def _answer_with(
     for sym, key in const_map.items():
         bindings[sym] = dense_of[pinned[key]]
     scores = reasoner.eval_all_entity_scores(spark, lstr, bindings)
-    conjuncts = dnf_conjuncts(parse_lstr(lstr))
-    n_pos = max(len(c.positive) for c in conjuncts)
+    n_pos = max(len(c.positive) for c in compile_plan(lstr).clauses)
     answers = scores.filter(F.col("score") >= n_pos - 1e-9).select(
         F.col("t").alias("dense")
     )
@@ -145,19 +143,6 @@ def _answer_with(
         .join(mapping, "dense")
         .select(F.col("orig").alias("f"))
     )
-
-
-def _answer(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Single-shape convenience wrapper (shares nothing; the gate path
-    is ``_cqd_beam_suite``, which hoists the densify/ball across
-    shapes)."""
-    ctx = _cqd_shared_context(spark, sf_dir, [name])
-    # materialize the (beam-bounded) answer frame, then release the
-    # mapping cache — otherwise each invocation leaks one cached
-    # DataFrame for the session lifetime (round-4 advice)
-    out = _answer_with(spark, name, *ctx).localCheckpoint()
-    ctx[1].unpersist()
-    return out
 
 
 def _cqd_beam_suite(spark: SparkSession, sf_dir: str) -> DataFrame:

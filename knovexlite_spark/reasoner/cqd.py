@@ -19,6 +19,14 @@ the free variable to constants with a visited-mask cycle guard
   beam prune         A7  top-k per variable (cqd.py:374-409)
                          -> per-query row_number window <= k
 
+The query graph is read from the compiled plan
+(``plans/exact.compile_plan``): per DNF clause, every atom forward and
+inverted (rel XOR 1).  CQD therefore rejects what the exact engines
+reject (unsafe negation, a clause without a positive atom, an unbound
+free variable or symbol) before any frame is built; in ``eval_batch``
+an instance whose bindings lack a symbol fails in the scoring kernel
+with a ``ValueError``.
+
 The first three steps are one call per level to
 ``functions.kge.score_all_tails_grouped_max``, the library's single
 all-entity operator; it shards the entity axis by itself when the
@@ -52,18 +60,7 @@ from knovexlite_spark.functions.kge import (
     broadcast_store,
     score_all_tails_grouped_max,
 )
-from knovexlite_spark.language.ast import ConjunctiveClause
-from knovexlite_spark.language.normalize import dnf_conjuncts
-from knovexlite_spark.language.parser import parse_lstr
-
-
-@dataclass
-class _Edge:
-    src: str  # term name
-    dst: str
-    rel_symbol: str  # relation symbol, bound per instance
-    inverted: bool  # use inverse id (rel XOR 1)
-    negated: bool
+from knovexlite_spark.plans.exact import ClausePlan, Edge, compile_plan
 
 
 @dataclass
@@ -98,7 +95,7 @@ class CQDBeam:
         bcast = self._bcast.get(spark.sparkContext)
         frames = [
             self._clause_scores(spark, clause, inst, free_var, bcast)
-            for clause in dnf_conjuncts(parse_lstr(lstr))
+            for clause in compile_plan(lstr, free_var).clauses
         ]
         out = frames[0]
         for f_ in frames[1:]:
@@ -113,6 +110,7 @@ class CQDBeam:
         free_var: str = "f",
     ) -> DataFrame:
         """Single-instance convenience wrapper: dense (t, score)."""
+        compile_plan(lstr, free_var, bindings)  # reject unbound symbols here
         inst = spark.createDataFrame(
             [(0, {k: int(v) for k, v in bindings.items()})],
             schema="query_id long, bindings map<string,long>",
@@ -121,19 +119,18 @@ class CQDBeam:
 
     # -- internals -------------------------------------------------------
 
-    def _rel_col(self, edge: _Edge) -> F.Column:
-        rel = F.element_at(F.col("bindings"), F.lit(edge.rel_symbol))
+    def _rel_col(self, edge: Edge) -> F.Column:
+        rel = F.element_at(F.col("bindings"), F.lit(edge.relation))
         return rel.bitwiseXOR(F.lit(1)) if edge.inverted else rel
 
     def _clause_scores(
         self,
         spark: SparkSession,
-        clause: ConjunctiveClause,
+        clause: ClausePlan,
         inst: DataFrame,
         free_var: str,
         bcast: tuple,
     ) -> DataFrame:
-        edges = self._oriented_edges(clause)
         visited: set[str] = set()
         cache: dict[str, DataFrame] = {}
         n = self.store.ent.shape[0]
@@ -143,7 +140,11 @@ class CQDBeam:
             if target in cache:
                 return cache[target]
             visited.add(target)
-            active = [e for e in edges if e.dst == target and e.src not in visited]
+            active = [
+                e
+                for e in clause.edges
+                if e.dst.name == target and e.src.name not in visited
+            ]
             src_frames: list[DataFrame] = []
             for idx, e in enumerate(active):
                 tag = [
@@ -151,7 +152,7 @@ class CQDBeam:
                     self._rel_col(e).alias("r"),
                     F.lit(e.negated).alias("neg"),
                 ]
-                if e.src.startswith("s"):
+                if e.src.is_constant:
                     # anchor sources read h AND r straight off the
                     # bindings map — no join at all (the pre-round-6
                     # form self-joined inst, costing two exchanges per
@@ -159,14 +160,14 @@ class CQDBeam:
                     src = inst.select(
                         "query_id",
                         *tag,
-                        F.element_at(F.col("bindings"), F.lit(e.src)).alias("h"),
+                        F.element_at(F.col("bindings"), F.lit(e.src.name)).alias("h"),
                         F.lit(0.0).alias("acc"),
                     )
                 else:
                     # beam sources re-attach bindings for the relation
                     # id; inst is query-batch-sized -> broadcast
                     src = (
-                        recurse(e.src, prune=True)
+                        recurse(e.src.name, prune=True)
                         .withColumnRenamed("t", "h")
                         .withColumnRenamed("score", "acc")
                         .join(F.broadcast(inst), "query_id")
@@ -244,16 +245,3 @@ class CQDBeam:
             return out
 
         return recurse(free_var, prune=False)
-
-    def _oriented_edges(self, clause: ConjunctiveClause) -> list[_Edge]:
-        """Both orientations of every atom; the inverse direction uses
-        rel XOR 1 (the reference applies add_inverse_edge to each query
-        graph, utils/dataloader.py:32-61)."""
-        edges: list[_Edge] = []
-        for atom, negated in [(a, False) for a in clause.positive] + [
-            (a, True) for a in clause.negative
-        ]:
-            h, t = atom.head.name, atom.tail.name
-            edges.append(_Edge(h, t, atom.relation, False, negated))
-            edges.append(_Edge(t, h, atom.relation, True, negated))
-        return edges

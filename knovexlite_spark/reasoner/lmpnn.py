@@ -14,6 +14,10 @@ Reference parity: /root/reference/knovex/reasoner/lmpnn.py —
   = its free variable's final state (lmpnn.py:144-189)
 - scores: cosine similarity vs all entities (lmpnn.py:191-216)
 
+Each query graph is one clause of the plan ``plans/exact.compile_plan``
+makes for CQD and the exact engines too: nodes are the clause's terms,
+edges its oriented ``edges``.
+
 Spark-first: a query graph has a handful of nodes and every graph is
 independent, so ``forward`` is ONE grouped kernel.  One groupBy of the
 unioned node and edge frames makes a row per ``(query_id, clause_id)``
@@ -40,8 +44,7 @@ from pyspark.sql import functions as F
 
 from knovexlite_spark.functions.kge import MAX_FLUX, BroadcastPair, EmbeddingStore, KGEModel
 from knovexlite_spark.language.ast import TermType
-from knovexlite_spark.language.normalize import dnf_conjuncts
-from knovexlite_spark.language.parser import parse_lstr
+from knovexlite_spark.plans.exact import compile_plan
 
 
 def build_query_graph_frames(
@@ -50,36 +53,29 @@ def build_query_graph_frames(
 ) -> tuple[DataFrame, DataFrame]:
     """L8 encode: (query_id, lstr, bindings) -> nodes + edges frames.
 
-    nodes: (query_id, node, ent_id nullable, term_type, num_vars)
-    edges: (query_id, src, dst, rel, neg) — atoms plus their inverses
-    (rel XOR 1), matching the reference's add_inverse_edge augmentation.
-    Multi-clause (disjunctive) queries contribute one graph per clause
-    keyed by (query_id, clause_id) folded into the node name space.
+    nodes: (query_id, clause_id, node, ent_id nullable, term_type, num_vars)
+    edges: (query_id, clause_id, src, dst, rel, neg) — the compiled
+    plan's edges, each atom plus its inverse (rel XOR 1), matching the
+    reference's add_inverse_edge augmentation.  A disjunctive query
+    contributes one graph per DNF clause.  Each instance's lstr goes
+    through ``compile_plan`` with its bindings and free variable ``f``,
+    so a query the exact engines reject (unsafe negation, an unbound
+    symbol or free variable) raises the same ``ValueError`` here.
     """
     node_rows, edge_rows = [], []
     for qid, lstr, bindings in instances:
-        clauses = dnf_conjuncts(parse_lstr(lstr))
-        for cid, clause in enumerate(clauses):
-            terms = {t for a in clause.all_atoms() for t in a.terms}
-            n_vars = sum(1 for t in terms if t.type != TermType.CONSTANT)
+        plan = compile_plan(lstr, "f", bindings)
+        for cid, clause in enumerate(plan.clauses):
+            terms = dict.fromkeys(e.src for e in clause.edges)
+            n_vars = sum(t.is_variable for t in terms)
             for t in terms:
-                node_rows.append(
-                    (
-                        qid,
-                        cid,
-                        t.name,
-                        int(bindings[t.name]) if t.is_constant else None,
-                        int(t.type),
-                        n_vars,
-                    )
+                ent_id = int(bindings[t.name]) if t.is_constant else None
+                node_rows.append((qid, cid, t.name, ent_id, int(t.type), n_vars))
+            for e in clause.edges:
+                rel = int(bindings[e.relation])
+                edge_rows.append(
+                    (qid, cid, e.src.name, e.dst.name, rel ^ e.inverted, int(e.negated))
                 )
-            for atom, neg in [(a, 0) for a in clause.positive] + [
-                (a, 1) for a in clause.negative
-            ]:
-                rel = int(bindings[atom.relation])
-                h, t = atom.head.name, atom.tail.name
-                edge_rows.append((qid, cid, h, t, rel, neg))
-                edge_rows.append((qid, cid, t, h, rel ^ 1, neg))
     nodes = spark.createDataFrame(
         node_rows,
         schema="query_id long, clause_id long, node string, ent_id long, term_type int, num_vars int",

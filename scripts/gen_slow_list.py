@@ -16,9 +16,10 @@ never exceeded again (round-16 VERDICT #1).  The builder's own gate
 runs everything with KNOVEXLITE_SLOW_TESTS=1.
 
 Some tests never land on the slow tier, whatever they measure: the
-graph-database core (query, ranking and training paths), whose every
-default code path the default run must exercise, and one parity pin
-of the gk kernel merge that gk_summary runs by default.
+graph-database core (the lstr parser and the query, ranking and
+training paths), whose every default code path the default run must
+exercise, and one parity pin of the gk kernel merge that gk_summary
+runs by default.
 """
 
 from __future__ import annotations
@@ -37,6 +38,7 @@ ALWAYS_RUN_FILES = {
     "test_cqd.py",
     "test_efo_exact.py",
     "test_kge.py",
+    "test_language.py",
     "test_lmpnn.py",
     "test_losses.py",
     "test_metric.py",

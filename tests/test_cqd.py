@@ -13,6 +13,7 @@ from knovexlite_spark.language.ast import ConjunctiveClause
 from knovexlite_spark.language.normalize import dnf_conjuncts
 from knovexlite_spark.language.parser import parse_lstr
 from knovexlite_spark.language.query import QUERY_TYPES
+from knovexlite_spark.plans.exact import compile_plan
 from knovexlite_spark.reasoner.cqd import CQDBeam
 from tests.efo_bruteforce import answers_bruteforce, make_tiny_kg, sample_bindings
 
@@ -174,3 +175,81 @@ def test_store_broadcast_once_per_reasoner(spark, monkeypatch):
     for lstr in (QUERY_TYPES["2p"], QUERY_TYPES["1p"]):
         assert cqd.eval_batch(spark, lstr, inst).count() == 20
     assert len(made) == 2
+
+
+def _dnf_edges(clause: ConjunctiveClause) -> list[tuple]:
+    """The oriented-edge encoding CQD built from the DNF clause before it
+    read the compiled plan: every atom forward then inverted, positive
+    atoms first, in written order."""
+    out = []
+    for atom, negated in [(a, False) for a in clause.positive] + [
+        (a, True) for a in clause.negative
+    ]:
+        h, t = atom.head.name, atom.tail.name
+        out += [(h, t, atom.relation, False, negated), (t, h, atom.relation, True, negated)]
+    return out
+
+
+@pytest.mark.parametrize("name", sorted(QUERY_TYPES))
+def test_plan_edges_equal_dnf_encoding(name):
+    lstr = QUERY_TYPES[name]
+    plan = compile_plan(lstr)
+    want = [_dnf_edges(c) for c in dnf_conjuncts(parse_lstr(lstr))]
+    got = [
+        [(e.src.name, e.dst.name, e.relation, e.inverted, e.negated) for e in c.edges]
+        for c in plan.clauses
+    ]
+    assert got == want
+
+
+def test_eval_batch_missing_binding_raises_value_error(spark):
+    """An instance whose bindings lack a symbol reaches the scoring
+    kernel as a NULL id, which is rejected like an out-of-range one."""
+    from knovexlite_spark.functions.kge import TransE
+
+    store = EmbeddingStore.xavier(20, 4, ent_dim=8, seed=3)
+    inst = spark.createDataFrame(
+        [(0, {"r1": 0})], "query_id long, bindings map<string,long>"
+    )
+    cqd = CQDBeam(model=TransE(), store=store, beam_size=5)
+    with pytest.raises(Exception, match="ValueError: h ids are NULL"):
+        cqd.eval_batch(spark, "r1(s1,f)", inst).collect()
+
+
+@pytest.mark.parametrize(
+    "lstr, bindings, match",
+    [
+        ("r1(s1,f)", {"r1": 0}, "unbound symbols"),
+        ("r1(s1,f)&!r2(e1,f)", {"r1": 0, "r2": 2, "s1": 1}, "unsafe negation"),
+        ("r1(s1,e1)", {"r1": 0, "s1": 1}, "free variable"),
+    ],
+)
+def test_errors_match_exact_engine_without_a_job(spark, lstr, bindings, match):
+    """CQD, LMPNN and Engine.efo reject a query through the one compiled
+    plan: the same ValueError, raised before any Spark job."""
+    from knovexlite_spark.engine import Engine
+    from knovexlite_spark.functions.kge import TransE
+    from knovexlite_spark.reasoner.lmpnn import build_query_graph_frames
+    from tests.conftest import SF_SMALL
+
+    engine = Engine.for_dir(spark, SF_SMALL)
+    cqd = CQDBeam(model=TransE(), store=EmbeddingStore.xavier(20, 4, ent_dim=8, seed=3))
+    calls = [
+        lambda: engine.efo(lstr, bindings),
+        lambda: cqd.eval_all_entity_scores(spark, lstr, bindings),
+        lambda: build_query_graph_frames(spark, [(0, lstr, bindings)]),
+    ]
+    sc = spark.sparkContext
+    group = f"plan-errors-{match}"
+    sc.setJobGroup(group, group)
+    try:
+        messages = []
+        for call in calls:
+            with pytest.raises(ValueError, match=match) as err:
+                call()
+            messages.append(str(err.value))
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(set(messages)) == 1, messages

@@ -256,3 +256,40 @@ def test_store_broadcast_once_per_reasoner(spark, monkeypatch):
     monkeypatch.setattr(sc, "broadcast", counting)
     assert lm.scores_from_readout(lm.forward(nodes, edges)).count() == N
     assert len(made) == 2
+
+
+def _dnf_graph_rows(instances):
+    """The node and edge rows LMPNN built by parsing each instance's lstr
+    into DNF clauses before it read the compiled plan."""
+    from knovexlite_spark.language.ast import TermType
+    from knovexlite_spark.language.normalize import dnf_conjuncts
+    from knovexlite_spark.language.parser import parse_lstr
+
+    node_rows, edge_rows = [], []
+    for qid, lstr, b in instances:
+        for cid, clause in enumerate(dnf_conjuncts(parse_lstr(lstr))):
+            terms = {t for a in clause.all_atoms() for t in a.terms}
+            n_vars = sum(1 for t in terms if t.type != TermType.CONSTANT)
+            for t in terms:
+                ent_id = b[t.name] if t.is_constant else None
+                node_rows.append((qid, cid, t.name, ent_id, int(t.type), n_vars))
+            for atom, neg in [(a, 0) for a in clause.positive] + [
+                (a, 1) for a in clause.negative
+            ]:
+                rel, h, t = b[atom.relation], atom.head.name, atom.tail.name
+                edge_rows += [(qid, cid, h, t, rel, neg), (qid, cid, t, h, rel ^ 1, neg)]
+    return node_rows, edge_rows
+
+
+def test_graph_frames_equal_dnf_encoding_on_every_query_type(spark):
+    """All 26 standard shapes: the plan-built node rows (as a set) and
+    edge rows (in order) equal the DNF-built ones."""
+    from knovexlite_spark.language.query import QUERY_TYPES
+
+    b = {f"r{i}": 2 * i for i in range(1, 7)} | {f"s{i}": 20 + i for i in range(1, 4)}
+    inst = [(q, QUERY_TYPES[name], b) for q, name in enumerate(sorted(QUERY_TYPES))]
+    nodes, edges = build_query_graph_frames(spark, inst)
+    want_nodes, want_edges = _dnf_graph_rows(inst)
+    key = lambda row: tuple(-1 if v is None else v for v in row)  # noqa: E731
+    assert sorted(map(tuple, nodes.collect()), key=key) == sorted(want_nodes, key=key)
+    assert [tuple(r) for r in edges.collect()] == want_edges
