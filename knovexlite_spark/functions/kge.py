@@ -245,17 +245,6 @@ class ConvE(KGEModel):
         return est @ entities.T
 
 
-MODELS = {
-    "transe": TransE,
-    "distmult": DistMult,
-    "complex": ComplEx,
-    "rotate": RotatE,
-    "rescal": RESCAL,
-    "swtranse": SWTransE,
-    "conve": ConvE,
-}
-
-
 def inverse_relation_ids(rel_ids: np.ndarray) -> np.ndarray:
     """E8 pair-flip: 2i <-> 2i+1 (transe.py:48-56)."""
     return (rel_ids // 2) * 2 + ((rel_ids % 2) + 1) % 2
@@ -412,15 +401,6 @@ def _is_whole(store: EmbeddingStore) -> bool:
     return len(_shard_offsets(store)) == 1
 
 
-def broadcast_store(sc, store: EmbeddingStore) -> tuple:
-    """The ``(entity, relation)`` broadcast pair that
-    ``score_all_tails_grouped_max`` reads through its ``_bcast``
-    argument.  The entity slot is ``None`` when the matrix is sharded:
-    each shard job broadcasts only its own slice."""
-    b_ent = sc.broadcast(store.ent) if _is_whole(store) else None
-    return b_ent, sc.broadcast(store.rel)
-
-
 class BroadcastPair:
     """A reasoner's ``(entity, relation)`` broadcast pair, made by
     ``make(sc)`` on first use and held for that SparkContext.  Every
@@ -440,6 +420,17 @@ class BroadcastPair:
                 self._pair, self._sc = self._make(sc), sc
             return self._pair
 
+    @classmethod
+    def whole(cls, store: EmbeddingStore) -> "BroadcastPair":
+        """The pair of a reasoner whose kernel reads the whole entity
+        matrix (CQD's beam search, LMPNN's update net).  Neither has a
+        sharded path, so a store above ``ENT_BROADCAST_MAX_BYTES`` raises
+        ``ValueError`` here, at the reasoner's construction."""
+        if not _is_whole(store):
+            raise ValueError(f"entity matrix of {store.ent.nbytes} B is above the broadcast "
+                             f"ceiling of {ENT_BROADCAST_MAX_BYTES} B; the reasoners need it whole")
+        return cls(lambda sc: (sc.broadcast(store.ent), sc.broadcast(store.rel)))
+
 
 def score_all_tails_grouped_max(
     df: DataFrame,
@@ -448,7 +439,6 @@ def score_all_tails_grouped_max(
     acc_col: str | None = None,
     neg_col: str | None = None,
     group_cols: tuple[str, ...] = ("query_id",),
-    _bcast: tuple | None = None,
 ) -> DataFrame:
     """J2 + A1: score every entity as a candidate tail of each ``(h, r)``
     source row, then take the max per (group, tail) inside the kernel.
@@ -471,10 +461,6 @@ def score_all_tails_grouped_max(
     job at a time, each broadcasting only its slice and releasing it
     once its partials are checkpointed.  The merge contract is the
     same.
-
-    ``_bcast`` is a ``broadcast_store`` pair owned by the caller, so a
-    caller scoring several levels broadcasts the store once; without
-    it each call creates its own pair.
     """
     sc = df.sparkSession.sparkContext
     n_ent, n_rel = store.ent.shape[0], store.rel.shape[0]
@@ -521,9 +507,9 @@ def score_all_tails_grouped_max(
 
         return expand
 
-    b_ent, b_rel = _bcast if _bcast is not None else broadcast_store(sc, store)
+    b_rel = sc.broadcast(store.rel)
     if whole:
-        return df.mapInPandas(kernel(b_ent, b_rel, 0), schema=schema)
+        return df.mapInPandas(kernel(sc.broadcast(store.ent), b_rel, 0), schema=schema)
 
     ent_df, _ = store.to_dataframes(df.sparkSession)
     heads = F.col("vec").alias(_HVEC)

@@ -50,10 +50,10 @@ def evaluate_qaa(spark: SparkSession, qaa: DataFrame, reasoner) -> DataFrame:
     ``eval_batch(spark, lstr, instances) -> (query_id, t, score)``,
     dense over all entities for every instance.
 
-    Query SHAPES are driver-looped (each is its own recursion depth —
-    the reference batches per disjunct shape, dataloader.py:64-102);
-    every instance of a shape is evaluated in ONE distributed recursion
-    via ``eval_batch`` (the DataFrame is the batch).  ``eval_batch`` is
+    Query SHAPES are driver-looped (the reference batches per disjunct
+    shape, dataloader.py:64-102); every instance of a shape is
+    evaluated by ONE ``eval_batch`` call (``CQDBeam``'s is one kernel
+    stage over the shape's instance rows).  ``eval_batch`` is
     REQUIRED: a per-instance fallback would be a driver-side loop over
     collect()ed bindings — the scale-unsafe shape every other operator
     in this repo avoids — so its absence raises instead.  ``CQDBeam``

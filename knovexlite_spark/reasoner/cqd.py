@@ -1,44 +1,40 @@
-"""CQD beam search over DataFrames (SURVEY §2.7 R1, §3 entry point 2).
+"""CQD beam search as one NumPy kernel (SURVEY §2.7 R1, §3 entry point 2).
 
 Reference parity: ``CQDBeam.eval_all_entity_scores`` →
-``recursive_beam_search``
-(/root/reference/knovex/reasoner/cqd.py:82-431): backward recursion from
-the free variable to constants with a visited-mask cycle guard
-(cqd.py:134-145); per level —
+``recursive_beam_search`` (reference ``knovex/reasoner/cqd.py:82-431``):
+backward recursion from the free variable to constants with a
+visited-set cycle guard (cqd.py:134-145); per level —
 
   frontier scoring   J2  score every (source-assignment, rel) vs all
-                         tails  (cqd.py:221-249) -> broadcast mat-mul
-                         kernel, never a row cross-join
+                         tails (cqd.py:221-249) -> ``model.score_all``
+                         against the entity matrix, never a row join
   combine            sum  source score + edge score = log-space product
-                         t-norm (cqd.py:319-320) -> `acc` addition
-  ∃-elimination      A1  max over source beam per (edge, tail)
-                         (cqd.py:327-338) -> per-partition max inside
-                         the kernel, merged by groupBy(query_id, t).max
-  conjunction        A2  sum across incoming edges per tail
-                         (cqd.py:344-355) -> union + groupBy.sum
-  beam prune         A7  top-k per variable (cqd.py:374-409)
-                         -> per-query row_number window <= k
+                         t-norm (cqd.py:319-320) -> ``acc`` addition
+  ∃-elimination      A1  max over the source beam per (edge, tail)
+                         (cqd.py:327-338)
+  conjunction        A2  sum across incoming edges per tail, in plan
+                         order (cqd.py:344-355)
+  beam prune         A7  top-k per variable by (score desc, t asc)
+                         (cqd.py:374-409)
+
+The whole recursion is ``beam_scores``, a pure NumPy function
+vectorised over a batch of instances of one query shape: it runs on the
+driver without Spark, and ``CQDBeam.eval_batch`` runs it as one
+``mapInArrow`` kernel over the instance rows against the reasoner's
+broadcast matrices — one stage with no exchange, window or checkpoint,
+and a result that does not depend on partitioning.  Source rows are
+scored ``kge.MAX_FLUX // N`` at a time, so an unconstrained leaf (N
+source rows per instance) never holds N² scores.  The kernel needs the
+whole entity matrix: a store above ``kge.ENT_BROADCAST_MAX_BYTES`` is
+rejected at construction.
 
 The query graph is read from the compiled plan
 (``plans/exact.compile_plan``): per DNF clause, every atom forward and
 inverted (rel XOR 1).  CQD therefore rejects what the exact engines
 reject (unsafe negation, a clause without a positive atom, an unbound
-free variable or symbol) before any frame is built; in ``eval_batch``
-an instance whose bindings lack a symbol fails in the scoring kernel
-with a ``ValueError``.
-
-The first three steps are one call per level to
-``functions.kge.score_all_tails_grouped_max``, the library's single
-all-entity operator; it shards the entity axis by itself when the
-matrix is above the broadcast ceiling.
-
-Spark-first batching: evaluation is **batched across instances of one
-query shape** — every frame carries a ``query_id`` column, constants and
-relation ids are read per instance from a bindings MAP column, and the
-beam prune is a window partitioned by query_id.  One recursion drives
-thousands of QAA instances through shared stages (the DataFrame is the
-batch, SURVEY §1.1); the reference's per-disjunct PyG batching
-(utils/dataloader.py:64-102) is the tensor analogue.
+free variable or symbol) before any job runs; in ``eval_batch`` an
+instance whose bindings lack a symbol fails in the kernel with a
+``ValueError``.
 
 Exactness note (faithful to the reference): max-sum variable elimination
 is exact on tree-shaped query graphs; on multi-edge/cyclic shapes
@@ -48,19 +44,103 @@ makes.  The §5.4 oracle-KGE test pins the tree types.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
+from typing import Iterator
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from knovexlite_spark.functions.kge import (
-    BroadcastPair,
-    EmbeddingStore,
-    KGEModel,
-    broadcast_store,
-    score_all_tails_grouped_max,
-)
-from knovexlite_spark.plans.exact import ClausePlan, Edge, compile_plan
+from knovexlite_spark.functions.kge import MAX_FLUX, BroadcastPair, EmbeddingStore, KGEModel
+from knovexlite_spark.functions.kge import _check_ids
+from knovexlite_spark.plans.exact import ClausePlan, ExactPlan, compile_plan
+
+
+def _top_k(s: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Each row's ``k`` best tails by (score desc, t asc), as ``(t,
+    score)`` arrays of shape [Q, min(k, N)] with ``t`` ascending."""
+    n = s.shape[1]
+    if k >= n:
+        return np.broadcast_to(np.arange(n), s.shape), s
+    kth = -np.partition(-s, k - 1, axis=1)[:, k - 1 : k]
+    above, tied = s > kth, s == kth
+    # every score above the k-th best, then the lowest tied ids
+    keep = above | (tied & (np.cumsum(tied, axis=1) <= k - above.sum(1, keepdims=True)))
+    t = np.nonzero(keep)[1].reshape(-1, k)
+    return t, np.take_along_axis(s, t, axis=1)
+
+
+def beam_scores(
+    plan: ExactPlan,
+    model: KGEModel,
+    ent: np.ndarray,
+    rel: np.ndarray,
+    beam_size: int,
+    bindings: dict[str, np.ndarray],
+) -> np.ndarray:
+    """Dense [Q, N] float64 scores of ``plan``'s free variable for Q
+    instances.  ``bindings`` maps each of ``plan.symbols`` to a [Q] id
+    array; a NULL (NaN) or out-of-range id raises ``ValueError``.  DNF
+    clauses combine by max (fuzzy OR — SURVEY §3 step 7)."""
+    n_ent, n_rel = ent.shape[0], rel.shape[0]
+    q = len(bindings[plan.symbols[0]])
+    step = max(1, MAX_FLUX // max(n_ent, 1))
+
+    def edge_max(h: np.ndarray, acc: np.ndarray, r: np.ndarray, negated: bool) -> np.ndarray:
+        """Max over each instance's source rows (``h``, ``acc``: [Q, K])
+        of source score + edge score, for every tail: [Q, N]."""
+        k = h.shape[1]
+        h, acc = h.ravel(), acc.ravel()
+        best = np.full((q, n_ent), -np.inf)
+        for lo in range(0, q * k, step):
+            rows = np.arange(lo, min(lo + step, q * k))
+            qi = rows // k
+            s = model.score_all(ent[h[rows]], rel[r[qi]], ent).astype(np.float64)
+            if negated:
+                s = -s
+            s = s + acc[rows, None]
+            starts = np.flatnonzero(np.diff(qi, prepend=-1))
+            qs = qi[starts]
+            best[qs] = np.maximum(best[qs], np.maximum.reduceat(s, starts, axis=0))
+        return best
+
+    def clause_scores(clause: ClausePlan) -> np.ndarray:
+        visited: set[str] = set()
+        beams: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+
+        def level(target: str) -> np.ndarray | None:
+            """The [Q, N] sum of ``target``'s active edges, or None."""
+            visited.add(target)
+            active = [e for e in clause.edges if e.dst.name == target and e.src.name not in visited]
+            total = None
+            for e in active:
+                if e.src.is_constant:
+                    h = _check_ids(bindings[e.src.name], n_ent, "h")[:, None]
+                    acc = np.zeros(h.shape)
+                else:
+                    h, acc = beam(e.src.name)
+                # the NULL check, then the inverse id's range
+                r = _check_ids(bindings[e.relation], n_rel, "r")
+                r = _check_ids(r ^ 1, n_rel, "r") if e.inverted else r
+                s = edge_max(h, acc, r, e.negated)
+                total = s if total is None else total + s
+            return total
+
+        def beam(var: str) -> tuple[np.ndarray, np.ndarray]:
+            """``var``'s (t, score) beam, computed once per clause."""
+            if var not in beams:
+                s = level(var)
+                # an unconstrained existential leaf is the whole domain
+                # at score 0 (log-space 1), unpruned — cqd.py:147-164
+                leaf = (np.broadcast_to(np.arange(n_ent), (q, n_ent)), np.zeros((q, n_ent)))
+                beams[var] = leaf if s is None else _top_k(s, beam_size)
+            return beams[var]
+
+        return level(plan.free_var)
+
+    return functools.reduce(np.maximum, map(clause_scores, plan.clauses))
 
 
 @dataclass
@@ -73,10 +153,8 @@ class CQDBeam:
 
     def __post_init__(self):
         # one broadcast pair per reasoner and SparkContext serves every
-        # level of every disjunct of every eval_batch call
-        self._bcast = BroadcastPair(lambda sc: broadcast_store(sc, self.store))
-
-    # -- batched evaluation --------------------------------------------------
+        # eval_batch call
+        self._bcast = BroadcastPair.whole(self.store)
 
     def eval_batch(
         self,
@@ -87,20 +165,33 @@ class CQDBeam:
     ) -> DataFrame:
         """Dense (query_id, t, score) for every instance of one query
         shape.  ``instances``: (query_id LONG, bindings MAP<STRING,LONG>)
-        binding every s*/r* symbol.  DNF disjuncts combine by max
-        (fuzzy OR — SURVEY §3 step 7)."""
-        # not cached: the result is lazy, so nothing could unpersist a
-        # cache taken here, and the frame is query-batch-sized
-        inst = instances.select("query_id", "bindings")
-        bcast = self._bcast.get(spark.sparkContext)
-        frames = [
-            self._clause_scores(spark, clause, inst, free_var, bcast)
-            for clause in compile_plan(lstr, free_var).clauses
-        ]
-        out = frames[0]
-        for f_ in frames[1:]:
-            out = out.unionByName(f_)
-        return out.groupBy("query_id", "t").agg(F.max("score").alias("score"))
+        binding every s*/r* symbol.  Lazy: one ``mapInArrow`` stage runs
+        ``beam_scores`` on slices of ``MAX_FLUX // N`` instance rows, so
+        a level's [Q, N] arrays hold about ``MAX_FLUX`` scores at a time."""
+        plan = compile_plan(lstr, free_var)
+        b_ent, b_rel = self._bcast.get(spark.sparkContext)
+        model, beam_size = self.model, self.beam_size
+
+        def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            ent, rel = b_ent.value, b_rel.value
+            n = ent.shape[0]
+            tails = np.arange(n, dtype=np.int64)
+            step = max(1, MAX_FLUX // max(n, 1))
+            for batch in batches:
+                for lo in range(0, batch.num_rows, step):
+                    part = batch.slice(lo, step)
+                    ids = {s: part.column(s).to_numpy(zero_copy_only=False) for s in plan.symbols}
+                    scores = beam_scores(plan, model, ent, rel, beam_size, ids)
+                    qids = part.column("query_id").to_numpy(zero_copy_only=False)
+                    yield pa.record_batch(
+                        {"query_id": np.repeat(qids, n), "t": np.tile(tails, len(qids)),
+                         "score": scores.ravel()}
+                    )
+
+        cols = [F.element_at("bindings", F.lit(s)).alias(s) for s in plan.symbols]
+        return instances.select("query_id", *cols).mapInArrow(
+            run, schema="query_id long, t long, score double"
+        )
 
     def eval_all_entity_scores(
         self,
@@ -116,132 +207,3 @@ class CQDBeam:
             schema="query_id long, bindings map<string,long>",
         )
         return self.eval_batch(spark, lstr, inst, free_var).select("t", "score")
-
-    # -- internals -------------------------------------------------------
-
-    def _rel_col(self, edge: Edge) -> F.Column:
-        rel = F.element_at(F.col("bindings"), F.lit(edge.relation))
-        return rel.bitwiseXOR(F.lit(1)) if edge.inverted else rel
-
-    def _clause_scores(
-        self,
-        spark: SparkSession,
-        clause: ClausePlan,
-        inst: DataFrame,
-        free_var: str,
-        bcast: tuple,
-    ) -> DataFrame:
-        visited: set[str] = set()
-        cache: dict[str, DataFrame] = {}
-        n = self.store.ent.shape[0]
-
-        def recurse(target: str, prune: bool) -> DataFrame:
-            """Returns (query_id, t, score) — the beam for `target`."""
-            if target in cache:
-                return cache[target]
-            visited.add(target)
-            active = [
-                e
-                for e in clause.edges
-                if e.dst.name == target and e.src.name not in visited
-            ]
-            src_frames: list[DataFrame] = []
-            for idx, e in enumerate(active):
-                tag = [
-                    F.lit(idx).cast("long").alias("edge_id"),
-                    self._rel_col(e).alias("r"),
-                    F.lit(e.negated).alias("neg"),
-                ]
-                if e.src.is_constant:
-                    # anchor sources read h AND r straight off the
-                    # bindings map — no join at all (the pre-round-6
-                    # form self-joined inst, costing two exchanges per
-                    # anchor edge on the tiny frame)
-                    src = inst.select(
-                        "query_id",
-                        *tag,
-                        F.element_at(F.col("bindings"), F.lit(e.src.name)).alias("h"),
-                        F.lit(0.0).alias("acc"),
-                    )
-                else:
-                    # beam sources re-attach bindings for the relation
-                    # id; inst is query-batch-sized -> broadcast
-                    src = (
-                        recurse(e.src.name, prune=True)
-                        .withColumnRenamed("t", "h")
-                        .withColumnRenamed("score", "acc")
-                        .join(F.broadcast(inst), "query_id")
-                        .select("query_id", *tag, "h", "acc")
-                    )
-                src_frames.append(
-                    src.select("query_id", "edge_id", "h", "r", "neg", "acc")
-                )
-
-            if not src_frames:
-                # unconstrained existential leaf: whole domain, score 0
-                # (log-space 1), no pruning — cqd.py:147-164
-                out = inst.select("query_id").crossJoin(
-                    spark.range(n).select(F.col("id").alias("t"))
-                ).withColumn("score", F.lit(0.0))
-                cache[target] = out
-                return out
-
-            # LEVEL FUSION (round-6 ask #7): all incoming edges of this
-            # variable are scored in ONE kernel pass against the same
-            # broadcast matrix — source rows are tagged with edge_id and
-            # the J2+A1 fused kernel pre-reduces the beam max per
-            # (query, edge, t) partition-locally, so only N rows per
-            # (query, edge) per partition hit Arrow (not beam x N).
-            all_src = src_frames[0]
-            for fr in src_frames[1:]:
-                all_src = all_src.unionByName(fr)
-            partials = score_all_tails_grouped_max(
-                all_src,
-                self.model,
-                self.store,
-                acc_col="acc",
-                neg_col="neg",
-                group_cols=("query_id", "edge_id"),
-                _bcast=bcast,
-            )
-            # ONE exchange per level: hash-partition the partials by
-            # (query_id, t); HashPartitioning on a SUBSET of the
-            # grouping keys satisfies the clustered distribution of
-            # BOTH the refinement groupBy (query, edge, t) -> max
-            # (A1 cross-partition merge) and the conjunction groupBy
-            # (query, t) -> sum (A2), so neither aggregation adds an
-            # exchange.  The pre-fusion form shuffled the same partial
-            # rows once per edge for the max AND re-shuffled the dense
-            # union for the sum — ~2x the shuffled rows on 2i/3i
-            # shapes (plan pinned by tests/test_cqd.py; A/B in
-            # SCALE.md).
-            out = (
-                partials.repartition("query_id", "t")
-                .groupBy("query_id", "edge_id", "t")
-                .agg(F.max("score").alias("score"))
-                .groupBy("query_id", "t")
-                .agg(F.sum("score").alias("score"))
-            )
-            if prune:
-                w = Window.partitionBy("query_id").orderBy(
-                    F.col("score").desc(), "t"
-                )
-                out = (
-                    out.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") <= self.beam_size)
-                    .drop("__rn")
-                )
-                # beam-sized frames may feed SEVERAL consumers (diamond
-                # shapes revisit a variable): the lazy checkpoint stops
-                # each consumer from re-running the whole scoring
-                # subtree.  The ROOT frame (prune=False) is left
-                # unbarriered on purpose — a checkpoint there would
-                # discard the (query_id, t) hash partitioning and force
-                # eval_batch's final disjunct-max groupBy to re-exchange
-                # the dense N-per-query frame (plan pinned in
-                # tests/test_cqd.py).
-                out = out.localCheckpoint(eager=False)
-            cache[target] = out
-            return out
-
-        return recurse(free_var, prune=False)

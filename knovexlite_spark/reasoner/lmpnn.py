@@ -232,11 +232,9 @@ class LMPNN:
                 "MLP); pass UpdateMLP.xavier(...) or load weights via "
                 "UpdateMLP.from_dataframes"
             )
-        # the update net multiplies by the whole entity matrix, so the
-        # pair is never sharded
-        self._bcast = BroadcastPair(
-            lambda sc: (sc.broadcast(self.store.ent), sc.broadcast(self.store.rel))
-        )
+        # the update net multiplies by the whole entity matrix: a store
+        # above the broadcast ceiling is rejected here
+        self._bcast = BroadcastPair.whole(self.store)
 
     # -- full evaluation ---------------------------------------------------
 

@@ -102,12 +102,9 @@ def test_batched_equals_single(spark, oracle_setup):
 
 
 def test_level_fusion_single_exchange_per_level(spark):
-    """Round-6 ask #7 plan pin: all incoming edges of a variable are
-    scored in one kernel pass and both aggregations (per-edge max,
-    conjunction sum) plus the disjunct merge run after ONE
-    hash-exchange on (query_id, t) — HashPartitioning on a subset of
-    the grouping keys satisfies both clustered distributions, and the
-    root frame is deliberately not checkpoint-barriered."""
+    """eval_batch is one kernel stage: no exchange for any shape, also
+    where a beam variable feeds two edges of one level (2nm, 3pm) or
+    two edges reach the free variable from anchors (2i, 2in)."""
     from knovexlite_spark.functions.kge import EmbeddingStore, TransE
     from knovexlite_spark.reasoner.cqd import CQDBeam
 
@@ -117,14 +114,107 @@ def test_level_fusion_single_exchange_per_level(spark):
         "query_id long, bindings map<string,long>",
     )
     r = CQDBeam(model=TransE(), store=store, beam_size=5)
-    for lstr in ("r1(s1,f)&r2(s2,f)", "r1(s1,e1)&r2(e1,f)", "r1(s1,f)&!r2(s2,f)"):
+    shapes = ("r1(s1,f)&r2(s2,f)", "r1(s1,e1)&r2(e1,f)", "r1(s1,f)&!r2(s2,f)")
+    for lstr in shapes + (QUERY_TYPES["2nm"], QUERY_TYPES["3pm"]):
         plan = (
             r.eval_batch(spark, lstr, inst)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
         )
-        assert plan.count("Exchange hashpartitioning") == 1, lstr
+        assert "Exchange" not in plan, lstr
+
+
+def test_eval_batch_equals_driver_beam_scores(spark):
+    """The Spark kernel and a driver call of ``beam_scores`` give the
+    same scores bit for bit on every query type, with a beam smaller
+    than the domain, however the instance rows are partitioned."""
+    from knovexlite_spark.functions.kge import TransE
+    from knovexlite_spark.reasoner.cqd import beam_scores
+
+    n, n_rel, beam, q = 30, 12, 3, 2
+    store = EmbeddingStore.xavier(n, n_rel, ent_dim=8, seed=5)
+    cqd = CQDBeam(model=TransE(), store=store, beam_size=beam)
+    rng = np.random.default_rng(0)
+    names = sorted(QUERY_TYPES)
+    want, rows = {}, []
+    for k, name in enumerate(names):
+        plan = compile_plan(QUERY_TYPES[name])
+        ids = {
+            s: rng.integers(n_rel if s.startswith("r") else n, size=q) for s in plan.symbols
+        }
+        want[name] = beam_scores(plan, TransE(), store.ent, store.rel, beam, ids)
+        rows += [(k * q + i, name, {s: int(v[i]) for s, v in ids.items()}) for i in range(q)]
+    for parts in (1, 4):
+        inst = spark.createDataFrame(
+            rows, "query_id long, name string, bindings map<string,long>"
+        ).repartition(parts)
+        frames = [
+            cqd.eval_batch(spark, QUERY_TYPES[name], inst.filter(inst["name"] == name))
+            for name in names
+        ]
+        out = frames[0]
+        for f_ in frames[1:]:
+            out = out.unionByName(f_)
+        pdf = out.toPandas()
+        got = np.full((len(names) * q, n), np.nan)
+        got[pdf["query_id"].to_numpy(), pdf["t"].to_numpy()] = pdf["score"].to_numpy()
+        assert len(pdf) == got.size
+        for k, name in enumerate(names):
+            np.testing.assert_array_equal(got[k * q : (k + 1) * q], want[name], err_msg=name)
+
+
+def test_beam_scores_chunks_unconstrained_leaf():
+    """2il's existential leaf is the whole domain: N source rows per
+    instance.  No ``score_all`` call scores more than max(N, MAX_FLUX)
+    values, and the result is the closed form of the two edges."""
+    from knovexlite_spark.functions.kge import MAX_FLUX, TransE
+    from knovexlite_spark.reasoner.cqd import beam_scores
+
+    n = 1_000  # N² = 10 × MAX_FLUX
+    store = EmbeddingStore.xavier(n, 4, ent_dim=4, seed=2)
+    model, sizes = TransE(), []
+    real = model.score_all
+
+    def counting(head, rel, entities):
+        out = real(head, rel, entities)
+        sizes.append(out.size)
+        return out
+
+    model.score_all = counting
+    ids = {"r1": np.array([0, 2]), "r2": np.array([1, 3]), "s1": np.array([5, 7])}
+    got = beam_scores(compile_plan(QUERY_TYPES["2il"]), model, store.ent, store.rel, 3, ids)
+    assert max(sizes) <= max(n, MAX_FLUX)
+    assert sum(sizes) >= 2 * n * n
+    ent, rel = store.ent, store.rel
+    for i in range(2):
+        anchor = real(ent[[ids["s1"][i]]], rel[[ids["r1"][i]]], ent)[0].astype(np.float64)
+        leaf = real(ent, rel[[ids["r2"][i]] * n], ent).astype(np.float64).max(axis=0)
+        np.testing.assert_array_equal(got[i], anchor + leaf)
+
+
+def test_reasoners_reject_store_above_broadcast_ceiling(spark, monkeypatch):
+    """Both neural reasoners need the whole entity matrix: above the
+    broadcast ceiling their constructors raise the same ValueError,
+    before any Spark job."""
+    from knovexlite_spark.functions import kge
+    from knovexlite_spark.reasoner.lmpnn import LMPNN
+
+    store = EmbeddingStore.xavier(20, 4, ent_dim=8, seed=3)
+    monkeypatch.setattr(kge, "ENT_BROADCAST_MAX_BYTES", 200)
+    sc = spark.sparkContext
+    sc.setJobGroup("ceiling", "ceiling")
+    try:
+        messages = []
+        for make in (CQDBeam, LMPNN):
+            with pytest.raises(ValueError, match="broadcast ceiling") as err:
+                make(kge.TransE(), store)
+            messages.append(str(err.value))
+        assert sc.statusTracker().getJobIdsForGroup("ceiling") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert messages[0] == messages[1]
 
 
 def test_store_broadcast_once_per_eval_batch(spark, monkeypatch):
