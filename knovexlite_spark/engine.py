@@ -5,7 +5,10 @@ evaluation; ours adds a full Spark SQL surface on the same session.  The
 SQL path is a passthrough: Catalyst owns predicate pushdown, column
 pruning, join reordering, AQE — we deliberately add no layer on top.
 EFO queries on a KG below ``LOCAL_MAX_EDGES`` run on the driver
-(``plans/local.py``) and on Spark otherwise (``plans/exact.py``).
+(``plans/local.py``) and on Spark otherwise (``plans/exact.py``).  A
+driver answer stays on the driver: its frame holds the ids, collects
+them without the JVM, and builds a Spark table of them only when some
+other DataFrame method needs one.
 """
 
 from __future__ import annotations
@@ -14,8 +17,10 @@ import logging
 import threading
 import weakref
 
+import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from knovexlite_spark.datasets import DEFAULT_SF_DIR, register_views
 from knovexlite_spark.kg.triples import build_triples_view, pair_encode_inverse
@@ -31,6 +36,38 @@ log = logging.getLogger(__name__)
 # 2.3 s into 66 MB, and its anchored CQs then take 0.2-7.5 ms of driver
 # work against 175-560 ms as Spark joins.
 LOCAL_MAX_EDGES = 2_000_000
+
+
+class _LocalAnswer(ClassicDataFrame):
+    """A below-gate answer: the sorted distinct ids of ``free_var``, held
+    on the driver.  ``collect`` builds the rows from them with no py4j
+    call; the JVM frame (a local table of the ids) is built on first use
+    of ``_jdf``, so every other method behaves as on that table."""
+
+    def __new__(cls, *args, **kwargs):
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, free_var: str, ids: np.ndarray):
+        self._ids = ids
+        self._free_var = free_var
+        super().__init__(None, spark)  # assigns _jdf = None: not built yet
+
+    @property
+    def _jdf(self):
+        # Unlocked: two threads building it at once make two equal
+        # frames, and the last assignment wins.
+        if self._built_jdf is None:
+            table = pa.table({self._free_var: pa.array(self._ids, pa.int64())})
+            self._built_jdf = self.sparkSession.createDataFrame(table)._jdf
+        return self._built_jdf
+
+    @_jdf.setter
+    def _jdf(self, jdf) -> None:
+        self._built_jdf = jdf
+
+    def collect(self) -> list[Row]:
+        row = Row(self._free_var)
+        return [row(i) for i in self._ids.tolist()]
 
 
 class Engine:
@@ -191,10 +228,12 @@ class Engine:
         ``free_var``, of the distinct entity ids of the free variable.
 
         Below the KG-size gate (``LOCAL_MAX_EDGES``) the plan runs on
-        the driver over a sorted adjacency and comes back as a local
-        table, which collects with no Spark job; a query whose joins
-        would exceed ``plans.local.LOCAL_MAX_JOIN_ROWS``, and every
-        query above the gate, runs as Spark joins.
+        the driver over a sorted adjacency, and the frame holds the
+        answer ids: ``collect()`` makes no py4j call and runs no Spark
+        job, and any other method first builds the same local table
+        (``createDataFrame`` of the ids) that it then acts on.  A query
+        whose joins would exceed ``plans.local.LOCAL_MAX_JOIN_ROWS``, and
+        every query above the gate, runs as Spark joins.
 
         ``augmented=True`` evaluates over the pair-encoded inverse view
         (relation k -> 2k forward / 2k+1 backward), which inverse-edge
@@ -204,8 +243,6 @@ class Engine:
         if adj is not None:
             ids = answer_local(plan, adj, bindings, augmented)
             if ids is not None:
-                return self.spark.createDataFrame(
-                    pa.table({free_var: pa.array(ids, pa.int64())})
-                )
+                return _LocalAnswer(self.spark, free_var, ids)
         triples = self.triples_with_inverses() if augmented else self.triples
         return answer_exact(triples, lstr, bindings, free_var=free_var)

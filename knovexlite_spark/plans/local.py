@@ -14,13 +14,19 @@ The adjacency holds the pair-encoded edges (relation k -> 2k forward,
 - a raw relation id k (``augmented=False``) is 2k, so one copy in one
   sort order serves both encodings.
 
-Joins are pandas merges on the shared variables, negation is an
-anti-merge, and the answer is ``np.unique`` of the clauses' free
-variable.  Before each join the exact output size is computed from the
-key counts of both sides; above ``LOCAL_MAX_JOIN_ROWS`` the query is
-handed back (``None``) so the caller runs it on Spark — this keeps an
-anchor-free cyclic query (cq9) from building a quadratic intermediate
-on the driver.
+A clause's bindings are a dict of equal-length ``int64`` columns
+(variable name -> ndarray), and the joins are NumPy sort-merges: the
+shared key is one column, or several factorised together into one
+code, and a clause with no shared variable is a cross join (every
+row's code is equal).  Both sides' codes are sorted once and
+``searchsorted`` gives each left row its run of matches on the right.
+Those run lengths sum to the exact join size, which is checked against
+``LOCAL_MAX_JOIN_ROWS`` before any row is gathered; above it the query
+is handed back (``None``) so the caller runs it on Spark — this keeps
+an anchor-free cyclic query (cq9) from building a quadratic
+intermediate on the driver.  Negation drops the rows whose codes the
+negated atom's frame holds, and the answer is ``np.unique`` of the
+clauses' free variable.
 """
 
 from __future__ import annotations
@@ -28,17 +34,16 @@ from __future__ import annotations
 import logging
 
 import numpy as np
-import pandas as pd
 
 from knovexlite_spark.language.ast import Atomic
-from knovexlite_spark.plans.exact import GROUND, ExactPlan
+from knovexlite_spark.plans.exact import GROUND, ClausePlan, ExactPlan
 
 log = logging.getLogger(__name__)
 
 # Largest join output (rows) the driver builds for one query.  Measured
-# on 4 vCPUs: sizing, merging and deduplicating a 2 M-row join takes
-# ~0.6 s and ~48 MB, about what one Spark query costs (cq9 at sf0.1
-# joins 0.6 M rows: 0.30 s here, 0.75 s on Spark).
+# on 4 vCPUs: sizing, gathering and deduplicating a 2 M-row two-atom
+# join takes ~0.10 s and ~84 MB of NumPy arrays at peak; cq9 at sf0.1
+# joins 0.6 M rows in 0.34 s here against 0.75 s on Spark.
 LOCAL_MAX_JOIN_ROWS = 2_000_000
 
 
@@ -67,9 +72,21 @@ class Adjacency:
         if heads is None:
             return h, t
         start = np.searchsorted(h, heads, "left")
-        n = np.searchsorted(h, heads, "right") - start
-        idx = np.repeat(start - np.cumsum(n) + n, n) + np.arange(n.sum())
+        idx = _runs(start, np.searchsorted(h, heads, "right") - start)
         return h[idx], t[idx]
+
+
+def _runs(start: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """The indices of the runs ``start[i] .. start[i] + n[i]``, in order."""
+    return np.repeat(start - np.cumsum(n) + n, n) + np.arange(n.sum())
+
+
+# A clause's bindings: equal-length int64 columns by variable name.
+Frame = dict[str, np.ndarray]
+
+
+def _rows(frame: Frame) -> int:
+    return len(next(iter(frame.values())))
 
 
 def _atom_frame(
@@ -77,8 +94,8 @@ def _atom_frame(
     atom: Atomic,
     bindings: dict[str, int],
     augmented: bool,
-    acc: pd.DataFrame | None = None,
-) -> pd.DataFrame:
+    acc: Frame | None = None,
+) -> Frame:
     """The atom's variable columns, read from the adjacency anchored at
     a constant if it has one, else at the values ``acc`` already binds."""
     rel = bindings[atom.relation] if augmented else 2 * bindings[atom.relation]
@@ -92,7 +109,7 @@ def _atom_frame(
     if head.is_constant:
         heads = np.array([bindings[head.name]], np.int64)
     else:
-        heads = np.unique(acc[head.name].to_numpy()) if anchor(head) else None
+        heads = np.unique(acc[head.name]) if anchor(head) else None
     h, t = adj.out_edges(rel, heads)
     if tail.is_constant:
         keep = t == bindings[tail.name]
@@ -104,15 +121,47 @@ def _atom_frame(
         cols[head.name] = h
     if tail.is_variable:
         cols[tail.name] = t
-    return pd.DataFrame(cols or {GROUND: np.ones(len(h), np.int64)})
+    return cols or {GROUND: np.ones(len(h), np.int64)}
 
 
-def _join_rows(left: pd.DataFrame, right: pd.DataFrame, keys: list[str]) -> int:
-    """Exact row count of ``left`` ⋈ ``right`` on ``keys``."""
-    if not keys:
-        return len(left) * len(right)
-    counts = left.groupby(keys).size().mul(right.groupby(keys).size(), fill_value=0)
-    return int(counts.sum())
+def _codes(left: Frame, right: Frame, keys: list[str]) -> tuple[np.ndarray, np.ndarray]:
+    """One id per row of each side, equal across the sides exactly when
+    the rows agree on every key (all equal when there is none).  Several
+    keys are factorised one column at a time into a mixed-radix code (a
+    2-D ``np.unique(axis=0)`` took several times longer on cq9); the
+    right side is an atom's frame, so there are at most two keys and
+    the code stays below the squared row count."""
+    if len(keys) == 1:
+        return left[keys[0]], right[keys[0]]
+    codes = np.zeros(_rows(left) + _rows(right), np.int64)
+    for k in keys:
+        uniq, inv = np.unique(np.concatenate([left[k], right[k]]), return_inverse=True)
+        codes = codes * len(uniq) + inv
+    return codes[: _rows(left)], codes[_rows(left) :]
+
+
+def _join(left: Frame, right: Frame, clause: ClausePlan) -> Frame | None:
+    """``left`` ⋈ ``right`` on their shared variables (a cross join when
+    they share none), or ``None`` when it would exceed
+    ``LOCAL_MAX_JOIN_ROWS`` rows; the size is checked before any row is
+    gathered."""
+    lk, rk = _codes(left, right, sorted(left.keys() & right.keys()))
+    # Both sides sorted: searchsorted runs ~10x faster on sorted keys.
+    lorder, rorder = np.argsort(lk), np.argsort(rk)
+    lk, rk = lk[lorder], rk[rorder]
+    lo = np.searchsorted(rk, lk, "left")
+    n = np.searchsorted(rk, lk, "right") - lo
+    rows = int(n.sum())
+    if rows > LOCAL_MAX_JOIN_ROWS:
+        log.info(
+            "efo row cap: %s joins to %d rows (cap %d); running on Spark",
+            clause.lstr(), rows, LOCAL_MAX_JOIN_ROWS,
+        )
+        return None
+    out = {c: v[np.repeat(lorder, n)] for c, v in left.items()}
+    ri = rorder[_runs(lo, n)]
+    out.update((c, v[ri]) for c, v in right.items() if c not in left)
+    return out
 
 
 def answer_local(
@@ -124,19 +173,13 @@ def answer_local(
     for clause in plan.clauses:
         acc = _atom_frame(adj, clause.positive[0], bindings, augmented)
         for atom in clause.positive[1:]:
-            right = _atom_frame(adj, atom, bindings, augmented, acc)
-            keys = sorted(set(acc.columns) & set(right.columns))
-            rows = _join_rows(acc, right, keys)
-            if rows > LOCAL_MAX_JOIN_ROWS:
-                log.info(
-                    "efo row cap: %s joins to %d rows (cap %d); running on Spark",
-                    clause.lstr(), rows, LOCAL_MAX_JOIN_ROWS,
-                )
+            acc = _join(acc, _atom_frame(adj, atom, bindings, augmented, acc), clause)
+            if acc is None:
                 return None
-            acc = acc.merge(right, on=keys) if keys else acc.merge(right, how="cross")
         for atom in clause.negative:
             neg = _atom_frame(adj, atom, bindings, augmented, acc)
-            keys = sorted(neg.columns)
-            acc = acc[~acc.set_index(keys).index.isin(neg.set_index(keys).index)]
-        parts.append(acc[plan.free_var].to_numpy(np.int64))
+            lk, nk = _codes(acc, neg, sorted(neg))
+            keep = ~np.isin(lk, nk)
+            acc = {c: v[keep] for c, v in acc.items()}
+        parts.append(acc[plan.free_var])
     return np.unique(np.concatenate(parts))

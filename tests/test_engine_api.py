@@ -3,11 +3,15 @@ gate exercises implicitly but deserve direct pins)."""
 
 import logging
 import os
+import re
 import sys
 import threading
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
+import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -119,7 +123,12 @@ def test_triples_with_inverses_pairs_each_edge_with_its_twin(spark):
     assert eng.triples_with_inverses() is eng.triples_with_inverses()
 
 
-def test_efo_below_gate_runs_no_spark_job(spark):
+def test_efo_below_gate_runs_no_spark_job(spark, monkeypatch):
+    """Below the gate every CQ answers with no Spark job, and its frame
+    acts as a Spark table of the same ids: the same rows in the same
+    order, count, schema (for a non-default free variable too),
+    toPandas, filter, join, unionByName and a temp view.  Its collect
+    makes no py4j call."""
     eng = Engine.for_dir(spark, SF_SMALL)
     assert eng._local_adjacency() is not None  # SF_SMALL is below the gate
     answers = _answers(eng, spark)
@@ -128,6 +137,57 @@ def test_efo_below_gate_runs_no_spark_job(spark):
     df = eng.efo("r1(s1,e1)&r2(e1,f1)", b, free_var="f1", augmented=True)
     assert df.schema == StructType([StructField("f1", LongType())])
     assert {r[0] for r in df.collect()} == answers["cq2_2p"][0]
+
+    checks, expected = [], []
+    for k, (name, b) in enumerate(sorted(_cq_bindings(spark).items())):
+        fv = ("f", "f1")[k % 2]
+        lstr = re.sub(r"\bf\b", fv, CQ_DEFS[name][0])
+        got = eng.efo(lstr, b, free_var=fv, augmented=True)
+        ids = sorted(answers[name][0])
+        pdf = pd.DataFrame({fv: ids}, dtype="int64")
+        want = spark.createDataFrame(pdf, f"{fv} long")
+        assert [r.asDict() for r in got.collect()] == pdf.to_dict("records"), name
+        assert got.count() == len(ids) and got.schema == want.schema, name
+        assert got.toPandas().equals(pdf), name
+        got.createOrReplaceTempView("efo_answer")
+        # the relational methods, checked in one job over all CQs
+        for op, df, rows in (
+            ("filter", got.filter(F.col(fv) % 2 == 0), [i for i in ids if i % 2 == 0]),
+            ("join", got.join(want, fv), ids),
+            ("union", got.unionByName(want), ids * 2),
+            ("view", spark.sql(f"SELECT {fv} FROM efo_answer"), ids),
+        ):
+            checks.append(df.select(F.lit(f"{name} {op}").alias("check"), F.col(fv).alias("id")))
+            expected += [(f"{name} {op}", i) for i in rows]
+    spark.catalog.dropTempView("efo_answer")
+    assert sorted(map(tuple, reduce(DataFrame.unionByName, checks).collect())) == sorted(expected)
+
+    def no_call(*_a, **_k):
+        raise AssertionError("py4j call during collect")
+
+    b = _cq_bindings(spark)["cq2_2p"]
+    fresh = eng.efo(CQ_DEFS["cq2_2p"][0], b, augmented=True)
+    with monkeypatch.context() as m:
+        m.setattr(spark, "createDataFrame", no_call)
+        m.setattr(spark.sparkContext._gateway._gateway_client, "send_command", no_call)
+        assert {r["f"] for r in fresh.collect()} == answers["cq2_2p"][0]
+
+    # Eight threads race to build the unbuilt JVM frame: each gets a
+    # frame of the same ids.
+    barrier = threading.Barrier(8, timeout=60)
+
+    def count(_):
+        barrier.wait()
+        return fresh.count()
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            counts = [f.result(timeout=300) for f in [pool.submit(count, i) for i in range(8)]]
+    finally:
+        sys.setswitchinterval(prev)
+    assert counts == [len(answers["cq2_2p"][0])] * 8
 
 
 def test_efo_empty_answer_keeps_schema(spark):
@@ -195,6 +255,38 @@ def test_efo_gate_and_row_cap_fallbacks_match_local(spark, monkeypatch, caplog):
     assert any(
         "efo row cap: r1(f,e1)&" in r.getMessage() for r in caplog.records
     ), "the cq9 fallback is logged with its clause"
+
+
+def test_efo_row_cap_is_the_exact_join_size(spark, monkeypatch, caplog):
+    """A query whose join builds exactly ``LOCAL_MAX_JOIN_ROWS`` rows
+    stays local; one row over, it runs on Spark and logs the size.  The
+    size is the one the cap-0 log line reports."""
+    caplog.set_level(logging.INFO, logger="knovexlite_spark")
+    eng = Engine.for_dir(spark, SF_SMALL)
+
+    def run(cap: int) -> tuple[set[int], int, list[str]]:
+        monkeypatch.setattr(local_mod, "LOCAL_MAX_JOIN_ROWS", cap)
+        caplog.clear()
+        lstr, b = CQ_DEFS["cq2_2p"][0], _cq_bindings(spark)["cq2_2p"]
+        group = f"test-row-cap-{cap}"
+        spark.sparkContext.setJobGroup(group, group)
+        try:
+            ids = {r[0] for r in eng.efo(lstr, b, augmented=True).collect()}
+        finally:
+            spark.sparkContext.setJobGroup(None, None)
+        jobs = len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+        return ids, jobs, [r.getMessage() for r in caplog.records if "efo row cap" in r.getMessage()]
+
+    _, _, logged = run(0)
+    size = int(re.search(r"joins to (\d+) rows", logged[0]).group(1))
+    assert size > 0
+    want, jobs, logged = run(size)
+    assert want and jobs == 0 and not logged
+    got, jobs, logged = run(size - 1)
+    assert got == want and jobs > 0
+    assert logged == [
+        f"efo row cap: r1(s1,e1)&r2(e1,f) joins to {size} rows (cap {size - 1}); running on Spark"
+    ]
 
 
 @pytest.mark.parametrize(
