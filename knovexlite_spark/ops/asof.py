@@ -58,10 +58,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _is_time_type(dtype: str) -> bool:
-    return dtype.startswith("timestamp") or dtype == "date"
-
-
 def _numeric_image(col, dtype: str):
     """Monotone numeric image of an ordering column for distance /
     quantile arithmetic.  DATE must not go through cast('double') —

@@ -178,8 +178,7 @@ def bpe_encode(
     ``cache_size`` bounds the per-task word->tokens cache (insert-only
     up to the cap; at a natural-language vocabulary the hot zipf head
     fits long before the cap, and a cap SMALLER than the vocabulary
-    keeps the per-new-word merge loop on the measured path — the
-    round-15 bench uses that to time the miss path honestly).
+    keeps the per-new-word merge loop on the measured path).
     ``counters=True`` appends per-document measurement columns
     ``n_words`` (pre-tokens seen) and ``n_miss`` (words that ran the
     merge loop rather than hitting the cache) — aggregate for corpus

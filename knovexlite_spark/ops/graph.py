@@ -137,17 +137,6 @@ def connected_components(
     return labels.withColumnRenamed("label", "component")
 
 
-def connected_reachability(
-    seeds: DataFrame, edges: DataFrame, max_depth: int = 20
-) -> DataFrame:
-    """Reachable set from seeds over undirected edges (both directions) —
-    the G1/G2 composition used for component probing."""
-    undirected = edges.select("h", "t").unionByName(
-        edges.select(F.col("t").alias("h"), F.col("h").alias("t"))
-    )
-    return bfs_layers(seeds, undirected, max_depth, "forward")
-
-
 def pagerank(
     edges: DataFrame,
     iterations: int = 10,

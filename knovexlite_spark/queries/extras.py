@@ -1246,577 +1246,6 @@ _MGLK_PARAMS = {"m": 3, "parts": 6}
 _PROF_PARAMS = {"parts": 8, "k": 32, "m": 24, "p": 10}
 
 
-def _gk_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row (EXTRA cycle, round 10): the scale form of the
-    from-scratch quantile summary — 32 hash groups (per-group local
-    sorts after ONE exchange), hierarchical merge at fan_in=8 (two
-    window passes over the summary-sized frame), compress — on
-    o_totalprice cents over orders ++ lineitem extendedprice cents
-    (two corpus-sized builds merged into one summary, the rollup
-    shape)."""
-    from knovexlite_spark.ops.quantile import gk_summary
-
-    eng = Engine.for_dir(spark, sf_dir)
-    cents = (
-        eng.table("orders")
-        .select(F.round(F.col("o_totalprice") * 100).cast("long").alias("c"))
-        .unionByName(
-            eng.table("lineitem").select(
-                F.round(F.col("l_extendedprice") * 100)
-                .cast("long")
-                .alias("c")
-            )
-        )
-    )
-    return gk_summary(
-        cents, "c", k_build=64, k_compress=32, num_groups=32, merge_fan_in=8
-    )
-
-
-def _gk_local_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row (EXTRA cycle, round 13): the A/B twin of
-    ``gk_quantile`` with the BOUNDED-MEMORY build — the same
-    orders ++ lineitem cents stream, same k/k_compress, but the
-    summaries come from mapInPandas over physical partitions
-    (ops/quantile.gk_build_local), so NO per-group sort-window pass
-    exists anywhere in the plan: the one exchange round-robins the
-    compact single-column value rows (a local[32] parallelism aid,
-    unnecessary at corpus scale where file splits provide
-    parallelism), and after the map-only summarize only <= P*k
-    bracket rows move through the merge tree.  The r10 row
-    ('gk_quantile') hash-exchanges every raw row into 32 per-group
-    sort windows instead — the cost class this form removes."""
-    from knovexlite_spark.ops.quantile import gk_summary_local
-
-    eng = Engine.for_dir(spark, sf_dir)
-    cents = (
-        eng.table("orders")
-        .select(F.round(F.col("o_totalprice") * 100).cast("long").alias("c"))
-        .unionByName(
-            eng.table("lineitem").select(
-                F.round(F.col("l_extendedprice") * 100)
-                .cast("long")
-                .alias("c")
-            )
-        )
-    )
-    return gk_summary_local(
-        cents.repartition(32), "c", k=64, k_compress=32, fan_in=16
-    )
-
-
-def _gk_by_key_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row (EXTRA cycle, round 11): PER-KEY quantiles — the
-    analytics form.  p50/p95/p99 per partkey residue class (1024
-    business keys) over lineitem extendedprice cents in ONE pass:
-    combinable groupBy(key, v) (the only row-sized stage, map-side
-    partials), per-key cumulative-rank window build, per-key band
-    compress, distributed rank answers — 3,072 output rows, no driver
-    loop over keys."""
-    from knovexlite_spark.ops.quantile import (
-        gk_quantiles_by_key,
-        gk_summary_by_key,
-    )
-
-    li = Engine.for_dir(spark, sf_dir).table("lineitem").select(
-        F.pmod(F.col("l_partkey"), F.lit(1024)).alias("key"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-    )
-    summ = gk_summary_by_key(li, "key", "cents", k_build=64, k_compress=32)
-    return gk_quantiles_by_key(summ, "key", [0.5, 0.95, 0.99])
-
-
-def _mg_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row (EXTRA cycle, round 11): heavy hitters over the real
-    token stream — the curation use ("what are the hot tokens") the
-    sketch exists for.  Explode the documents table's tokens (corpus-
-    sized, map-only), build per-source Misra-Gries summaries on 32
-    row-residue sources (ONE combinable groupBy is the only row-sized
-    aggregation), merge to the global top-256 counter table, return
-    the top 64 with error bounds."""
-    from knovexlite_spark.ops.sketch import mg_summary, mg_topk
-    from knovexlite_spark.ops.text import tokens
-
-    docs = Engine.for_dir(spark, sf_dir).table("documents")
-    toks = docs.select(
-        F.col("doc_id"),
-        F.explode(
-            F.filter(tokens(F.col("text")), lambda t: t != "")
-        ).alias("item"),
-    )
-    summ = mg_summary(
-        toks, "item", m=256,
-        group_col=F.pmod(F.col("doc_id"), F.lit(32)),
-    )
-    return mg_topk(summ, 64)
-
-def _mg_local_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row (EXTRA cycle, round 12): the A/B twin of
-    ``mg_heavy_hitters`` with the BOUNDED-MEMORY build — same token
-    stream, same m/top-k, but the summaries come from mapInPandas
-    over physical partitions (ops/sketch.mg_build_local), so NO
-    token-sized shuffle exists anywhere in the plan: the one exchange
-    moves compact document rows (pre-explode, for local[32]
-    parallelism — at corpus scale file splits make even that
-    unnecessary), and after the map-only summarize only <= P*m
-    summary rows move through the merge tree.  The r11 row
-    ('mg_heavy_hitters', exact-count build) shuffles every distinct
-    (src, token) pair instead — the cost class this form removes."""
-    from knovexlite_spark.ops.sketch import mg_summary_local, mg_topk
-    from knovexlite_spark.ops.text import tokens
-
-    docs = Engine.for_dir(spark, sf_dir).table("documents")
-    # prune to the text column BEFORE the exchange: the one shuffle
-    # moves each document's text exactly once, never a token
-    toks = docs.select("text").repartition(32).select(
-        F.explode(
-            F.filter(tokens(F.col("text")), lambda t: t != "")
-        ).alias("item"),
-    )
-    summ = mg_summary_local(toks, "item", m=256, fan_in=16)
-    return mg_topk(summ, 64)
-
-
-def _gk_local_by_key_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row (EXTRA cycle, round 13): the A/B twin of
-    ``gk_by_key`` with the PER-KEY bounded-memory build — same 1024
-    partkey-residue keys, same lineitem cents, same answers, but each
-    physical partition keeps a dict of per-key cascades
-    (ops/quantile.gk_build_local_by_key), so NO (key, v)-sized
-    groupBy exists anywhere: the one exchange round-robins compact
-    (key, cents) rows (local[32] parallelism aid), the map-only
-    summarize emits <= keys*P*k bracket rows, and the per-key merge
-    TREE combines them (windows partitioned by (key, batch))."""
-    from knovexlite_spark.ops.quantile import (
-        gk_quantiles_by_key,
-        gk_summary_local_by_key,
-    )
-
-    li = Engine.for_dir(spark, sf_dir).table("lineitem").select(
-        F.pmod(F.col("l_partkey"), F.lit(1024)).alias("key"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-    )
-    summ = gk_summary_local_by_key(
-        li.repartition(32), "key", "cents", k=64, k_compress=32, fan_in=16
-    )
-    return gk_quantiles_by_key(summ, "key", [0.5, 0.95, 0.99])
-
-
-def _mg_keyed_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row (EXTRA cycle, round 13): top tokens PER LANGUAGE via
-    the EXACT-COUNT per-key build — mg_build_by_key's combinable
-    groupBy(lang, src, token) + mg_merge_by_key.  The row-sized pass
-    shuffles every distinct (lang, src, token) triple: fine at this
-    vocabulary, the cost class the A/B twin (mg_local_keyed) removes
-    at open vocabularies."""
-    from knovexlite_spark.ops.sketch import (
-        mg_build_by_key,
-        mg_merge_by_key,
-        mg_topk_by_key,
-    )
-    from knovexlite_spark.ops.text import tokens
-
-    docs = Engine.for_dir(spark, sf_dir).table("documents")
-    toks = docs.select(
-        F.col("lang"),
-        F.pmod(F.col("doc_id"), F.lit(32)).alias("s"),
-        F.explode(
-            F.filter(tokens(F.col("text")), lambda t: t != "")
-        ).alias("item"),
-    )
-    summ = mg_merge_by_key(
-        mg_build_by_key(toks, "lang", "item", m=256, src_col="s"),
-        "lang",
-        m=256,
-    )
-    return mg_topk_by_key(summ, 64, key_cols="lang")
-
-
-def _mg_local_keyed_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row (EXTRA cycle, round 13): the A/B twin of
-    ``mg_keyed_hh`` with the OPEN-VOCABULARY per-key build — same
-    token stream, same m/top-k, but each physical partition keeps a
-    dict of per-language kernel states (mg_build_local_by_key), so
-    NO (key, token)-sized shuffle exists anywhere: the one exchange
-    moves compact (lang, text) rows pre-explode (a local[32]
-    parallelism aid, unnecessary at corpus scale), and after the
-    map-only summarize only <= keys*P*m summary rows move through
-    the per-key merge."""
-    from knovexlite_spark.ops.sketch import (
-        mg_summary_local_by_key,
-        mg_topk_by_key,
-    )
-    from knovexlite_spark.ops.text import tokens
-
-    docs = Engine.for_dir(spark, sf_dir).table("documents")
-    toks = docs.select("lang", "text").repartition(32).select(
-        "lang",
-        F.explode(
-            F.filter(tokens(F.col("text")), lambda t: t != "")
-        ).alias("item"),
-    )
-    summ = mg_summary_local_by_key(toks, "lang", "item", m=256)
-    return mg_topk_by_key(summ, 64, key_cols="lang")
-
-
-def _cents_24x(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """24x-of-sf0.1 value stream for the quantile-pair blowup tier
-    (round 14): the orders ++ lineitem cents stream read from the 6x
-    blowup dir, each row exploded into 4 distinct values (ONE scan,
-    4x rows — both A/B forms pay the identical generation plan).
-    Purpose: the r13 verdict found the 6x exact-vs-local ordering
-    sits inside the ±13% session envelope by mins; this tier grows
-    the exact build's sort-window cost past it."""
-    eng = Engine.for_dir(spark, sf_dir)
-    cents = (
-        eng.table("orders")
-        .select(F.round(F.col("o_totalprice") * 100).cast("long").alias("c"))
-        .unionByName(
-            eng.table("lineitem").select(
-                F.round(F.col("l_extendedprice") * 100)
-                .cast("long")
-                .alias("c")
-            )
-        )
-    )
-    return cents.select(
-        F.explode(
-            F.array(*[F.col("c") + F.lit(i) for i in range(4)])
-        ).alias("c")
-    )
-
-
-def _gk_bench_24x(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """24x tier row: the exact windowed build (gk_summary, same
-    params as the gk_quantile row) over the 4x-exploded 6x stream —
-    its one exchange hash-moves every raw value into 32 per-group
-    SORT windows, the cost that grows superlinearly with the blowup."""
-    from knovexlite_spark.ops.quantile import gk_summary
-
-    return gk_summary(
-        _cents_24x(spark, sf_dir),
-        "c",
-        k_build=64,
-        k_compress=32,
-        num_groups=32,
-        merge_fan_in=8,
-    )
-
-
-def _gk_local_bench_24x(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """24x tier row: the bounded-memory local build (gk_summary_local,
-    same params as the gk_local_quantile row) over the same exploded
-    stream — the repartition moves the same compact longs (kept
-    identical to the frozen r13 row SHAPE for comparability; see
-    ``_gk_local_noex_bench`` for the operator's designed shape)."""
-    from knovexlite_spark.ops.quantile import gk_summary_local
-
-    return gk_summary_local(
-        _cents_24x(spark, sf_dir).repartition(32),
-        "c",
-        k=64,
-        k_compress=32,
-        fan_in=16,
-    )
-
-
-def _gk_local_noex_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row (EXTRA cycle, round 14): ``gk_summary_local`` in the
-    operator's DESIGNED shape — NO repartition, map-only over the
-    input's own splits.  The r13 row ('gk_local_quantile') carried a
-    repartition(32) "parallelism aid" copied from the mg_local rows;
-    round-14 measurement showed that exchange (a full pass of the raw
-    values through shuffle write+read) costs MORE than the lost
-    parallelism at every measured scale (sf0.1: 1.3 vs 2.4 s min; 6x:
-    2.5 vs ~5 s; 24x: 3.7 vs ~11 s) — and with it removed the local
-    build beats the exact windowed build by mins at 6x AND 24x, which
-    is the crossing r13 claimed on the wrong row shape.  This is the
-    number a user gets from the documented scale path."""
-    from knovexlite_spark.ops.quantile import gk_summary_local
-
-    eng = Engine.for_dir(spark, sf_dir)
-    cents = (
-        eng.table("orders")
-        .select(F.round(F.col("o_totalprice") * 100).cast("long").alias("c"))
-        .unionByName(
-            eng.table("lineitem").select(
-                F.round(F.col("l_extendedprice") * 100)
-                .cast("long")
-                .alias("c")
-            )
-        )
-    )
-    return gk_summary_local(cents, "c", k=64, k_compress=32, fan_in=16)
-
-
-def _gk_local_noex_bench_24x(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """24x tier row: the designed no-exchange shape over the exploded
-    stream — the pair (exact_24x, this) is the min-based crossing
-    evidence the r13 verdict asked for."""
-    from knovexlite_spark.ops.quantile import gk_summary_local
-
-    return gk_summary_local(
-        _cents_24x(spark, sf_dir), "c", k=64, k_compress=32, fan_in=16
-    )
-
-
-def _profile_bench_src(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared source for the corpus_profile A/B pair: lineitem pruned
-    to the three profiled columns BEFORE the one exchange (a local[32]
-    parallelism aid — at corpus scale file splits replace it)."""
-    li = Engine.for_dir(spark, sf_dir).table("lineitem")
-    return li.select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        F.col("l_partkey").cast("string").alias("part"),
-        F.col("l_orderkey").cast("string").alias("okey"),
-    ).repartition(32)
-
-
-def _corpus_profile_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row (EXTRA cycle, round 14): the ONE-PASS multi-sketch
-    corpus profiler (ops/profile.py) — GK quantile summaries over
-    price cents, Misra-Gries heavy hitters over part keys, HLL
-    distinct registers over order keys, plus count/min/max stats, all
-    from a SINGLE scan of lineitem.  The A/B member ('three_pass')
-    computes the same per-partition summaries through the standalone
-    builds — one scan per family plus a stats scan — so the delta is
-    the scan cost the profiler amortizes, which at 100 TB is the
-    whole job."""
-    from knovexlite_spark.ops.profile import profile_local
-
-    return profile_local(
-        _profile_bench_src(spark, sf_dir),
-        quantile_cols=["cents"],
-        item_cols=["part"],
-        distinct_cols=["okey"],
-        k=64,
-        m=64,
-        p=10,
-    )
-
-
-def _profile_three_pass_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A/B member of ``corpus_profile``: the SAME summaries via the
-    standalone builds — gk_build_local + mg_build_local +
-    hll_registers + a stats aggregate, each taking its own full scan
-    (four scans total; branch outputs mapped into the profiler's tall
-    schema and unioned so both sides materialize comparable rows)."""
-    from knovexlite_spark.ops.quantile import gk_build_local
-    from knovexlite_spark.ops.sketch import hll_registers, mg_build_local
-
-    src = _profile_bench_src(spark, sf_dir)
-    null_s = F.lit(None).cast("string").alias("s")
-    null_z = F.lit(None).cast("long").alias("z")
-    gk = gk_build_local(src, "cents", k=64).select(
-        F.lit("gk").alias("family"),
-        "src",
-        null_s,
-        F.col("v").alias("x"),
-        F.col("rmin").alias("y"),
-        F.col("rmax").alias("z"),
-    )
-    mg = mg_build_local(src, "part", m=64).select(
-        F.lit("mg").alias("family"),
-        "src",
-        F.col("item").alias("s"),
-        F.col("cnt").alias("x"),
-        F.col("err").alias("y"),
-        null_z,
-    )
-    hll = hll_registers(src, "okey", p=10).select(
-        F.lit("hll").alias("family"),
-        F.lit(-1).cast("long").alias("src"),
-        null_s,
-        F.col("bucket").alias("x"),
-        F.col("register").alias("y"),
-        null_z,
-    )
-    st = src.agg(
-        F.count("cents").alias("x"),
-        F.min("cents").alias("y"),
-        F.max("cents").alias("z"),
-    ).select(
-        F.lit("stat").alias("family"),
-        F.lit(-1).cast("long").alias("src"),
-        null_s,
-        "x",
-        "y",
-        "z",
-    )
-    return gk.unionByName(mg).unionByName(hll).unionByName(st)
-
-
-_BPE_MERGES_CACHE: dict[str, list] = {}
-
-
-def _bpe_encode_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row (EXTRA cycle, round 14): BPE ENCODE throughput over
-    the documents table — tokenizer cost is the #1 per-byte cost of a
-    real training-data pipeline, and ops/bpe.bpe_encode (Arrow-batched
-    kernel, broadcast merge ranks, per-task word cache) had never been
-    measured at sf0.1/6x.  The 512-merge table is learned ONCE per
-    sf_dir and cached module-level: training is a separate one-off
-    driver path by design (vocab-sized input), so the row times the
-    ENCODE — the recurring per-corpus cost.  Returns (doc_id, tokens,
-    n_tokens); the noop sink materializes every token."""
-    from knovexlite_spark.ops.bpe import (
-        bpe_encode,
-        learn_bpe_merges,
-        word_frequencies,
-    )
-
-    docs = Engine.for_dir(spark, sf_dir).table("documents")
-    merges = _BPE_MERGES_CACHE.get(sf_dir)
-    if merges is None:
-        merges = learn_bpe_merges(word_frequencies(docs), num_merges=512)
-        _BPE_MERGES_CACHE[sf_dir] = merges
-    return bpe_encode(docs, merges)
-
-
-_BPE_REAL_CACHE: dict[str, tuple] = {}
-
-
-def _bpe_real_setup(spark: SparkSession, sf_dir: str) -> tuple:
-    """Shared fixture for the round-15 BPE rows: a deterministic
-    REALISTIC-VOCABULARY synthetic corpus (30k pseudo-word zipf-ish
-    vocabulary — the documents fixture's 31-word template vocabulary
-    makes any encode over it a cache-hit-path number, the r14 SCALE.md
-    caveat) sized by the sf_dir's documents count (400 words/doc), plus
-    an 8,192-merge table trained on it with the incremental trainer.
-    Corpus is checkpointed and both are cached per sf_dir, so the
-    bench rows time the ENCODE (the recurring per-corpus cost);
-    iteration 1 pays the one-off build, min-based reading skips it."""
-    from knovexlite_spark.ops.bpe import (
-        learn_bpe_merges,
-        synthetic_corpus,
-        word_frequencies,
-    )
-
-    ent = _BPE_REAL_CACHE.get(sf_dir)
-    if ent is None:
-        n_docs = Engine.for_dir(spark, sf_dir).table("documents").count()
-        corpus = synthetic_corpus(
-            spark, n_docs=n_docs, words_per_doc=400, vocab_size=30_000
-        ).localCheckpoint()
-        merges = learn_bpe_merges(
-            word_frequencies(corpus), num_merges=8192
-        )
-        _BPE_REAL_CACHE[sf_dir] = ent = (corpus, merges)
-    return ent
-
-
-def _bpe_encode_real_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row (EXTRA cycle, round 15): the TRANSFERABLE BPE number
-    (r14 verdict #3) — encode a realistic-vocabulary corpus (30k
-    distinct words, zipf-ish, ~2M words at sf0.1) with an 8,192-merge
-    table and a word cache DELIBERATELY SMALLER than the vocabulary
-    (4,096 entries), so the per-new-word merge loop runs on the
-    measured path for the whole run instead of vanishing behind a
-    31-word template vocabulary.  Returns the summary aggregate
-    (n_docs, n_tokens, n_words, n_miss) — corpus hit rate and
-    tokens/s derive from it; the 'cachefull' member is the A/B twin
-    whose cache holds the entire vocabulary, so the member delta is
-    the miss-path (merge-loop) cost itself."""
-    from knovexlite_spark.ops.bpe import bpe_encode
-
-    corpus, merges = _bpe_real_setup(spark, sf_dir)
-    enc = bpe_encode(
-        corpus, merges, cache_size=4096, counters=True
-    )
-    return enc.agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.sum("n_words").alias("n_words"),
-        F.sum("n_miss").alias("n_miss"),
-    )
-
-
-def _bpe_encode_real_fullcache(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """A/B member of ``bpe_encode_real``: identical encode with a
-    cache that holds the ENTIRE vocabulary (30k words < 200k cap), so
-    each distinct word runs the merge loop once and every repeat is a
-    dict hit — the cache-hit-path bound.  The bpe_encode_real-minus-
-    this delta is what the bounded cache's sustained misses cost."""
-    from knovexlite_spark.ops.bpe import bpe_encode
-
-    corpus, merges = _bpe_real_setup(spark, sf_dir)
-    enc = bpe_encode(
-        corpus, merges, cache_size=200_000, counters=True
-    )
-    return enc.agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.sum("n_words").alias("n_words"),
-        F.sum("n_miss").alias("n_miss"),
-    )
-
-
-def _ts_resample_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row (EXTRA cycle, round 11): hypertable-style resample +
-    gap fill (ops/timeseries.py) at its analytics grain — 15 min
-    buckets PER USER over the events table, densified (zero-filled
-    counts, forward-filled value sums).  At sf0.1 that is 1,500 users
-    x ~2,880 buckets = ~4.3M dense rows from 100k events: the spine
-    generation (two-level explode) and the per-key fill window ARE
-    the cost, which is the point of the row."""
-    from knovexlite_spark.ops.timeseries import resample_gap_fill
-
-    ev = Engine.for_dir(spark, sf_dir).table("events")
-    return resample_gap_fill(
-        ev,
-        "ts",
-        "15m",
-        ["user_id"],
-        aggs=[
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,4)")).alias("sv"),
-        ],
-        fill={"n": "zero", "sv": "ffill"},
-    )
-
-
-def _ts_rolling_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row (EXTRA cycle, round 12): moving aggregates over the
-    ts_resample dense series — trailing 8-bucket (2 h) rolling
-    sum/avg/max of the per-user counts plus a span-windowed EWMA of
-    the value sums.  The A/B against ts_resample isolates the rolling
-    tier's cost: its windows partition/order exactly like the fill
-    windows, so the stage adds NO exchange — the delta is pure window
-    evaluation over the ~4.3M dense rows.
-
-    Round-15 optimization (guide §4.2): computed by
-    ``rolling_ewma_fused`` — one vectorized Arrow pass replacing the
-    two stacked Window operators' per-row frame replays.  BIT-identical
-    to the composed ``ewma(rolling(...))`` form (the kernel replays
-    Spark's float evaluation order; pinned by
-    test_rolling_ewma_fused_matches_composition and an sf0.1 %a-hex
-    signature A/B); measured 3.6 -> 2.2 s after the gap_fill
-    parallelism fix (7.9 s before it)."""
-    from knovexlite_spark.ops.timeseries import (
-        resample_gap_fill,
-        rolling_ewma_fused,
-    )
-
-    ev = Engine.for_dir(spark, sf_dir).table("events")
-    dense = resample_gap_fill(
-        ev,
-        "ts",
-        "15m",
-        ["user_id"],
-        aggs=[
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("double")).alias("sv"),
-        ],
-        fill={"n": "zero", "sv": "ffill"},
-    )
-    return rolling_ewma_fused(
-        dense, ["user_id"], {"n": ["sum", "avg", "max"]}, 8,
-        "sv", 0.25, 8, assume_keyed_partitions=True,
-    )
-
-
 # The oracle pins the CONTRACT, not the sketch: Spark computes the
 # verdicts (sketch vs exact in one query); DuckDB emits the all-1s
 # expectation over the same key set.

@@ -49,14 +49,12 @@ def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _text_quality_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench member: the quality features alone (the r1-r5 row shape,
-    kept round-comparable; the PII tier is timed as its own
-    first-class bench row `pii_scrub`)."""
+    """The quality-features part of the `text_quality` gate row."""
     return T.quality_features(_docs(spark, sf_dir))
 
 
 def _pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row `pii_scrub`: the PII tier alone on the planted text —
+    """The PII part of the `text_quality` gate row, on the planted text —
     four regexp_count scans + the chained ordered redaction + redacted
     length (all map-only JVM regex work).  ONE projection (round-15
     optimization, guide §2.4): counts and redacted length are
@@ -173,7 +171,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lang_id_marker(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r1-r9 marker-heuristic form (also the frozen bench row)."""
+    """The marker-heuristic member of the `lang_id` gate row."""
     return T.language_id(_docs(spark, sf_dir))
 
 
@@ -244,129 +242,6 @@ def _docs_boiler(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _substr_dedup_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row: the substring-dedup member alone (span explode +
-    combinable frequency groupBy + semi-join + HOF rebuild) at the
-    production hash keying."""
-    return D.substring_dedup(
-        _docs_boiler(spark, sf_dir),
-        span_tokens=SUBSTR_SPAN,
-        min_count=2,
-        key="hash",
-    )
-
-
-def _ngram_ppl_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row: train a bigram LM on the documents corpus (one
-    combinable n-gram groupBy) and perplexity-score every document
-    against it (broadcast model join + per-doc log-prob agg) — the
-    CCNet-style quality signal end to end (ops/lm.py)."""
-    from knovexlite_spark.ops.lm import score_documents, train_ngram_lm
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    lm = train_ngram_lm(d, n=2)
-    return score_documents(d, lm, n=2)
-
-
-def _bm25_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row: BM25 top-10 retrieval (ops/retrieval.py) — index
-    build (explode + combinable groupBys) + broadcast query-term
-    scoring join + per-query window top-k, end to end.  Queries are
-    the first 8 tokens of the 5 smallest doc_ids (deterministic,
-    guaranteed hits)."""
-    from knovexlite_spark.ops.retrieval import bm25_topk
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    queries = (
-        d.orderBy("doc_id")
-        .limit(5)
-        .select(
-            F.col("doc_id").alias("query_id"),
-            F.array_join(
-                F.slice(F.split(F.trim("text"), r"\s+"), 1, 8), " "
-            ).alias("text"),
-        )
-    )
-    return bm25_topk(d, queries, k=10)
-
-
-def _rrf_fuse_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row: hybrid retrieval — reciprocal-rank fusion
-    (ops/retrieval.rrf_fuse) of the BM25 lexical candidates (the
-    `bm25_topk` fixture: first-8-token queries of the 5 smallest docs)
-    with the dense ANN candidates for the SAME query ids (vec_id and
-    doc_id share the corpus id space, so query 0..4 retrieves against
-    both indexes).  End to end: both candidate generators + the
-    candidate-sized fusion groupBy + per-query re-rank window."""
-    from knovexlite_spark.ops.retrieval import rrf_fuse
-
-    lexical = _bm25_bench(spark, sf_dir).select("query_id", "doc_id", "rn")
-    dense = _ann_brute(spark, sf_dir).select(
-        "query_id", F.col("neighbor_id").alias("doc_id"), "rn"
-    )
-    return rrf_fuse([lexical, dense], k=60, out_k=10)
-
-
-def _semantic_dedup_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row: the production SemDeDup path end to end
-    (ops/cluster.semantic_dedup) on the halved-copy embedding plant —
-    kmeans_fit (3 Lloyd iterations: Arrow argmin kernel + combinable
-    per-dim groupBy per iteration), per-cell tiled-GEMM pair search,
-    pointer-jumping closure + canonical survivor."""
-    from knovexlite_spark.ops.cluster import semantic_dedup
-
-    return semantic_dedup(
-        _emb_semsrc(spark, sf_dir), k=8, threshold=0.95, max_iter=3
-    )
-
-
-def _domain_cap_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row for cap_per_domain (round-7 ask #7).  The documents
-    corpus carries no URLs, so the fixture injects a deterministic URL
-    per even doc (37 synthetic domains, ~doc_count/74 docs each) and
-    caps at 20 docs/domain — exercising the extract -> domain ->
-    hash-rank window path with real evictions; odd docs stay URL-free
-    and pass through uncapped."""
-    from knovexlite_spark.ops.sample import cap_per_domain
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 2 == 0,
-            F.concat(
-                F.lit("http://site"),
-                (F.col("doc_id") % 37).cast("string"),
-                F.lit(".example.com/p "),
-                F.col("text"),
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    return cap_per_domain(d, max_docs=20)
-
-
-def _clf_score_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row: the funnel's clf_score stage shape (ops/classifier.py)
-    — 3 full-batch logistic-GD epochs (ONE Spark job each) on an
-    every-100th-doc positive slice vs a disjoint equal-rate negative
-    slice, then ONE broadcast-model scoring pass over the full corpus.
-    Training runs eagerly inside the callable (driver-looped epochs,
-    parameter-sized collects); the returned frame is the corpus-sized
-    scoring pass, so the timed noop save covers train + score end to
-    end — the same envelope the curation funnel reports."""
-    from knovexlite_spark.ops.classifier import (
-        classify,
-        train_quality_classifier,
-    )
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    pos = d.filter(F.col("doc_id") % 100 == 0)
-    neg = d.filter(F.col("doc_id") % 100 == 50)
-    w, bias = train_quality_classifier(pos, neg, n_buckets=1 << 14, epochs=3)
-    return classify(d, w, bias)
-
-
 def _c4_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic C4-rule fixture: the raw corpus is one unpunctuated
     line per doc (every C4 rule would fire the same way on every doc),
@@ -401,17 +276,6 @@ def _c4_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("text"),
     )
-
-
-def _pagerank_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench row: 5 synchronous PageRank power steps over the bridge
-    KG edge set (ops/graph.pagerank) — the iterative join-aggregate-
-    rejoin loop, ONE job per step, node-sized rank frame moving
-    against a reusable edge partitioning."""
-    from knovexlite_spark.ops.graph import pagerank
-
-    engine = Engine.for_dir(spark, sf_dir)
-    return pagerank(engine.triples.select("h", "t"), iterations=5)
 
 
 # --- raw-crawl ingest gate (round 9) ---------------------------------------
@@ -700,26 +564,10 @@ def _minhash_base_default(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Member 'base': the SHIPPED DEFAULT path (restrict_verify=True —
     the asymmetric-risk default; the adaptive "auto" mode was built,
     measured, and deliberately NOT made default — see SCALE.md) on the
-    baseline-density fixture.  This is the number a user gets; bench
-    row `dedup_minhash_default` times it first-class."""
+    baseline-density fixture.  This is the configuration a user
+    runs."""
     out = D.minhash_near_duplicates(
         _docs_basedup(spark, sf_dir), threshold=0.8, raw_counts=True
-    )
-    return out.select("doc_a", "doc_b", "inter", F.col("union").alias("un"))
-
-
-def _minhash_base_default_xx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench member: the default path with the xxhash64 signature
-    family — the PRODUCTION hash (one salted JVM hash per signature
-    slot vs two md5 calls per shingle) that the gate cannot use
-    because DuckDB must replay the family.  Timed as a member of
-    `dedup_minhash_default` so the artifact carries both the
-    oracle-replayable and the production family cost."""
-    out = D.minhash_near_duplicates(
-        _docs_basedup(spark, sf_dir),
-        threshold=0.8,
-        raw_counts=True,
-        family="xxhash64",
     )
     return out.select("doc_a", "doc_b", "inter", F.col("union").alias("un"))
 
@@ -745,18 +593,6 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("base").alias("member"), "doc_a", "doc_b", "inter", "un"
     )
     return selfu.unionByName(base)
-
-
-def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench member: stage 1 of q_dedup_minhash only (shingle explode +
-    single-pass signature aggregation)."""
-    return D.minhash_signatures(_docs_selfunion(spark, sf_dir))
-
-
-def _minhash_cand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench member: stages 1-2 of q_dedup_minhash (signatures + banded
-    LSH candidate join, before exact Jaccard verification)."""
-    return D.minhash_lsh_candidates(_minhash_sigs(spark, sf_dir))
 
 
 def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -165,8 +165,7 @@ SHARED_SQL: dict[str, str] = {
         FROM lineitem
     """,
     # Q18: widened to a tagged union in round 11 (win + tsr members);
-    # declared below, outside SHARED_SQL.  _Q18_FROZEN_SQL keeps the
-    # r1-r10 form byte-identical for the frozen bench core row.
+    # declared below, outside SHARED_SQL.
     # Q23 TPC-H Q5-style 6-way join (join-reorder + broadcast-dim stress;
     # local-supplier revenue per nation within one region)
     "q23_local_supplier_revenue": """
@@ -235,14 +234,6 @@ def _runner(sql: str) -> Callable[[SparkSession, str], DataFrame]:
 #         by resample_duckdb_sql from the same parameters
 #         (generate_series spine, LAST_VALUE ... IGNORE NULLS fill).
 
-# r1-r10 q18, byte-identical — the frozen bench core row times this
-# form (the bench-pin convention of dedup_minhash/lang_id/ann_topk).
-_Q18_FROZEN_SQL = """
-        SELECT DATE_TRUNC('HOUR', ts) AS w, event_type, COUNT(*) AS c,
-               CAST(SUM(CAST(value AS DECIMAL(18,4))) AS STRING) AS s
-        FROM events GROUP BY 1, 2 ORDER BY 1, 2
-    """
-
 # dialect-intersection SQL: the Spark side runs this exact string too
 _Q18_WIN_MEMBER_SQL = """
     SELECT 'win' AS member, DATE_TRUNC('HOUR', ts) AS w,
@@ -266,12 +257,6 @@ _Q18_TSM_WINDOW = 6
 # frame (no spine, no fills), so observed buckets answer time-window
 # questions without paying the dense grid.  Replayed by the same
 # generator with frame='range' over the emit='agg' dense twin.
-
-
-def _q18_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench-only: the r1-r10 q18 shape (frozen CORE composition)."""
-    Engine.for_dir(spark, sf_dir)
-    return spark.sql(_Q18_FROZEN_SQL)
 
 
 def _q18_agg(spark: SparkSession, sf_dir: str) -> DataFrame:

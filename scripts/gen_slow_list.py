@@ -47,6 +47,7 @@ ALWAYS_RUN_FILES = {
 }
 ALWAYS_RUN_TESTS = {
     "test_core_boundary.py::test_core_imports_load_no_curation_module",
+    "test_core_boundary.py::test_every_script_imports",
     "test_engine_api.py::test_efo_augmented_inverse_query",
     "test_engine_api.py::test_efo_below_gate_runs_no_spark_job",
     "test_engine_api.py::test_efo_concurrent_first_calls_build_adjacency_once",

@@ -1,21 +1,22 @@
-"""Scale rehearsal: blow the sf0.1 testdata up K-fold (default 10 — an
-sf1 equivalent), run the bench headline set against it, and print
-per-query timings next to the sf0.1 numbers.
+"""Scale blow-up: write the sf0.1 testdata K-fold (at most 6 for the
+shipped data; see ``build_blowup``) as a new parquet directory, for
+measuring the Spark paths at a size the test data does not reach.
 
 The blow-up is K id-shifted copies with FULL foreign-key consistency:
 orders are densely renumbered first (TPC-H orderkeys are sparse; dense
 keys keep every copy inside the KG bridge encoding's 1M id band, so the
 EFO queries stay semantically well-formed), then each copy shifts every
 key family by copy_index * (max_key + 1).  nation/region stay shared
-dims — 10x customers over the same 25 nations, which also makes the
-dim-broadcast behavior representative.
+dims — Kx customers over the same 25 nations, which also makes the
+dim-broadcast behavior representative.  REHEARSAL_SALT_DOCS=1 salts
+each copy's document text so near-duplicate density stays at the
+baseline rate.
 
 Usage: python scripts/scale_rehearsal.py [K] [dst_dir]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
@@ -29,23 +30,6 @@ from knovexlite_spark.datasets import load_tables
 from knovexlite_spark.session import get_spark
 
 SRC = "/root/testdata/sf0.1"
-
-# Reasoning/pipeline gates measured in ADDITION to the bench headline
-# set (round-2 verdict ask: the 6x table covered relational/EFO/pipeline
-# queries only, leaving the beam pipeline, the QAA driver loop, and the
-# banded embedding near-dup without measured growth curves).
-REASONING_GATES = (
-    "cqd_beam",
-    "qaa_lifecycle",
-    "emb_neardup",
-    # round 4: streaming + skew gates join the measured set — their
-    # scale risks (state-store growth, hot-key amplification) are also
-    # output/row shaped, so the same rows-next-to-timings protocol
-    # applies
-    "stream_windows",
-    "stream_stateful",
-    "skew_salted_agg",
-)
 
 
 def build_blowup(spark, k: int | None, dst: str) -> int:
@@ -153,82 +137,9 @@ def main() -> None:
     dst = sys.argv[2] if len(sys.argv) > 2 else f"/tmp/sf_blowup_{k or 'auto'}x"
     spark = get_spark(app_name="scale_rehearsal")
     spark.sparkContext.setLogLevel("ERROR")
-
     t0 = time.time()
-    if os.environ.get("REHEARSAL_REUSE") and os.path.exists(dst):
-        # Reuse an existing blow-up (the write is the expensive half and
-        # is deterministic for a given K); K must be passed explicitly so
-        # the report labels the corpus correctly.
-        if k is None:
-            raise ValueError("REHEARSAL_REUSE requires an explicit K argument")
-        print(f"reusing existing blow-up at {dst}", file=sys.stderr)
-    else:
-        k = build_blowup(spark, k, dst)
-        print(f"blow-up x{k} written to {dst} in {time.time() - t0:.1f}s", file=sys.stderr)
-
-    from bench import headline_queries
-    from knovexlite_spark.engine import Engine
-    from knovexlite_spark.queries import registry
-
-    warm = Engine.for_dir(spark, dst)
-    for df in warm.tables.values():
-        df.limit(1).count()
-
-    all_q = dict(headline_queries())
-    reg = registry.queries()
-    for name in REASONING_GATES:
-        all_q[name] = reg[name]
-    # REHEARSAL_ONLY=name1,name2 restricts the measured set so long gate
-    # runs fit separate invocations (the blow-up is reusable via
-    # REHEARSAL_REUSE, so splitting costs nothing).
-    only = os.environ.get("REHEARSAL_ONLY")
-    if only:
-        keep = {s.strip() for s in only.split(",")}
-        all_q = {n: f for n, f in all_q.items() if n in keep}
-
-    timings: dict[str, float] = {}
-    rows: dict[str, int] = {}
-    for name, fn in all_q.items():
-        q0 = time.time()
-        out = fn(spark, dst)
-        if name in REASONING_GATES:
-            # These gates' scale risks are output/collect-size shaped
-            # (k-hop anchor ball, candidate pairs), so record row counts
-            # next to timings.
-            rows[name] = out.count()
-        else:
-            out.write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.time() - q0, 3)
-
-    # Same three gates at the sf0.1 base for an in-process apples-to-
-    # apples ratio (the headline set's base numbers come from bench.py).
-    warm_src = Engine.for_dir(spark, SRC)
-    for df in warm_src.tables.values():
-        df.limit(1).count()
-    base_timings: dict[str, float] = {}
-    base_rows: dict[str, int] = {}
-    for name in REASONING_GATES:
-        if name not in all_q:
-            continue
-        q0 = time.time()
-        base_rows[name] = reg[name](spark, SRC).count()
-        base_timings[name] = round(time.time() - q0, 3)
-
-    print(
-        json.dumps(
-            {
-                "metric": "headline_total_blowup",
-                "value": round(sum(timings.values()), 3),
-                "unit": "sec",
-                "queries": timings,
-                "rows_blowup": rows,
-                "reasoning_base_sec": base_timings,
-                "rows_base": base_rows,
-                "blowup": k,
-                "base_sf": 0.1,
-            }
-        )
-    )
+    k = build_blowup(spark, k, dst)
+    print(f"blow-up x{k} written to {dst} in {time.time() - t0:.1f}s", file=sys.stderr)
 
 
 if __name__ == "__main__":

@@ -1,5 +1,6 @@
 """The graph-database core stands apart from the curation tier:
-importing it loads no ``ops`` or ``streaming`` module."""
+importing it loads no ``ops`` or ``streaming`` module.  Every kept
+script still imports."""
 
 import subprocess
 import sys
@@ -29,3 +30,32 @@ def test_core_imports_load_no_curation_module():
     ).stdout.splitlines()
     assert int(out[0]) >= 20  # every core module was imported
     assert out[1:] == [""], out[1:]
+
+
+_SCRIPTS_PROBE = """
+import glob, importlib.util, os, sys
+names = []
+for path in sorted(glob.glob(os.path.join("scripts", "*.py"))):
+    name = "script_" + os.path.basename(path)[:-3]
+    spec = importlib.util.spec_from_file_location(name, path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)  # module body only; main() stays unrun
+    sys.modules[name] = mod
+    names.append(name)
+print(" ".join(names))
+print(callable(getattr(sys.modules.get("script_scale_rehearsal"), "build_blowup", None)))
+print("bench" in sys.modules)
+"""
+
+
+def test_every_script_imports():
+    """Each ``scripts/*.py`` loads without running ``main``: a deletion
+    elsewhere cannot leave a kept script with a dangling import."""
+    out = subprocess.run(
+        [sys.executable, "-c", _SCRIPTS_PROBE], cwd=_ROOT, capture_output=True, text=True
+    )
+    assert out.returncode == 0, out.stderr
+    names, blowup, bench = out.stdout.splitlines()
+    assert "script_scale_rehearsal" in names.split(), names
+    assert blowup == "True"
+    assert bench == "False"

@@ -35,33 +35,3 @@ def test_rows_only_set_is_intentional():
     no_oracle = qs - set(registry.oracle_sql())
     assert not no_oracle, f"unexpected rows-only queries: {no_oracle}"
 
-
-def test_bench_query_references_resolve():
-    """bench.py names registry rows (and gate-member internals) by
-    string/attribute; a rename must fail HERE, not at bench time."""
-    import bench
-
-    qs = bench.headline_queries()
-    assert len(qs) >= 16 and all(callable(f) for f in qs.values())
-    # round-6 first-class bench rows: the shipped-default dedup path
-    # and the PII tier (gate rows grew members; bench rows stay
-    # round-comparable by timing the members separately)
-    assert "dedup_minhash_default" in qs and "pii_scrub" in qs
-    members = bench.member_queries()
-    for row, mems in members.items():
-        assert row in qs, f"member row {row} not in headline set"
-        assert all(callable(f) for f in mems.values())
-    # the member STRUCTURE is part of the artifact contract: a rename in
-    # queries/pipeline.py must fail here, not leave BENCH_r{N} with a
-    # silently missing stage breakdown
-    assert set(members) == {
-        "ann_topk",
-        "dedup_minhash",
-        "dedup_minhash_default",
-        "corpus_profile",
-        "bpe_encode_real",
-    }
-    assert set(members["ann_topk"]) == {"brute", "ivf_full"}
-    assert set(members["dedup_minhash"]) == {"sigs", "cand", "full"}
-    assert set(members["dedup_minhash_default"]) == {"md5", "xxhash64"}
-    assert set(members["bpe_encode_real"]) == {"cache4k", "cachefull"}

@@ -205,35 +205,6 @@ def test_temperature_weights_upsample_low_resource(spark):
         temperature_weights(counts, alpha=1.5)
 
 
-def test_curation_funnel_runs_end_to_end(spark):
-    """Pin scripts/curation_rehearsal.run against rot: the full funnel
-    (quality -> language -> exact dedup -> near dedup -> split+pack)
-    executes on sf0.001 documents with a monotone nonincreasing
-    survivor count and consistent split totals."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "curation_rehearsal",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "scripts",
-            "curation_rehearsal.py",
-        ),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    docs = _docs(spark)
-    res = mod.run(spark, docs, "sf0.001")
-    rows = [s["rows"] for s in res["stages"]]
-    assert rows[0] == docs.count()
-    assert all(a >= b for a, b in zip(rows, rows[1:]))  # a funnel
-    assert rows[-1] > 0
-    assert sum(v["docs"] for v in res["splits"].values()) == rows[-1]
-    assert all(v["bins"] >= 1 for v in res["splits"].values())
-
-
 def test_selection_ops_run_on_streams(spark):
     """The hash-selection operators are stateless column predicates, so
     they compose into a Structured Streaming ingest pipeline unchanged
