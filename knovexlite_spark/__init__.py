@@ -8,8 +8,8 @@ Capabilities (see SURVEY.md for the reference-parity map):
 - EFO (existential first-order) logic query language: parse, NNF/DNF
   normalize, compile to DataFrame join plans (exact set semantics)
 - Neural scoring semantics: KGE models (TransE/DistMult/ComplEx/RotatE/
-  RESCAL/SWTransE/ConvE-stub) as vectorized NumPy kernels, CQD beam
-  search, LMPNN message passing, fuzzy t-norms
+  RESCAL/SWTransE/ConvE) as vectorized NumPy kernels, CQD beam search,
+  LMPNN message passing
 - Ranking metrics (MRR / Hits@K, filtered protocol)
 - Full relational surface via Spark SQL (joins, windows, rollup,
   grouping sets, set ops, string/date/math functions)

@@ -15,16 +15,15 @@ defects listed in SURVEY §2.9 are NOT reproduced):
   (swtranse.py:40-68)
 - ConvE    — conv scorer (reshape/stack -> 3x3 conv -> ReLU -> linear
   projection) in pure NumPy, inference-only (conve.py:8-161)
-- inverse-relation lookup — pair-flip arithmetic r -> 2*(r//2)+(r%2^1)
-  (transe.py:48-56)
 
 Spark surface: embeddings live in DataFrames ``(id, vec ARRAY<FLOAT>)``
 for storage, but scoring gathers from a *broadcast NumPy matrix* inside
-``mapInPandas`` — the candidates × num_entities block never materializes
-as rows (SURVEY §4.2).  Two operators: ``score_triples`` (one score per
-row) and ``score_all_tails_grouped_max`` (every entity as a tail, max
-per group), which shards the entity axis by itself above the broadcast
-ceiling ``ENT_BROADCAST_MAX_BYTES``.
+the Python kernel — the candidates × num_entities block never
+materializes as rows (SURVEY §4.2).  ``tails_grouped_max`` is the one
+all-entity scoring loop: CQD's beam levels call it on the driver or in
+their kernel, and the operator ``score_all_tails_grouped_max`` calls it
+per Arrow batch.  Each reads the whole entity matrix, so a store above
+``ENT_BROADCAST_MAX_BYTES`` is rejected before any job runs.
 """
 
 from __future__ import annotations
@@ -37,7 +36,6 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 # --------------------------------------------------------------------------
@@ -245,11 +243,6 @@ class ConvE(KGEModel):
         return est @ entities.T
 
 
-def inverse_relation_ids(rel_ids: np.ndarray) -> np.ndarray:
-    """E8 pair-flip: 2i <-> 2i+1 (transe.py:48-56)."""
-    return (rel_ids // 2) * 2 + ((rel_ids % 2) + 1) % 2
-
-
 # --------------------------------------------------------------------------
 # embedding store (broadcast matrices + DataFrame form)
 # --------------------------------------------------------------------------
@@ -288,18 +281,30 @@ class EmbeddingStore:
         load path). Embedding tables are model parameters — orders of
         magnitude smaller than data — so a driver collect + broadcast is
         the correct distribution strategy.  The frames cross as one
-        Arrow table each; no Python object is built per row."""
+        Arrow table each; no Python object is built per row.  A frame
+        that is empty, ragged, or whose ids are not 0..N-1 once each
+        raises ``ValueError``."""
 
-        def to_mat(df: DataFrame) -> np.ndarray:
+        def to_mat(df: DataFrame, name: str) -> np.ndarray:
             tbl = df.select("id", "vec").toArrow()
+            if tbl.num_rows == 0:
+                raise ValueError(f"{name} checkpoint is empty")
             ids = tbl.column("id").to_numpy()
+            uniq, counts = np.unique(ids, return_counts=True)
+            if (counts > 1).any():
+                raise ValueError(f"{name} checkpoint has duplicate ids: {uniq[counts > 1][:5]}")
+            if uniq[0] != 0 or uniq[-1] != len(uniq) - 1:
+                raise ValueError(f"{name} checkpoint ids are not 0..{len(uniq) - 1}: "
+                                 f"{len(uniq)} ids span [{uniq[0]}, {uniq[-1]}]")
             vecs = tbl.column("vec").combine_chunks()
+            if len(np.unique(vecs.value_lengths().to_numpy(zero_copy_only=False))) != 1:
+                raise ValueError(f"{name} checkpoint has ragged vectors")
             vals = vecs.flatten().to_numpy(zero_copy_only=False).reshape(len(vecs), -1)
-            mat = np.zeros((ids.max() + 1, vals.shape[1]), dtype=np.float32)
+            mat = np.empty(vals.shape, dtype=np.float32)
             mat[ids] = vals
             return mat
 
-        return cls(to_mat(ent_df), to_mat(rel_df))
+        return cls(to_mat(ent_df, "entity"), to_mat(rel_df, "relation"))
 
     def to_dataframes(self, spark: SparkSession) -> tuple[DataFrame, DataFrame]:
         """``(id LONG, vec ARRAY<FLOAT>)`` frames built through Arrow
@@ -317,68 +322,27 @@ class EmbeddingStore:
 
 
 # --------------------------------------------------------------------------
-# Spark scoring operators
+# all-entity scoring
 # --------------------------------------------------------------------------
 
 # The whole-matrix broadcast ceiling.  A broadcast is held whole on the
 # driver and on every executor, so the entity matrix must fit beside a
 # working heap: 100 M entities x 64 dims x 4 B = 25.6 GB is the
-# practical limit (SCALE.md "Neural scoring").  Above it the all-entity
-# kernel shards the entity axis into ceil(nbytes / ceiling) slices.
+# practical limit (SCALE.md "Neural scoring").  Every all-entity scorer
+# reads the whole matrix and rejects a larger store.
 ENT_BROADCAST_MAX_BYTES = 100_000_000 * 64 * 4
 
-# Scores in flight per kernel step: a group's source rows are scored
-# in chunks of MAX_FLUX // N rows, the reference's adaptive chunking
+# Scores in flight per kernel step: source rows are scored in chunks of
+# MAX_FLUX // N rows, the reference's adaptive chunking
 # (complex.py:18, 59-96).
 MAX_FLUX = 100_000
-
-# Column holding the joined head vector on the sharded path.
-_HVEC = "__hvec"
-
-
-def score_triples(
-    df: DataFrame,
-    model: KGEModel,
-    store: EmbeddingStore,
-    h_col: str = "h",
-    r_col: str = "r",
-    t_col: str = "t",
-    neg_col: str | None = None,
-    out_col: str = "score",
-) -> DataFrame:
-    """J3: per-row triple scoring via an Arrow-batched kernel; J4 fuzzy
-    negation flips the sign (abstract_kge.py:160-163).  The embedding
-    matrices ride a Spark broadcast — one copy per executor."""
-    spark = df.sparkSession
-    b_ent = spark.sparkContext.broadcast(store.ent)
-    b_rel = spark.sparkContext.broadcast(store.rel)
-    fields = df.schema.fieldNames()
-    out_schema = ", ".join(
-        [df.schema[f].simpleString().replace(":", " ", 1) for f in fields]
-        + [f"{out_col} double"]
-    )
-
-    def score_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ent, rel = b_ent.value, b_rel.value
-        for pdf in it:
-            h = ent[pdf[h_col].to_numpy()]
-            r = rel[pdf[r_col].to_numpy()]
-            t = ent[pdf[t_col].to_numpy()]
-            s = model.score(h, r, t).astype(np.float64)
-            if neg_col is not None:
-                s = np.where(pdf[neg_col].to_numpy().astype(bool), -s, s)
-            pdf = pdf.copy()
-            pdf[out_col] = s
-            yield pdf
-
-    return df.mapInPandas(score_batches, schema=out_schema)
 
 
 def _check_ids(ids: np.ndarray, size: int, name: str) -> np.ndarray:
     """``ids`` if every one indexes a matrix row, else ValueError — a
     negative id would otherwise gather ``mat[-1]`` silently, and a NULL
-    one (an instance whose bindings lack a symbol; NaN once pandas
-    holds it) would fail as an IndexError."""
+    one (an instance whose bindings lack a symbol; NaN once NumPy holds
+    it) would fail as an IndexError."""
     if pd.isna(ids).any():
         raise ValueError(f"{name} ids are NULL: an instance lacks a binding")
     bad = (ids < 0) | (ids >= size)
@@ -387,24 +351,42 @@ def _check_ids(ids: np.ndarray, size: int, name: str) -> np.ndarray:
     return ids
 
 
-def _shard_offsets(store: EmbeddingStore) -> range:
-    """First tail id of each entity-axis shard: ``[0]`` (the whole
-    matrix) at or below ``ENT_BROADCAST_MAX_BYTES``, otherwise
-    ``ceil(nbytes / ENT_BROADCAST_MAX_BYTES)`` equal slices."""
-    n = store.ent.shape[0]
-    n_shards = max(1, -(-store.ent.nbytes // ENT_BROADCAST_MAX_BYTES))
-    return range(0, max(n, 1), max(1, -(-n // n_shards)))
-
-
-def _is_whole(store: EmbeddingStore) -> bool:
-    """True when the entity matrix is broadcast whole (one shard)."""
-    return len(_shard_offsets(store)) == 1
+def tails_grouped_max(
+    model: KGEModel,
+    ent: np.ndarray,
+    rel: np.ndarray,
+    starts: np.ndarray,
+    h: np.ndarray,
+    r: np.ndarray,
+    acc: np.ndarray,
+    neg: np.ndarray,
+) -> np.ndarray:
+    """J2 + A1: every entity as a candidate tail of each ``(h, r)``
+    source row, max per (group, tail).  Rows are sorted by group and
+    ``starts`` holds each group's first row; ``h``, ``r``, ``acc``
+    (float, added to the edge score: the log-space product combine,
+    cqd.py:319-320) and ``neg`` (bool, flips the edge score's sign) are
+    per row.  Returns [G, N] float64, scoring ``MAX_FLUX // N`` rows at
+    a time."""
+    n_rows, n = len(h), ent.shape[0]
+    step = max(1, MAX_FLUX // max(n, 1))
+    best = np.full((len(starts), n), -np.inf)
+    for lo in range(0, n_rows, step):
+        hi = min(lo + step, n_rows)
+        # the groups with rows in [lo, hi) and where each begins there
+        g0, g1 = np.searchsorted(starts, lo, "right") - 1, np.searchsorted(starts, hi)
+        cuts = np.maximum(starts[g0:g1], lo) - lo
+        s = model.score_all(ent[h[lo:hi]], rel[r[lo:hi]], ent).astype(np.float64)
+        np.negative(s, out=s, where=neg[lo:hi, None])
+        s += acc[lo:hi, None]
+        best[g0:g1] = np.maximum(best[g0:g1], np.maximum.reduceat(s, cuts, axis=0))
+    return best
 
 
 class BroadcastPair:
-    """A reasoner's ``(entity, relation)`` broadcast pair, made by
-    ``make(sc)`` on first use and held for that SparkContext.  Every
-    lazy frame the reasoner returns reads the same pair, so it must
+    """An all-entity kernel's ``(entity, relation)`` broadcast pair, made
+    by ``make(sc)`` on first use and held for that SparkContext.  Every
+    lazy frame its owner returns reads the same pair, so it must
     outlive any one call; a new context (the old one stopped, taking its
     broadcasts with it) gets a new pair.  Safe to share across threads."""
 
@@ -422,13 +404,13 @@ class BroadcastPair:
 
     @classmethod
     def whole(cls, store: EmbeddingStore) -> "BroadcastPair":
-        """The pair of a reasoner whose kernel reads the whole entity
-        matrix (CQD's beam search, LMPNN's update net).  Neither has a
-        sharded path, so a store above ``ENT_BROADCAST_MAX_BYTES`` raises
-        ``ValueError`` here, at the reasoner's construction."""
-        if not _is_whole(store):
+        """The pair of a kernel that reads the whole entity matrix (CQD's
+        beam search, LMPNN's update net, ``score_all_tails_grouped_max``):
+        a store above ``ENT_BROADCAST_MAX_BYTES`` raises ``ValueError``
+        here, before any job."""
+        if store.ent.nbytes > ENT_BROADCAST_MAX_BYTES:
             raise ValueError(f"entity matrix of {store.ent.nbytes} B is above the broadcast "
-                             f"ceiling of {ENT_BROADCAST_MAX_BYTES} B; the reasoners need it whole")
+                             f"ceiling of {ENT_BROADCAST_MAX_BYTES} B; all-entity scoring needs it whole")
         return cls(lambda sc: (sc.broadcast(store.ent), sc.broadcast(store.rel)))
 
 
@@ -440,89 +422,50 @@ def score_all_tails_grouped_max(
     neg_col: str | None = None,
     group_cols: tuple[str, ...] = ("query_id",),
 ) -> DataFrame:
-    """J2 + A1: score every entity as a candidate tail of each ``(h, r)``
-    source row, then take the max per (group, tail) inside the kernel.
-
-    The theta-join against all entities is a mat-mul on a broadcast
-    entity matrix inside ``mapInPandas`` (never a crossJoin of rows —
-    SURVEY §4.2).  ``neg_col`` (boolean) flips an edge score's sign
-    (fuzzy negation); ``acc_col`` is a source score ADDED to the edge
-    score (log-space product combine, cqd.py:319-320).  The kernel
-    emits N rows per (partition, group), not N per source row.
+    """``tails_grouped_max`` over the ``(h, r)`` source rows of ``df``:
+    each Arrow batch is sorted by ``group_cols`` in one stable sort and
+    scored against the broadcast entity matrix in one ``mapInArrow``
+    stage (never a crossJoin of rows — SURVEY §4.2).  ``neg_col``
+    (boolean) flips an edge score's sign (fuzzy negation); ``acc_col``
+    is a source score ADDED to the edge score.  The kernel emits N rows
+    per (batch, group), not N per source row.
 
     Output ``(t, score, *group_cols)`` is a PARTIAL aggregate: a group
-    split across partitions appears once per partition, so callers
-    merge with ``groupBy(*group_cols, "t").max("score")``.  Ids in
-    ``h`` or ``r`` outside the matrices raise ``ValueError``.
-
-    Above ``ENT_BROADCAST_MAX_BYTES`` the entity axis is sharded (see
-    ``_shard_offsets``): head vectors are joined from the ``(id, vec)``
-    entity table, the frame is snapshotted once, and the shards run one
-    job at a time, each broadcasting only its slice and releasing it
-    once its partials are checkpointed.  The merge contract is the
-    same.
-    """
-    sc = df.sparkSession.sparkContext
+    split across batches appears once per batch, so callers merge with
+    ``groupBy(*group_cols, "t").max("score")``.  Ids in ``h`` or ``r``
+    outside the matrices, or a NULL group key, raise ``ValueError``; a
+    store above ``ENT_BROADCAST_MAX_BYTES`` raises before any job."""
+    b_ent, b_rel = BroadcastPair.whole(store).get(df.sparkSession.sparkContext)
     n_ent, n_rel = store.ent.shape[0], store.rel.shape[0]
-    whole = _is_whole(store)
     gcols = list(group_cols)
     schema = "t long, score double" + "".join(f", {c} long" for c in gcols)
 
-    def kernel(b_ent, b_rel, lo: int):
-        """gather -> score_all -> negate -> add acc -> per-group max
-        against the entity slice ``b_ent`` whose first tail id is
-        ``lo``.  With one shard the slice is the whole matrix and heads
-        are gathered from it; otherwise they arrive joined as _HVEC."""
+    def expand(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        ent, rel = b_ent.value, b_rel.value
+        tails = np.arange(n_ent, dtype=np.int64)
+        for batch in batches:
 
-        def expand(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ent, rel = b_ent.value, b_rel.value
-            sn = ent.shape[0]
-            rows_per = max(1, MAX_FLUX // max(sn, 1))
-            tails = np.arange(lo, lo + sn, dtype=np.int64)
-            for pdf in it:
-                for gvals, part in pdf.groupby(gcols, sort=False):
-                    if not isinstance(gvals, tuple):
-                        gvals = (gvals,)
-                    best: np.ndarray | None = None
-                    for plo in range(0, len(part), rows_per):
-                        chunk = part.iloc[plo : plo + rows_per]
-                        h_ids = _check_ids(chunk["h"].to_numpy(), n_ent, "h")
-                        if whole:
-                            h = ent[h_ids]
-                        else:
-                            h = np.stack(chunk[_HVEC].to_numpy()).astype(np.float32)
-                        r = rel[_check_ids(chunk["r"].to_numpy(), n_rel, "r")]
-                        s = model.score_all(h, r, ent).astype(np.float64)  # [b, sn]
-                        if neg_col is not None:
-                            neg = chunk[neg_col].to_numpy().astype(bool)
-                            s = np.where(neg[:, None], -s, s)
-                        if acc_col is not None:
-                            s = s + chunk[acc_col].to_numpy()[:, None]
-                        m = s.max(axis=0)
-                        best = m if best is None else np.maximum(best, m)
-                    out = {"t": tails, "score": best}
-                    for c, v in zip(gcols, gvals):
-                        out[c] = np.full(sn, v, dtype=np.int64)
-                    yield pd.DataFrame(out)
+            def col(c: str) -> np.ndarray:
+                return batch.column(c).to_numpy(zero_copy_only=False)
 
-        return expand
+            for c in gcols:
+                if batch.column(c).null_count:
+                    raise ValueError(f"{c} is NULL: a row without a group has no max")
+            # one stable sort by the group key; a group starts where any
+            # key column changes
+            keys = np.stack([col(c) for c in gcols]).astype(np.int64)  # [C, R]
+            order = np.lexsort(keys[::-1])
+            keys = keys[:, order]
+            new = np.ones(len(order), dtype=bool)
+            new[1:] = (keys[:, 1:] != keys[:, :-1]).any(axis=0)
+            starts = np.flatnonzero(new)
+            h = _check_ids(col("h")[order], n_ent, "h")
+            r = _check_ids(col("r")[order], n_rel, "r")
+            acc = col(acc_col)[order] if acc_col else np.zeros(len(order))
+            neg = col(neg_col)[order].astype(bool) if neg_col else np.zeros(len(order), dtype=bool)
+            best = tails_grouped_max(model, ent, rel, starts, h, r, acc, neg)
+            out = {"t": np.tile(tails, len(starts)), "score": best.ravel()}
+            out.update({c: np.repeat(keys[i, starts], n_ent) for i, c in enumerate(gcols)})
+            yield pa.record_batch(out)
 
-    b_rel = sc.broadcast(store.rel)
-    if whole:
-        return df.mapInPandas(kernel(sc.broadcast(store.ent), b_rel, 0), schema=schema)
-
-    ent_df, _ = store.to_dataframes(df.sparkSession)
-    heads = F.col("vec").alias(_HVEC)
-    withv = df.join(ent_df.select(F.col("id").alias("h"), heads), "h", "left")
-    # one snapshot feeds every shard, so the join (and any
-    # nondeterministic upstream) runs once
-    withv = withv.localCheckpoint(eager=True)
-    out: DataFrame | None = None
-    offsets = _shard_offsets(store)
-    for lo in offsets:
-        b_shard = sc.broadcast(store.ent[lo : lo + offsets.step])
-        part = withv.mapInPandas(kernel(b_shard, b_rel, lo), schema=schema)
-        part = part.localCheckpoint(eager=True)
-        b_shard.unpersist(blocking=False)
-        out = part if out is None else out.unionByName(part)
-    return out
+    return df.mapInArrow(expand, schema=schema)

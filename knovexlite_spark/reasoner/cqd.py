@@ -12,6 +12,8 @@ visited-set cycle guard (cqd.py:134-145); per level —
                          t-norm (cqd.py:319-320) -> ``acc`` addition
   ∃-elimination      A1  max over the source beam per (edge, tail)
                          (cqd.py:327-338)
+                         (these three are ``kge.tails_grouped_max``,
+                         one group of k source rows per instance)
   conjunction        A2  sum across incoming edges per tail, in plan
                          order (cqd.py:344-355)
   beam prune         A7  top-k per variable by (score desc, t asc)
@@ -25,8 +27,8 @@ broadcast matrices — one stage with no exchange, window or checkpoint,
 and a result that does not depend on partitioning.  Source rows are
 scored ``kge.MAX_FLUX // N`` at a time, so an unconstrained leaf (N
 source rows per instance) never holds N² scores.  The kernel needs the
-whole entity matrix: a store above ``kge.ENT_BROADCAST_MAX_BYTES`` is
-rejected at construction.
+whole entity matrix, as every all-entity scorer does: a store above
+``kge.ENT_BROADCAST_MAX_BYTES`` is rejected at construction.
 
 The query graph is read from the compiled plan
 (``plans/exact.compile_plan``): per DNF clause, every atom forward and
@@ -54,7 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from knovexlite_spark.functions.kge import MAX_FLUX, BroadcastPair, EmbeddingStore, KGEModel
-from knovexlite_spark.functions.kge import _check_ids
+from knovexlite_spark.functions.kge import _check_ids, tails_grouped_max
 from knovexlite_spark.plans.exact import ClausePlan, ExactPlan, compile_plan
 
 
@@ -86,25 +88,6 @@ def beam_scores(
     clauses combine by max (fuzzy OR — SURVEY §3 step 7)."""
     n_ent, n_rel = ent.shape[0], rel.shape[0]
     q = len(bindings[plan.symbols[0]])
-    step = max(1, MAX_FLUX // max(n_ent, 1))
-
-    def edge_max(h: np.ndarray, acc: np.ndarray, r: np.ndarray, negated: bool) -> np.ndarray:
-        """Max over each instance's source rows (``h``, ``acc``: [Q, K])
-        of source score + edge score, for every tail: [Q, N]."""
-        k = h.shape[1]
-        h, acc = h.ravel(), acc.ravel()
-        best = np.full((q, n_ent), -np.inf)
-        for lo in range(0, q * k, step):
-            rows = np.arange(lo, min(lo + step, q * k))
-            qi = rows // k
-            s = model.score_all(ent[h[rows]], rel[r[qi]], ent).astype(np.float64)
-            if negated:
-                s = -s
-            s = s + acc[rows, None]
-            starts = np.flatnonzero(np.diff(qi, prepend=-1))
-            qs = qi[starts]
-            best[qs] = np.maximum(best[qs], np.maximum.reduceat(s, starts, axis=0))
-        return best
 
     def clause_scores(clause: ClausePlan) -> np.ndarray:
         visited: set[str] = set()
@@ -124,7 +107,10 @@ def beam_scores(
                 # the NULL check, then the inverse id's range
                 r = _check_ids(bindings[e.relation], n_rel, "r")
                 r = _check_ids(r ^ 1, n_rel, "r") if e.inverted else r
-                s = edge_max(h, acc, r, e.negated)
+                # each instance's k source rows, instance-major
+                k = h.shape[1]
+                s = tails_grouped_max(model, ent, rel, np.arange(0, q * k, k), h.ravel(),
+                                      np.repeat(r, k), acc.ravel(), np.full(q * k, e.negated))
                 total = s if total is None else total + s
             return total
 

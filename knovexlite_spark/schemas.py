@@ -39,14 +39,6 @@ QAA = T.StructType(
     ]
 )
 
-# Embedding tables (nn.Embedding equivalents, SURVEY.md §1.1)
-EMB = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("vec", T.ArrayType(T.FloatType()), False),
-    ]
-)
-
 # --- Relational testdata tables (FIXTURES.md §A) --------------------------
 
 TESTDATA_TABLES = (
@@ -61,6 +53,3 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
-
-# Small dimension tables that should always be broadcast in joins.
-BROADCAST_DIMS = ("region", "nation")

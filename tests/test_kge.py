@@ -12,11 +12,8 @@ from knovexlite_spark.functions.kge import (
     RotatE,
     SWTransE,
     TransE,
-    inverse_relation_ids,
     score_all_tails_grouped_max,
-    score_triples,
 )
-from knovexlite_spark.functions.tnorm import TNorm
 
 RNG = np.random.default_rng(7)
 
@@ -73,10 +70,6 @@ def test_swtranse_sorted_particles():
     assert np.isclose(m.score(h, r, t), 0.0)
 
 
-def test_inverse_relation_ids():
-    assert inverse_relation_ids(np.array([0, 1, 4, 7])).tolist() == [1, 0, 5, 6]
-
-
 @pytest.mark.parametrize(
     "model", [TransE(), DistMult(), ComplEx(), RotatE(), RESCAL(), SWTransE(num_particles=4)]
 )
@@ -109,18 +102,27 @@ def test_score_all_consistent_with_score(model):
             ), (type(model).__name__, b, j)
 
 
+def _row_scores(df, model, store):
+    """``score_all_tails_grouped_max`` on one-row groups (``query_id``
+    = row index): each row's score at its own ``t``."""
+    tails = dict(df.select("query_id", "t").collect())
+    out = score_all_tails_grouped_max(df.drop("t"), model, store)
+    return {r["query_id"]: r["score"] for r in out.collect() if r["t"] == tails[r["query_id"]]}
+
+
 def test_spark_score_triples_matches_numpy(spark):
+    """One-row groups split over several partitions: the all-tails
+    score at each row's t is ``model.score(h, r, t)``."""
     store = EmbeddingStore.xavier(num_entities=20, num_relations=6, ent_dim=8, seed=1)
     model = TransE()
-    rows = [(int(h), int(r), int(t)) for h, r, t in RNG.integers(0, [20, 6, 20], size=(30, 3))]
-    df = spark.createDataFrame(rows, schema="h long, r long, t long")
-    got = {
-        (x["h"], x["r"], x["t"]): x["score"]
-        for x in score_triples(df, model, store).collect()
-    }
-    for h, r, t in rows:
+    rows = [(q, int(h), int(r), int(t))
+            for q, (h, r, t) in enumerate(RNG.integers(0, [20, 6, 20], size=(30, 3)))]
+    df = spark.createDataFrame(rows, schema="query_id long, h long, r long, t long").repartition(3)
+    got = _row_scores(df, model, store)
+    assert len(got) == len(rows)
+    for q, h, r, t in rows:
         want = model.score(store.ent[h], store.rel[r], store.ent[t])
-        assert np.isclose(got[(h, r, t)], want, atol=1e-4)
+        assert np.isclose(got[q], want, atol=1e-4)
 
 
 def test_spark_score_all_tails_negation(spark):
@@ -160,25 +162,6 @@ def test_spark_rank_of_tails(spark):
         assert got[(q, t)] == int(np.sum(s > s[t]))
 
 
-def test_tnorm_grouped_product(spark):
-    df = spark.createDataFrame(
-        [(1, 0.5), (1, 0.4), (2, 0.9), (2, 0.0)], schema="g long, x double"
-    )
-    tn = TNorm.get("product")
-    got = {
-        r["g"]: r["p"]
-        for r in df.groupBy("g").agg(tn.conj_agg(F.col("x")).alias("p")).collect()
-    }
-    assert np.isclose(got[1], 0.2)
-    assert got[2] == 0.0
-    gd = TNorm.get("godel")
-    got = {
-        r["g"]: r["p"]
-        for r in df.groupBy("g").agg(gd.conj_agg(F.col("x")).alias("p")).collect()
-    }
-    assert np.isclose(got[1], 0.4) and got[2] == 0.0
-
-
 def test_conve_forward_shapes_and_determinism(spark):
     from knovexlite_spark.functions.kge import ConvE
 
@@ -209,46 +192,78 @@ def test_conve_spark_scoring(spark):
 
     store = EmbeddingStore.xavier(num_entities=10, num_relations=4, ent_dim=33, seed=9)
     m = ConvE(embedding_dim=33, seed=9)
-    df = spark.createDataFrame([(1, 0, 2), (3, 1, 4)], "h long, r long, t long")
-    got = {(r_["h"], r_["r"], r_["t"]): r_["score"] for r_ in score_triples(df, m, store).collect()}
-    for (h, r, t), s in got.items():
-        assert np.isclose(s, m.score(store.ent[h], store.rel[r], store.ent[t]), atol=1e-4)
+    rows = [(0, 1, 0, 2), (1, 3, 1, 4)]
+    df = spark.createDataFrame(rows, "query_id long, h long, r long, t long")
+    got = _row_scores(df, m, store)
+    assert len(got) == len(rows)
+    for q, h, r, t in rows:
+        assert np.isclose(got[q], m.score(store.ent[h], store.rel[r], store.ent[t]), atol=1e-4)
 
 
 def test_grouped_max_expansion_equals_unfused(spark):
     """Merged kernel partials == a NumPy max of ``model.score_all`` over
     each group's rows (negation and ``acc`` applied per row), however
-    the rows split across partitions."""
+    the rows split across partitions, for a one- and a two-column group
+    key (the latter is the ``(query_id, edge_id)`` frontier that
+    perfbench's ``kge.kernel`` span scores)."""
     store = EmbeddingStore.xavier(12, 4, ent_dim=6, seed=9)
     model = TransE()
-    rows = [(0, 1, 0, False, 0.0), (0, 2, 1, True, -0.5), (0, 3, 0, False, 1.5),
-            (1, 4, 2, False, 0.0), (1, 5, 3, True, 2.0)]
+    rows = [(0, 0, 1, 0, False, 0.0), (0, 1, 2, 1, True, -0.5), (0, 0, 3, 0, False, 1.5),
+            (1, 0, 4, 2, False, 0.0), (1, 0, 5, 3, True, 2.0)]
     df = spark.createDataFrame(
-        rows, schema="query_id long, h long, r long, neg boolean, acc double"
+        rows, schema="query_id long, edge_id long, h long, r long, neg boolean, acc double"
     ).repartition(3)
-    fused = (
-        score_all_tails_grouped_max(df, model, store, acc_col="acc",
-                                    neg_col="neg", group_cols=("query_id",))
-        .groupBy("query_id", "t").agg(F.max("score").alias("score"))
+    for gcols in (("query_id",), ("query_id", "edge_id")):
+        fused = (
+            score_all_tails_grouped_max(df, model, store, acc_col="acc",
+                                        neg_col="neg", group_cols=gcols)
+            .groupBy(*gcols, "t").agg(F.max("score").alias("score"))
+        )
+        got = {(*(r[c] for c in gcols), r["t"]): r["score"] for r in fused.collect()}
+        want = {}
+        for g in {row[: len(gcols)] for row in rows}:
+            mine = [row[2:] for row in rows if row[: len(gcols)] == g]
+            s = model.score_all(store.ent[[x[0] for x in mine]],
+                                store.rel[[x[1] for x in mine]], store.ent).astype(np.float64)
+            s = np.where(np.array([x[2] for x in mine])[:, None], -s, s)
+            s = s + np.array([x[3] for x in mine])[:, None]
+            want.update({(*g, t): v for t, v in enumerate(s.max(axis=0))})
+        assert got.keys() == want.keys()
+        assert all(np.isclose(got[k], want[k], atol=1e-9) for k in want)
+
+
+def test_grouped_max_null_group_key_raises(spark):
+    """A row whose group key is NULL raises instead of vanishing from
+    every group."""
+    store = EmbeddingStore.xavier(6, 3, ent_dim=4, seed=4)
+    df = spark.createDataFrame(
+        [(0, 1, 1), (None, 2, 0)], schema="query_id long, h long, r long"
     )
-    got = {(r["query_id"], r["t"]): r["score"] for r in fused.collect()}
-    want = {}
-    for q in {row[0] for row in rows}:
-        mine = [row for row in rows if row[0] == q]
-        s = model.score_all(store.ent[[x[1] for x in mine]],
-                            store.rel[[x[2] for x in mine]], store.ent).astype(np.float64)
-        s = np.where(np.array([x[3] for x in mine])[:, None], -s, s)
-        s = s + np.array([x[4] for x in mine])[:, None]
-        want.update({(q, t): v for t, v in enumerate(s.max(axis=0))})
-    assert got.keys() == want.keys()
-    assert all(np.isclose(got[k], want[k], atol=1e-9) for k in want)
+    with pytest.raises(Exception, match="ValueError: query_id is NULL"):
+        score_all_tails_grouped_max(df, TransE(), store).collect()
+
+
+def _assert_ceiling_raises_without_a_job(spark, make):
+    """``make()`` raises the reasoners' broadcast-ceiling ValueError
+    and starts no Spark job; returns the message."""
+    sc = spark.sparkContext
+    sc.setJobGroup("ceiling", "ceiling")
+    try:
+        with pytest.raises(ValueError, match="broadcast ceiling") as err:
+            make()
+        assert sc.statusTracker().getJobIdsForGroup("ceiling") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return str(err.value)
 
 
 def test_sharded_expansion_equals_grouped_max(spark, monkeypatch):
-    """Entity-axis sharding is a pure distribution change: with the
-    broadcast ceiling lowered so 13 entities split into 3 uneven shards,
-    the merged shard partials equal the one-shard result."""
+    """There is no entity-axis sharding: with the broadcast ceiling
+    lowered below the entity matrix, the operator raises the reasoners'
+    exact message, before any Spark job."""
     from knovexlite_spark.functions import kge
+    from knovexlite_spark.reasoner.cqd import CQDBeam
 
     store = EmbeddingStore.xavier(13, 4, ent_dim=8, rel_dim=4, seed=21)
     rows = [(0, 1, 0, False, 0.0), (0, 2, 1, True, -1.0),
@@ -256,38 +271,33 @@ def test_sharded_expansion_equals_grouped_max(spark, monkeypatch):
     df = spark.createDataFrame(
         rows, schema="query_id long, h long, r long, neg boolean, acc double"
     ).repartition(2)
-
-    def merged():
-        out = score_all_tails_grouped_max(df, RotatE(), store, acc_col="acc", neg_col="neg")
-        return {
-            (r["query_id"], r["t"]): r["score"]
-            for r in out.groupBy("query_id", "t").agg(F.max("score").alias("score")).collect()
-        }
-
-    assert list(kge._shard_offsets(store)) == [0]
-    a = merged()
-    # 13 x 8 float32 = 416 B; a 160 B ceiling gives ceil(416 / 160) = 3
+    # 13 x 8 float32 = 416 B
     monkeypatch.setattr(kge, "ENT_BROADCAST_MAX_BYTES", 160)
-    assert list(kge._shard_offsets(store)) == [0, 5, 10]
-    b = merged()
-    assert a.keys() == b.keys() and len(a) == 2 * 13
-    assert all(np.isclose(a[k], b[k], atol=1e-6) for k in a)
+    got = _assert_ceiling_raises_without_a_job(
+        spark, lambda: score_all_tails_grouped_max(df, RotatE(), store, acc_col="acc", neg_col="neg")
+    )
+    want = _assert_ceiling_raises_without_a_job(spark, lambda: CQDBeam(RotatE(), store))
+    assert got == want
 
 
 @pytest.mark.parametrize("sharded", [False, True], ids=["whole", "sharded"])
 @pytest.mark.parametrize("h,r", [(-1, 0), (6, 0), (0, -1), (0, 3)])
 def test_all_tails_out_of_range_ids_raise(spark, monkeypatch, sharded, h, r):
-    """An h or r id outside [0, N) raises in both modes instead of
-    wrapping around to the last row (``ent[-1]``)."""
+    """An h or r id outside [0, N) raises instead of wrapping around to
+    the last row (``ent[-1]``).  With the broadcast ceiling lowered
+    below the entity matrix ("sharded") the call itself raises the
+    ceiling ValueError."""
     from knovexlite_spark.functions import kge
 
     store = EmbeddingStore.xavier(6, 3, ent_dim=4, seed=4)
-    if sharded:
-        monkeypatch.setattr(kge, "ENT_BROADCAST_MAX_BYTES", 40)  # 96 B -> 3 shards
-        assert len(kge._shard_offsets(store)) == 3
     df = spark.createDataFrame(
         [(0, 1, 1), (0, h, r)], schema="query_id long, h long, r long"
     )
+    if sharded:
+        monkeypatch.setattr(kge, "ENT_BROADCAST_MAX_BYTES", 40)  # 96 B
+        with pytest.raises(ValueError, match="broadcast ceiling"):
+            score_all_tails_grouped_max(df, TransE(), store)
+        return
     with pytest.raises(Exception, match="ValueError: [hr] ids outside"):
         score_all_tails_grouped_max(df, TransE(), store).collect()
 
@@ -304,6 +314,20 @@ def test_store_dataframe_round_trip_is_exact(spark):
     for a, b in ((store.ent, back.ent), (store.rel, back.rel)):
         assert b.dtype == np.float32
         np.testing.assert_array_equal(a, b)
+
+
+@pytest.mark.parametrize(
+    "ids,match",
+    [([], "is empty"), ([0, 2], "ids are not 0..1"), ([0, 1, 1], "has duplicate ids")],
+    ids=["empty", "missing", "duplicate"],
+)
+def test_store_from_malformed_dataframes_raises(spark, ids, match):
+    """A checkpoint with no rows, a missing id or a repeated id is
+    rejected, not read as zero rows or the last write."""
+    good = spark.createDataFrame([(0, [1.0]), (1, [2.0])], "id long, vec array<float>")
+    bad = spark.createDataFrame([(i, [float(i)]) for i in ids], "id long, vec array<float>")
+    with pytest.raises(ValueError, match=f"entity checkpoint {match}"):
+        EmbeddingStore.from_dataframes(bad, good)
 
 
 def test_broadcast_pair_made_once_per_context():
